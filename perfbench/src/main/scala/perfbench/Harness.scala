@@ -192,7 +192,7 @@ object Stamp {
     val steal = if (total > 0) (ticksEnd._1 - ticksStart._1).toDouble / total else 0.0
     Map(
       "nproc" -> nproc,
-      "driver_heap_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
+      "jvm_heap_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
       "spark_version" -> spark.version,
       "spark_conf" -> conf.toMap,
       "load_avg_start" -> loadStart,

@@ -76,7 +76,7 @@ final class EtlOp(conf: graft.etl.EtlConfig, expected: EtlGen.Expected) extends 
 object Workloads {
   val Names: Seq[String] = Seq("etl_deliveries", "queries_light_sf01")
 
-  /** Driver queries whose full result takes well under half a second on
+  /** Engine queries whose full result takes well under half a second on
     * the benchmark tables at local[4], so per-query fixed cost (build,
     * Catalyst, job and stage scheduling) dominates. Drawn from the 133
     * queries (p, a, x and st families) whose warm full result took under
