@@ -32,14 +32,18 @@ object Metrics {
     "failed_ratio" -> "ratio", "trace.overhead_pct" -> "%")
 }
 
-/** One run of a workload: set-up three times, a cold pass in the last
-  * session, warm passes for at least the given seconds, output checks, then
-  * a stamp line and one JSON result line on stdout. */
+/** One run of a workload: set-up `SetUps` times, a cold pass in the last
+  * session, `WarmUp` unmeasured warm passes, then measured warm passes for
+  * the given seconds, output checks, then a stamp line and one JSON result
+  * line on stdout. */
 object Bench {
-  /** The warm passes (1-based) the warm figures are taken from: the first
-    * two warm passes are left to the JIT. A run makes at least this many
-    * warm passes, however short `--seconds` is. */
-  val Measured: Range = 3 to 5
+  /** Set-ups per run. The first pays for JVM class loading and is only
+    * stamped; `setup_s` is the median of the others. */
+  val SetUps = 7
+  /** Warm passes left to the JIT before the measured window starts. */
+  val WarmUp = 2
+  /** Measured warm passes a run makes at least, however short `--seconds`. */
+  val MinMeasured = 3
 
   private val TableNames = Seq("lineitem", "orders", "customer", "supplier", "part",
     "nation", "region", "documents", "embeddings")
@@ -76,7 +80,7 @@ object Bench {
     val rnd = new scala.util.Random(seed)
     def order(): Seq[Op] = rnd.shuffle(ops)
 
-    val (spark, setups) = BenchSession.setUp(nproc, work, times = 3)
+    val (spark, setups) = BenchSession.setUp(nproc, work, times = SetUps)
     val trace = new Trace(System.currentTimeMillis(), System.nanoTime())
     val runner = new Runner(spark, trace)
 
@@ -93,16 +97,18 @@ object Bench {
 
     val cold = runner.runPass(0, order(), traced)
     val warm = mutable.ArrayBuffer.empty[Pass]
-    val t0 = System.nanoTime()
-    def elapsed = (System.nanoTime() - t0) / 1e9
+    var windowStart = System.nanoTime()
+    def elapsed = (System.nanoTime() - windowStart) / 1e9
     // traced runs interleave untraced and traced passes in ABBA blocks, so
     // the tracing overhead is measured within the run and a warming trend
     // cancels out of it
     def more: Boolean =
       if (traced) elapsed < seconds || warm.size < 8 || warm.size % 4 != 0
-      else elapsed < seconds || warm.size < Measured.last
-    while (more)
+      else warm.size < WarmUp + MinMeasured || elapsed < seconds
+    while (more) {
+      if (!traced && warm.size == WarmUp) windowStart = System.nanoTime()
       warm += runner.runPass(warm.size + 1, order(), traced && Set(1, 2)(warm.size % 4))
+    }
     runner.close()
     val storage = spark.sparkContext.getRDDStorageInfo.filter(_.isCached)
     val lastEnd = trace.nowUs
@@ -129,18 +135,18 @@ object Bench {
       System.err.println(s"[perfbench] FAILED $op x${ss.size}: ${ss.head.error.get}")
     }
 
-    // The JIT keeps compiling through the first warm passes, and a run that
-    // happens to fit more passes would report a lower median; so the warm
-    // figures of an untraced run always come from the same passes. A traced
-    // run takes them from its untraced passes after the first.
+    // The JIT is still compiling through the first warm passes, so an
+    // untraced run's warm figures come from the passes of its measured
+    // window. A traced run takes them from its untraced passes after the
+    // first.
     val untracedWarm =
       if (traced) passes.drop(1).filterNot(_.traced).drop(1)
-      else passes.drop(1).zipWithIndex.collect { case (p, i) if Measured.contains(i + 1) => p }
+      else passes.drop(1 + WarmUp)
     val warmOk = untracedWarm.flatMap(_.samples).filter(_.ok).map(_.seconds)
     val warmPassS = Stats.median(untracedWarm.map(_.seconds))
     val metrics: Map[String, Double] =
       if (!traced) Map(
-        "setup_s" -> Stats.median(setups),
+        "setup_s" -> Stats.median(setups.drop(1)),
         "warm_pass_s" -> warmPassS,
         "op_p50_s" -> (if (warmOk.isEmpty) 0.0 else Stats.median(warmOk)))
       else {
@@ -226,9 +232,13 @@ final class Layers(runner: Runner, nproc: Int, passes: Seq[Pass],
     val materialize = passes.head.samples.filter(_.ok)
       .flatMap(s => warmByOp.get(s.op).map(s.seconds - _)).sum
     Map(
-      "build_s" -> ops.map(t => (t.sample.execUs - t.sample.startUs) / 1e6).sum / n,
+      // building a DataFrame analyzes it eagerly: that analysis counts in
+      // analyze_s, not build_s
+      "build_s" -> ops.map(t => (t.sample.execUs - t.sample.startUs) / 1e6 - t.buildAnalysisS)
+        .sum / n,
       "build_jobs" -> build.jobs / n,
-      "analyze_s" -> phase("analysis"), "optimize_s" -> phase("optimization"),
+      "analyze_s" -> (phase("analysis") + ops.map(_.buildAnalysisS).sum / n),
+      "optimize_s" -> phase("optimization"),
       "plan_s" -> phase("planning"),
       "plan.exchanges" -> plans.exchanges / n, "plan.codegen_stages" -> plans.codegenStages / n,
       "plan.topk_nodes" -> plans.topkNodes / n, "plan.cache_scans" -> plans.cacheScans / n,

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.QueryPlanningTracker.PhaseSummary
 import org.apache.spark.sql.execution.QueryExecution
 
 /** One timed execution of an operation. Times are microseconds since the
@@ -30,9 +31,14 @@ object ProcessCpu {
   def seconds: Double = os.getProcessCpuTime / 1e9
 }
 
-/** Per-operation tracing detail kept for the per-layer report. */
-final case class OpTrace(sample: Sample, writes: Seq[QueryExecution],
-                         startEpochMs: Long, endEpochMs: Long)
+/** Per-operation tracing detail kept for the per-layer report: the
+  * analysis that building the DataFrame ran, and the executions of its
+  * timed write. */
+final case class OpTrace(sample: Sample, buildAnalysis: Option[PhaseSummary],
+                         writes: Seq[QueryExecution], startEpochMs: Long, endEpochMs: Long) {
+  /** Seconds the built DataFrame's own analysis took, inside the build. */
+  def buildAnalysisS: Double = buildAnalysis.map(_.durationMs / 1e3).getOrElse(0.0)
+}
 
 /** Closed-loop runner: one client runs operations back to back. */
 final class Runner(spark: SparkSession, val trace: Trace) {
@@ -58,9 +64,10 @@ final class Runner(spark: SparkSession, val trace: Trace) {
       val startEpoch = System.currentTimeMillis()
       val start = trace.nowUs
       var exec = start
+      var buildAnalysis: Option[PhaseSummary] = None
       val err: Option[String] =
         try {
-          op.run(spark, {
+          buildAnalysis = op.run(spark, {
             case "build" => if (traced) sc.setJobGroup(s"$tag/build", tag)
             case _ =>
               exec = trace.nowUs
@@ -77,7 +84,7 @@ final class Runner(spark: SparkSession, val trace: Trace) {
       checkUs += trace.nowUs - end
       checkCpu += ProcessCpu.seconds - c0
       val s = Sample(index, op.name, start, exec, end, checked)
-      if (traced) opTraces += OpTrace(s, Nil, startEpoch, endEpoch)
+      if (traced) opTraces += OpTrace(s, buildAnalysis, Nil, startEpoch, endEpoch)
       s
     }
     val pass = Pass(index, traced, passStart, trace.nowUs, checkUs,
@@ -86,8 +93,9 @@ final class Runner(spark: SparkSession, val trace: Trace) {
     pass
   }
 
-  /** Spans of a traced pass: pass, operation, build, analyze / optimize /
-    * plan of each write, execute, and the stages under build or execute. */
+  /** Spans of a traced pass: pass, operation, build (with the built
+    * DataFrame's analysis under it), analyze / optimize / plan of each
+    * write, execute, and the stages under build or execute. */
   private def spanPass(pass: Pass): Unit = {
     val passId = trace.add(rootSpan, "pass", s"pass ${pass.index}", pass.startUs, pass.endUs)
     val execs = recorder.takeExecutions()
@@ -103,6 +111,9 @@ final class Runner(spark: SparkSession, val trace: Trace) {
       }
       if (s.execUs > s.startUs) {
         val b = trace.add(opId, "build", "build", s.startUs, s.execUs)
+        t.buildAnalysis.foreach(p =>
+          trace.add(b, "analyze", "analyze", trace.fromEpochMs(p.startTimeMs),
+            trace.fromEpochMs(p.endTimeMs)))
         recorder.stages(s"$tag/build").foreach(st =>
           trace.add(b, "stage", s"stage ${st.stageId}",
             trace.fromEpochMs(st.startMs), trace.fromEpochMs(st.endMs)))

@@ -107,7 +107,8 @@ object QueryData {
   }
 
   /** Time every SparkEntry query to its full result, cold then warm, one
-    * JSON line each: the evidence the workload lists are drawn from. */
+    * JSON line each, with the plan features the per-layer metrics count:
+    * the evidence the light list is drawn from (`LightList`). */
   def survey(work: Path, bench: Path, out: Path): Unit = {
     prep(work, bench)
     val spark = BenchSession.build(Main.nproc, work)
@@ -123,9 +124,14 @@ object QueryData {
         Right(((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
       } catch { case e: Throwable => Left(e.toString.take(200)) }
       val runs = Seq(time(), time(), time())
+      // untimed: the features of the plan the query's own result needs
+      val plan = try Some(Plans.counts(op.build(spark).queryExecution.executedPlan))
+        catch { case _: Throwable => None }
       val line = Json(Map("query" -> n,
         "build_s" -> runs.map(_.map(_._1).getOrElse(-1.0)),
         "exec_s" -> runs.map(_.map(_._2).getOrElse(-1.0)),
+        "topk_nodes" -> plan.map(_.topkNodes),
+        "interpreted_exprs" -> plan.map(_.interpretedExprs),
         "error" -> runs.collectFirst { case Left(e) => e }))
       w.write(line + "\n"); w.flush()
       System.err.println(line)

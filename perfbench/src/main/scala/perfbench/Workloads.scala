@@ -3,16 +3,19 @@ package perfbench
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker.PhaseSummary
 
 /** One operation of a workload, run by a single closed-loop client.
   *
   * `run` does the timed work and reports its phase boundaries through
   * `phase` ("build" before the DataFrame is built, "exec" before it is
-  * executed). `check` validates the output outside the timed region and
+  * executed). It returns the analysis phase that building the DataFrame
+  * ran eagerly, read from the DataFrame's own planning tracker before it
+  * is executed. `check` validates the output outside the timed region and
   * returns the mismatch, if any. */
 trait Op {
   def name: String
-  def run(spark: SparkSession, phase: String => Unit): Unit
+  def run(spark: SparkSession, phase: String => Unit): Option[PhaseSummary]
   def check(spark: SparkSession): Option[String] = None
 }
 
@@ -25,11 +28,15 @@ final class QueryOp(val name: String, dir: String) extends Op {
 
   def build(spark: SparkSession): DataFrame = fn(spark, dir)
 
-  def run(spark: SparkSession, phase: String => Unit): Unit = {
+  def run(spark: SparkSession, phase: String => Unit): Option[PhaseSummary] = {
     phase("build")
     val df = build(spark)
     phase("exec")
+    // read before the write: executing the DataFrame may measure the
+    // phase again on the same tracker, which widens its interval
+    val analysis = df.queryExecution.tracker.phases.get("analysis")
     QueryOp.writeNoop(df)
+    analysis
   }
 }
 
@@ -44,10 +51,11 @@ final class EtlOp(conf: graft.etl.EtlConfig, expected: EtlGen.Expected) extends 
   val name = "etl_deliveries"
   private var report: Option[graft.etl.EtlRunner.EtlReport] = None
 
-  def run(spark: SparkSession, phase: String => Unit): Unit = {
+  def run(spark: SparkSession, phase: String => Unit): Option[PhaseSummary] = {
     report = None
     phase("exec")
     report = Some(graft.etl.EtlRunner.run(spark, conf))
+    None
   }
 
   override def check(spark: SparkSession): Option[String] = report match {
@@ -76,16 +84,15 @@ final class EtlOp(conf: graft.etl.EtlConfig, expected: EtlGen.Expected) extends 
 object Workloads {
   val Names: Seq[String] = Seq("etl_deliveries", "queries_light_sf01")
 
-  /** Engine queries whose full result takes well under half a second on
-    * the benchmark tables at local[4], so per-query fixed cost (build,
-    * Catalyst, job and stage scheduling) dominates. Drawn from the 133
-    * queries (p, a, x and st families) whose warm full result took under
-    * 0.3 s in a survey of all 276 (`Main survey`), kept short enough that
-    * a run fits the benchmark's time budget. x11 runs the native
-    * `rollinghash`; x59 materializes a persisted frame on its first run. */
+  /** Engine queries whose full result takes under half a second on the
+    * benchmark tables at local[4], so per-query fixed cost (build, Catalyst,
+    * job and stage scheduling) dominates. Drawn by `LightList`'s rule from
+    * the committed survey of all 276 queries: one each from the p, a, st
+    * and x families, plus x65 for its `TopKPerKeyExec` and a51 for its
+    * interpreted (`CodegenFallback`) expressions. */
   val Light: Seq[String] = Seq(
-    "a04_semi_join", "a50_regexp_battery", "p13_notnull_dq",
-    "x11_fingerprint_rolling", "x59_cluster_split", "x81_record_linkage")
+    "p02_filter_dates", "a45_unpivot", "st24_stream_quantile", "x132_dedup_quality_bias",
+    "x65_stratified_take", "a51_explode_outer")
 
   def queries(workload: String): Seq[String] = workload match {
     case "queries_light_sf01" => Light
