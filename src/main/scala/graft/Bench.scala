@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at the configured scale
   * factor and prints ONE JSON line (driver contract).
   *
@@ -12,23 +10,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional file-split override for multi-file fixtures: the sf1
     // layout (16 small files/table) packs into 2-3 splits under the
     // 128m default, starving local[32] scans — BenchSf1 documents the
     // same 8m rationale. Unset = Spark default (driver sf0.1 behavior
     // unchanged).
     val maxPartitionBytes = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = maxPartitionBytes
-      .fold(builder0)(b => builder0.config("spark.sql.files.maxPartitionBytes", b))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+      .map("spark.sql.files.maxPartitionBytes" -> _)
+    val spark = LocalSession(LocalSession.cpus, maxPartitionBytes.toSeq: _*)
 
     def loadAvgNow(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean

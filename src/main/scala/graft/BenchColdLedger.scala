@@ -3,17 +3,16 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 
 /** Cold-minima ledger (automated): the round-over-round attribution
-  * artifact PERF.md used to assemble from hand-run TimeQuery sessions.
+  * artifact PERF.md used to assemble from hand-run per-query timings.
   *
   * Selection is mechanical so no mover can be forgotten: the bench
   * TOP-N residents of the current capture plus every query whose
   * in-bench min moved >20 % against the previous capture (above a small
   * absolute floor so 0.02→0.03 s jitter rows don't flood the ledger).
   * Each selected query runs `reps` CACHE-CLEARED reps (Caches.clearAll
-  * before each — the TimeQuery cold regime, so ledger rows stay
+  * before each — the cold regime, so ledger rows stay
   * comparable with the r11/r12 hand-run entries; note the bench
   * amortizes shared caches that these cold reps deliberately re-pay).
   *
@@ -26,7 +25,8 @@ import org.apache.spark.sql.SparkSession
   *   prevDetail default "-" (skip mover detection; top-N only)
   *   out        default /root/repo/BENCH_COLD_LEDGER.json
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_LEDGER_TOP (10),
+  *      SPARK_GRAFT_CPUS (default: the machine's cores),
+  *      SPARK_GRAFT_LEDGER_TOP (10),
   *      SPARK_GRAFT_LEDGER_REPS (3), the Bench quiet-gate knobs.
   */
 object BenchColdLedger {
@@ -41,7 +41,7 @@ object BenchColdLedger {
     val prevPath = args.lift(1).getOrElse("-")
     val outPath = args.lift(2).getOrElse("/root/repo/BENCH_COLD_LEDGER.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     val topN = sys.env.getOrElse("SPARK_GRAFT_LEDGER_TOP", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_LEDGER_REPS", "3").toInt
 
@@ -85,14 +85,7 @@ object BenchColdLedger {
     System.err.println(
       s"[ledger] movers(>20% after shift)=${movers.sorted.mkString(",")}")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = LocalSession(cpus)
 
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -107,7 +100,7 @@ object BenchColdLedger {
     }
     val loadStart = loadAvg()
 
-    // codegen/classloader warmup, same as Bench/TimeQuery
+    // codegen/classloader warmup, same as Bench
     SparkEntry.entry(spark).count()
 
     // Locale.ROOT: a comma-decimal default locale would emit 0,123 and
@@ -135,7 +128,7 @@ object BenchColdLedger {
       s""""$name":{"cold_reps":[${ts.map(fmt).mkString(",")}],"cold_min":${fmt(ts.min)},"inbench_cur":${cur.get(name).map(fmt).getOrElse("null")},"inbench_prev":$prevS,"why":[${why.map("\"" + _ + "\"").mkString(",")}]}"""
     }.mkString(",")
     val json =
-      s"""{"sf":"$sfDir","cpus":$cpus,"reps":$reps,"top_n":$topN,"move_frac":$MoveFrac,"move_floor_sec":$MoveFloorSec,"control_shift":${fmt(controlShift)},"cur_detail":"$curPath","prev_detail":"$prevPath","load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadEnd)},"load_wait_sec":$waited,"regime":"cache-cleared per rep (TimeQuery cold); bench rows amortize shared caches; mover ratios normalized by control_shift","queries":{$body}}"""
+      s"""{"sf":"$sfDir","cpus":$cpus,"reps":$reps,"top_n":$topN,"move_frac":$MoveFrac,"move_floor_sec":$MoveFloorSec,"control_shift":${fmt(controlShift)},"cur_detail":"$curPath","prev_detail":"$prevPath","load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadEnd)},"load_wait_sec":$waited,"regime":"cache-cleared per rep (cold); bench rows amortize shared caches; mover ratios normalized by control_shift","queries":{$body}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       json.getBytes("UTF-8"))
     println(json)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Heavy-tail benchmark at ~sf1.0 on the multi-file [[Fixtures]] layout:
@@ -16,16 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object BenchSf1 {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = LocalSession(LocalSession.cpus,
+      "spark.sql.files.maxPartitionBytes" -> "8m")
 
     val dir = Fixtures.ensureSf1(spark)
     // Cluster family runs x14 → x44 → x59: the shared session label

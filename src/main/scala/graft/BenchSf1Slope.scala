@@ -3,7 +3,6 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 
 /** The measured sf0.1 → sf1 scaling artifact (r15 verdict task 4): the
   * 100 TB story previously rested on plan pins (shuffle keys, state
@@ -29,7 +28,7 @@ object BenchSf1Slope {
     val detailPath = args.lift(0).getOrElse("/root/repo/BENCH_DETAIL.json")
     val outPath = args.lift(1).getOrElse("/root/repo/BENCH_SF1.json")
     val topN = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
 
     val sf01: Map[String, Double] = {
       val q = new ObjectMapper().readTree(
@@ -43,15 +42,7 @@ object BenchSf1Slope {
     System.err.println(s"[sf1-slope] top$topN: " +
       top.map(_._1).sorted.mkString(","))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = LocalSession(cpus, "spark.sql.files.maxPartitionBytes" -> "8m")
     val dir = Fixtures.ensureSf1(spark)
 
     def loadAvg(): Double =

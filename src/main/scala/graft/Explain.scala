@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: print the formatted physical plan of one query and time it.
-  * Usage: runMain graft.Explain <query_name> [sfDir]
+/** Dev tool: print the formatted physical plan of one query.
+  * Usage: runMain graft.Explain <query_name>|list [sfDir]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -13,27 +11,8 @@ object Explain {
       return
     }
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // dev knob for perf experiments (Bench/Verify keep Spark defaults)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.explain("formatted")
-    // Three timed passes (mirrors Bench): pass 1 shows cold/materialize
-    // cost, passes 2-3 the warm path over any persisted intermediates.
-    (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"[explain] $name pass$i: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    val spark = LocalSession(LocalSession.cpus)
+    SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     spark.stop()
   }
 }

@@ -98,14 +98,7 @@ object Fixtures {
   */
 object EnsureSf1 {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus)
     val dir = Fixtures.ensureSf1(spark,
       destDir = args.headOption.getOrElse(Fixtures.DefaultDir))
     println(s"[fixtures] sf1 ready at $dir")

@@ -486,7 +486,7 @@ object Sinks {
       // is COLUMN-PRUNED to the partition expression's inputs (a date
       // column — a sliver of the bytes), while persist() would
       // materialize the FULL-width tail into the cache. Measured
-      // (graft.SinkCompactBench, 100 k-row 4-batch tail at sf0.1,
+      // (100 k-row 4-batch tail at sf0.1,
       // steady state): persisted 1.48 s vs double-read 1.26 s — the
       // persist costs ~18% MORE at this shape and scales with row
       // width where the pruned re-read scales with one column. The

@@ -15,7 +15,7 @@ object Tables {
     *
     * `spark.read.parquet` re-resolves the datasource on every call —
     * file listing + footer schema inference — measured at 0.10–0.17 s
-    * per call on this host (FloorProfile). Every query entry builds its
+    * per call on this host. Every query entry builds its
     * inputs through here, so an un-memoized load taxes each of the 276
     * bench queries ~0.1–0.4 s of pure metadata work per RUN (builds
     * happen inside the timed region). A catalog table resolves once per
@@ -61,11 +61,13 @@ object Tables {
 
   /** Drop memoized relations under `dir` for `spark` — call before
     * rewriting a table directory mid-session (see the immutability
-    * note above). */
+    * note above). Matches whole path segments: invalidating `…/sf0.1`
+    * leaves `…/sf0.15` memoized. */
   def invalidate(spark: SparkSession, dir: String): Unit =
     catalogs.synchronized {
       val m = catalogs.get(spark)
-      if (m != null) m.keys.filter(_.startsWith(dir)).foreach(m.remove)
+      val prefix = dir.stripSuffix("/") + "/"
+      if (m != null) m.keys.filter(_.startsWith(prefix)).foreach(m.remove)
     }
   private[tables] def memo(spark: SparkSession, key: String)
                           (load: => DataFrame): DataFrame =

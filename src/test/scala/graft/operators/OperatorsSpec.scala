@@ -28,13 +28,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(!pairs.keys.exists { case (a, b) => b == 3L || a == 3L })
   }
 
-  test("MLlib minhash variant also surfaces the exact-dup pair") {
-    val pairs = Dedup.minhashLsh(docs, "text", "doc_id",
-        numHashTables = 4, maxJaccardDistance = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(pairs((0L, 1L)) === 0.0) // exact dup: jaccard distance 0
-  }
-
   test("native minhash: exact dups estimate 1.0; unrelated docs below threshold") {
     val pairs = Dedup.minhashNative(docs, "text", "doc_id",
         numHashes = 16, bands = 4, minEstimate = 0.1)
@@ -240,18 +233,6 @@ class OperatorsSpec extends SparkTestBase {
       .as[(Long, String)].collect().toMap
     assert(out(0L) === "en")
     assert(out(1L) === "de")
-  }
-
-  test("ivf topk probes cells and finds the clustered neighbor") {
-    val emb = Seq(
-      (0L, Array(1.0f, 0.0f)), (1L, Array(0.95f, 0.05f)), (2L, Array(0.9f, 0.1f)),
-      (3L, Array(0.0f, 1.0f)), (4L, Array(0.05f, 0.95f)), (5L, Array(0.1f, 0.9f)))
-      .toDF("vec_id", "embedding")
-    val out = Similarity.ivfTopK(emb, emb.filter($"vec_id" === 0), "embedding", "vec_id",
-        k = 2, cells = 2, nProbe = 1)
-      .collect().map(r => (r.getInt(1), r.getLong(2)))
-    // probing only the nearest cell still finds the same-cluster vectors
-    assert(out.toSeq === Seq((1, 1L), (2, 2L)))
   }
 
   test("frame sampling and resize stubs are deterministic byte plumbing") {

@@ -91,17 +91,6 @@ class RecallSpec extends SparkTestBase {
     assert(recall >= 0.99, f"x03 recall degraded: $recall%.3f")
   }
 
-  test("x06 LSH top-k: recall@10 vs brute-force truth measured and floored") {
-    val got = Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
-        "embedding", "vec_id", k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val recall = recallOf(got, exactTopK)
-    info(f"x06 lsh recall@10: $recall%.3f")
-    // measured 0.840: the corpus is near-random (max pairwise cosine
-    // 0.51), the hardest regime for LSH top-k
-    assert(recall >= 0.8, f"x06 recall degraded: $recall%.3f")
-  }
-
   test("x06 seeded-sign SRP top-k: recall@10 measured per table count and floored") {
     val recalls = Seq(4, 6, 8).map { tables =>
       val got = Similarity.srpTopK(emb, emb.filter(col("vec_id") < 5),
@@ -111,24 +100,11 @@ class RecallSpec extends SparkTestBase {
       info(f"x06 srp recall@10 ($tables tables): $recall%.3f")
       tables -> recall
     }.toMap
-    // the deterministic variant behind the x06 query: same bucket-join
-    // semantics as the MLlib path, seeded ±1 directions; more tables =
+    // the deterministic variant behind the x06 query: bucket-join
+    // semantics over seeded ±1 directions; more tables =
     // more collision chances = higher recall at proportional key cost
     assert(recalls(6) >= 0.8, f"x06 srp recall degraded: ${recalls(6)}%.3f")
     assert(recalls(8) >= recalls(4), "more tables must not lose recall")
-  }
-
-  test("x17 IVF top-k: recall@10 vs brute-force truth measured and floored") {
-    val got = Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
-        "embedding", "vec_id", k = 10, cells = 16, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val recall = recallOf(got, exactTopK)
-    info(f"x17 ivf recall@10 (nProbe 4/16): $recall%.3f")
-    // measured 0.620 (random-init codebook; was 0.460 with k-means||):
-    // on a near-random corpus KMeans cells barely correlate with top-k
-    // membership, so recall ≈ probed-cell coverage — this pins
-    // REGRESSION, not quality; nProbe is the recall dial
-    assert(recall >= 0.55, f"x17 recall degraded: $recall%.3f")
   }
 
   test("x17 sampled-codebook IVF: recall@10 measured per nProbe and floored") {
@@ -141,7 +117,7 @@ class RecallSpec extends SparkTestBase {
       nProbe -> recall
     }.toMap
     // measured 0.480 / 0.560 / 0.660 at nProbe 4/6/8: a sampled codebook
-    // has more uneven Voronoi cells than KMeans (0.620 at nProbe 4), so
+    // has more uneven Voronoi cells than a trained codebook, so
     // equal-nProbe coverage is lower and nProbe is the recall dial.
     // Floors pin regression, not quality (near-random corpus).
     assert(recalls(4) >= 0.45, f"x17 sampled recall degraded: ${recalls(4)}%.3f")

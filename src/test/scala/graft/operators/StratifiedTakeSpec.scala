@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.plans.GraftExtensions
 import graft.tables.{Tables => T}
 
 /** x65 stratifiedTake: the deterministic per-stratum eval-subset
@@ -42,7 +41,6 @@ class StratifiedTakeSpec extends SparkTestBase {
   }
 
   test("the rank window lowers to the bounded-heap TopKPerKeyExec") {
-    GraftExtensions.install(spark)
     val plan = Sampling.stratifiedTake(
         T.documents(spark, sf), col("doc_id"), "lang", 7)
       .queryExecution.executedPlan.toString

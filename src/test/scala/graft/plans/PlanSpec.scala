@@ -45,7 +45,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("merge rule: disjoint filter-union collapses the double scan") {
-    GraftExtensions.install(spark)
     val li = T.lineitem(spark, sf)
     val union = li.filter(upper(col("l_returnflag")).isin("A", "R"))
       .unionByName(li.filter(upper(col("l_returnflag")).isin("N")))
@@ -63,7 +62,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("merge rule: OVERLAPPING filter-union is left alone (bag semantics)") {
-    GraftExtensions.install(spark)
     val li = T.lineitem(spark, sf)
     val union = li.filter(upper(col("l_returnflag")).isin("A", "N"))
       .unionByName(li.filter(upper(col("l_returnflag")).isin("N")))
@@ -343,7 +341,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("merge rule: different sources are left alone") {
-    GraftExtensions.install(spark)
     val li = T.lineitem(spark, sf).select(col("l_returnflag").as("f"))
     val o = T.orders(spark, sf).select(col("o_orderstatus").as("f"))
     val union = li.filter(col("f") === "A").unionByName(o.filter(col("f") === "F"))

@@ -15,7 +15,6 @@ class Round10PlanSpec extends SparkTestBase {
 
   test("a62 item similarity: the per-part top-3 lowers to the " +
        "bounded-heap TopKPerKeyExec and no cartesian appears") {
-    GraftExtensions.install(spark)
     val s = planString(
       graft.queries.Analytics.queries("a62_item_similarity")(spark, sf))
     assert(s.contains("TopKPerKey"), s"rank window must lower:\n$s")

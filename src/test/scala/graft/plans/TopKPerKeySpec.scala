@@ -20,7 +20,6 @@ class TopKPerKeySpec extends SparkTestBase {
   }
 
   test("window+filter top-k rewrites to TopKPerKeyExec and matches the window result") {
-    GraftExtensions.install(spark)
     val df = rankQuery(3)
     assert(df.queryExecution.executedPlan.toString.contains("TopKPerKey"),
       df.queryExecution.executedPlan.toString)
@@ -36,7 +35,6 @@ class TopKPerKeySpec extends SparkTestBase {
   }
 
   test("rewrite leaves non-top-k windows and non-literal bounds alone") {
-    GraftExtensions.install(spark)
     // rank() instead of row_number: not rewritten
     val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice").desc)
     val notRewritten = T.orders(spark, sf)
@@ -52,7 +50,6 @@ class TopKPerKeySpec extends SparkTestBase {
   }
 
   test("GLOBAL (unpartitioned) row_number top-k is NOT rewritten") {
-    GraftExtensions.install(spark)
     // no partitionBy: the exec would return per-partition ranks — must
     // stay on Spark's window plan.
     val w = Window.orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -65,7 +62,6 @@ class TopKPerKeySpec extends SparkTestBase {
   }
 
   test("property: rewritten top-k equals the window plan on random data") {
-    GraftExtensions.install(spark)
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
@@ -91,7 +87,6 @@ class TopKPerKeySpec extends SparkTestBase {
   }
 
   test("rewritten a07 matches its recorded shape at larger k than group size") {
-    GraftExtensions.install(spark)
     // k larger than some groups: every row flows through with correct ranks
     val all = rankQuery(100000).collect()
     val expected = T.orders(spark, sf).count()

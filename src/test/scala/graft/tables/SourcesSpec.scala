@@ -155,6 +155,20 @@ class SourcesSpec extends SparkTestBase {
       "post-invalidate load must see the rewritten directory")
   }
 
+  test("catalog memo: invalidate(dir) keeps a sibling dir whose name " +
+       "extends dir's (sf0.1 vs sf0.15)") {
+    val root = Files.createTempDirectory("graft_memo_sib").toString
+    val (dir, sibling) = (s"$root/sf0.1", s"$root/sf0.15")
+    import spark.implicits._
+    Seq(dir, sibling).foreach { d =>
+      Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(s"$d/t.parquet")
+    }
+    val (a, s) = (Tables(spark, dir, "t"), Tables(spark, sibling, "t"))
+    Tables.invalidate(spark, dir)
+    assert(!(Tables(spark, dir, "t") eq a), "invalidate must drop dir's relation")
+    assert(Tables(spark, sibling, "t") eq s, "invalidate must keep the sibling's relation")
+  }
+
   test("catalog memo: stopped sessions are swept from the catalog map " +
        "on the next access (the value chain pins the weak key)") {
     // a private-field probe via reflection would overfit; instead pin
