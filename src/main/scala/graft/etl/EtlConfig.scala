@@ -2,6 +2,7 @@ package graft.etl
 
 import java.io.FileInputStream
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Config model for the delivery-ETL pipeline — the Scala analog of the
   * reference's YAML-driven job (semantics per /root/reference/config.yaml,
@@ -69,7 +70,9 @@ object EtlConfig {
   /** Load from our YAML layout (see src/test/resources for an example). */
   def load(path: String): EtlConfig = {
     val yaml = new org.yaml.snakeyaml.Yaml()
-    val root = yaml.load[java.util.Map[String, Object]](new FileInputStream(path))
+    val root = Using.resource(new FileInputStream(path)) { in =>
+      yaml.load[java.util.Map[String, Object]](in)
+    }
     fromMap(root.asScala.toMap)
   }
 

@@ -27,8 +27,11 @@ object Reader {
   * (reference write_data, /root/reference/data_process.py:315-330).
   */
 object Writer {
+  def outputPath(conf: OutputConf, environment: String): String =
+    Paths.get(conf.basePath, environment).toString
+
   def write(df: DataFrame, conf: OutputConf, environment: String): String = {
-    val path = Paths.get(conf.basePath, environment).toString
+    val path = outputPath(conf, environment)
     df.write.mode("overwrite").partitionBy(conf.partitionBy: _*).parquet(path)
     path
   }
@@ -167,7 +170,7 @@ object EtlRunner {
       }
       if (!outOk) EtlReport(inResults, outResults, None, rowsOut)
       else {
-        val path = Paths.get(conf.output.basePath, conf.run.environment).toString
+        val path = Writer.outputPath(conf.output, conf.run.environment)
         PipeLog.info("write_data", s"Escribiendo datos en: $path")
         try {
           Writer.write(transformed, conf.output, conf.run.environment)

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,9 +25,11 @@ object SchemaBuilder {
   * (/root/reference/data_process.py:235-265), composable with
   * DataFrame.transform. Semantic traps preserved deliberately:
   *
-  *  - delivery filter is a bag-semantics unionByName of per-indicator
-  *    branches, NOT a single disjunctive filter — overlapping condition
-  *    sets duplicate rows, as in the reference (:128-136);
+  *  - delivery filter is one pass that emits each row once per matching
+  *    indicator family, NOT a disjunctive filter: bag-equal to the
+  *    reference's unionByName of per-family branches (:128-136), so
+  *    overlapping value sets duplicate rows (PropertiesSpec checks it
+  *    against that union);
   *  - to_date under Spark 4 ANSI throws on unparseable input (the
   *    reference behavior on its own data; documented, not "fixed");
   *  - rename is a projection of aliases, order a final projection.
@@ -53,21 +55,31 @@ object Transforms {
     if (conf.countryValue.equalsIgnoreCase("TODOS")) df
     else df.filter(col(conf.countryColumn) === lit(conf.countryValue))
 
-  /** F3/U1 — per-indicator IN-list branches unioned by name (reference
-    * :128-136). Bag semantics: overlapping values duplicate rows.
+  /** 1 where upper(source) is one of the family's values, else 0 (also
+    * for a null source).
+    */
+  private def matches(i: IndicatorConf): Column =
+    when(upper(col(i.source)).isin(i.values: _*), lit(1)).otherwise(lit(0))
+
+  /** F3/U1 — per-indicator IN-list filter (reference :128-136), with the
+    * bag semantics of the reference's union of one branch per family: a
+    * row is kept once for every family it matches. One pass, because a
+    * union would scan the source and shuffle for the upstream dedup once
+    * per family: Catalyst pushes each branch's filter below the dedup
+    * aggregate, so the branches share no subtree.
     */
   def deliveryFilter(df: DataFrame, indicators: Seq[IndicatorConf]): DataFrame = {
     require(indicators.nonEmpty, "deliveryFilter requires at least one indicator family")
-    indicators.map(i => df.filter(upper(col(i.source)).isin(i.values: _*)))
-      .reduce(_ unionByName _)
+    val hits = indicators.map(matches).reduce(_ + _)
+    val copy = "__delivery_filter_copy"
+    df.filter(hits > 0)
+      .withColumn(copy, explode(array_repeat(lit(true), hits)))
+      .drop(copy)
   }
 
   /** E4 — 0/1 indicator columns (reference :150-159). */
   def indicatorCols(df: DataFrame, indicators: Seq[IndicatorConf]): DataFrame =
-    indicators.foldLeft(df) { (d, i) =>
-      d.withColumn(i.name,
-        when(upper(col(i.source)).isin(i.values: _*), lit(1)).otherwise(lit(0)))
-    }
+    indicators.foldLeft(df)((d, i) => d.withColumn(i.name, matches(i)))
 
   /** E10/E11 — typed null fills (reference :163-180). */
   def fillNulls(df: DataFrame, conf: FillConf): DataFrame =

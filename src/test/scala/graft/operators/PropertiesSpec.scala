@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -50,6 +51,36 @@ class PropertiesSpec extends SparkTestBase {
         assert(unioned === direct)
       }
     }
+  }
+
+  private val deliveryRowGen = Gen.listOfN(40, for {
+    tipo <- Gen.oneOf(Some("ZPRE"), Some("zpre"), Some("ZVE1"), Some("Z04"),
+      Some("z05"), Some("COBR"), None)
+    qty <- Gen.choose(1, 3)
+    unit <- Gen.oneOf("CS", "ST")
+  } yield (tipo, qty, unit))
+
+  private val familyGen = Gen.atLeastOne("ZPRE", "ZVE1", "Z04", "Z05", "COBR", "zpre")
+
+  test("delivery filter is bag-equal to the reference's per-family union") {
+    def bag(df: DataFrame): Map[Row, Int] =
+      df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    var overlapping = 0
+    (1 to 12).foreach { i =>
+      val df = deliveryRowGen.pureApply(Gen.Parameters.default, Seed(200L + i))
+        .toDF("tipo_entrega", "cantidad", "unidad")
+      val inds = Gen.listOfN(i % 3 + 1, familyGen)
+        .pureApply(Gen.Parameters.default, Seed(300L + i))
+        .zipWithIndex.map { case (vs, f) => IndicatorConf(s"f$f", "tipo_entrega", vs.toSeq) }
+      if (inds.combinations(2).exists(p => p(0).values.intersect(p(1).values).nonEmpty))
+        overlapping += 1
+      // the reference's formulation (data_process.py:128-136) as the oracle
+      val union = inds.map(i => df.filter(upper(col(i.source)).isin(i.values: _*)))
+        .reduce(_ unionByName _)
+      val got = Transforms.deliveryFilter(df, inds)
+      assert(bag(got) === bag(union), s"sample $i, families ${inds.map(_.values)}")
+    }
+    assert(overlapping > 0, "no sample had overlapping families")
   }
 
   test("unit standardization: quantities scale by factor exactly for CS rows") {
