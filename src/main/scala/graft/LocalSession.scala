@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one builder for a local engine session: `local[n]` with `n`
   * shuffle partitions, the session zone pinned to UTC, the UI off, WARN
-  * logging and the graft optimizer rules installed.
+  * logging and the graft plan extensions installed.
   *
   * `getOrCreate` semantics: a second call in the same JVM returns the
   * live session with the runtime confs re-applied, and the rule install

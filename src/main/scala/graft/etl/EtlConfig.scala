@@ -76,73 +76,83 @@ object EtlConfig {
     fromMap(root.asScala.toMap)
   }
 
-  // a present-but-empty YAML key loads as null — treat it as missing so
-  // the error names the key instead of NPE-ing downstream
-  private def get(m: Map[String, Object], key: String): Object =
-    m.get(key).filter(_ != null).getOrElse(fail(key))
+  private def invalid(key: String, problem: String): Nothing =
+    throw new IllegalArgumentException(s"config key $key $problem")
 
-  private def sec(m: Map[String, Object], key: String): Map[String, Object] =
-    get(m, key).asInstanceOf[java.util.Map[String, Object]].asScala.toMap
+  private def section(path: String, v: Object): Section = v match {
+    case jm: java.util.Map[_, _] =>
+      Section(path, jm.asScala.toMap.map { case (k, x) => k.toString -> x.asInstanceOf[Object] })
+    case other => invalid(path, s"must be a mapping, got: $other")
+  }
 
-  private def str(m: Map[String, Object], key: String): String =
-    get(m, key).toString
-
-  private def strs(m: Map[String, Object], key: String): Seq[String] =
-    get(m, key).asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.toString)
-
-  private def fail(key: String): Nothing =
-    throw new IllegalArgumentException(s"missing config key: $key")
+  /** One YAML mapping and its dotted path from the root, so that every
+    * error names the full key. A present-but-empty key loads as null and
+    * counts as missing; a value of the wrong shape, or a scalar that
+    * does not parse, fails as an IllegalArgumentException naming the key
+    * instead of a bare ClassCastException or NumberFormatException.
+    */
+  private final case class Section(path: String, m: Map[String, Object]) {
+    private def key(k: String): String = if (path.isEmpty) k else s"$path.$k"
+    def opt(k: String): Option[Object] = m.get(k).filter(_ != null)
+    def get(k: String): Object =
+      opt(k).getOrElse(throw new IllegalArgumentException(s"missing config key: ${key(k)}"))
+    def str(k: String): String = get(k).toString
+    def sec(k: String): Section = section(key(k), get(k))
+    def optSec(k: String): Option[Section] = opt(k).map(section(key(k), _))
+    def list(k: String): Seq[Object] = get(k) match {
+      case l: java.util.List[_] => l.asScala.toSeq.map(_.asInstanceOf[Object])
+      case other => invalid(key(k), s"must be a list, got: $other")
+    }
+    def strs(k: String): Seq[String] = list(k).map(_.toString)
+    def secs(k: String): Seq[Section] =
+      list(k).zipWithIndex.map { case (v, i) => section(s"${key(k)}[$i]", v) }
+    def strMap: Map[String, String] = m.keys.map(k => k -> str(k)).toMap
+    // toLong, toDouble and toBoolean all fail with an IllegalArgumentException
+    def parsed[A](k: String, what: String)(parse: String => A): A = {
+      val v = str(k)
+      try parse(v) catch { case _: IllegalArgumentException => invalid(key(k), s"must be $what, got: $v") }
+    }
+  }
 
   def fromMap(m: Map[String, Object]): EtlConfig = {
-    val run = sec(m, "run")
-    val in = sec(m, "input")
-    val q = sec(m, "quality")
-    val fill = sec(m, "fill")
-    val units = sec(m, "units")
-    val out = sec(m, "output")
-    val fields = get(in, "schema")
-      .asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-      .asScala.toSeq.map { f =>
-        val fm = f.asScala.toMap
-        FieldSpec(str(fm, "name"), str(fm, "type"),
-          fm.get("nullable").forall(_.toString.toBoolean))
-      }
-    val indicators = get(m, "indicators")
-      .asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-      .asScala.toSeq.map { i =>
-        val im = i.asScala.toMap
-        IndicatorConf(str(im, "name"), str(im, "source"),
-          strs(im, "values").distinct)
-      }
-    val renames = sec(m, "renames").map { case (k, v) => k -> v.toString }
+    val root = Section("", m)
+    val run = root.sec("run")
+    val in = root.sec("input")
+    val q = root.sec("quality")
+    val fill = root.sec("fill")
+    val units = root.sec("units")
+    val out = root.sec("output")
+    val fields = in.secs("schema").map { f =>
+      FieldSpec(f.str("name"), f.str("type"),
+        f.opt("nullable").forall(_ => f.parsed("nullable", "true or false")(_.toBoolean)))
+    }
+    val indicators = root.secs("indicators").map { i =>
+      IndicatorConf(i.str("name"), i.str("source"), i.strs("values").distinct)
+    }
+    if (indicators.isEmpty) invalid("indicators", "must list at least one indicator family")
     EtlConfig(
-      run = RunConf(str(run, "environment"), str(run, "start_date"), str(run, "end_date"),
-        str(run, "date_column"), str(run, "date_format"),
-        str(run, "country_column"), str(run, "country_value")),
-      input = InputConf(str(in, "path"), str(in, "format"),
-        in.get("options").map(_.asInstanceOf[java.util.Map[String, Object]]
-          .asScala.toMap.map { case (k, v) => k -> v.toString }).getOrElse(Map.empty),
-        fields, str(in, "lineage_column")),
-      quality = QualityConf(str(q, "min_rows").toLong,
-        strs(q, "required_columns"), strs(q, "not_null_columns")),
+      run = RunConf(run.str("environment"), run.str("start_date"), run.str("end_date"),
+        run.str("date_column"), run.str("date_format"),
+        run.str("country_column"), run.str("country_value")),
+      input = InputConf(in.str("path"), in.str("format"),
+        in.optSec("options").fold(Map.empty[String, String])(_.strMap),
+        fields, in.str("lineage_column")),
+      quality = QualityConf(q.parsed("min_rows", "a whole number")(_.toLong),
+        q.strs("required_columns"), q.strs("not_null_columns")),
       indicators = indicators,
-      fill = FillConf(str(fill, "text_value"), strs(fill, "text_columns"),
-        str(fill, "numeric_value").toDouble, strs(fill, "numeric_columns")),
-      units = UnitConf(str(units, "unit_column"), str(units, "quantity_column"),
-        str(units, "price_column"), str(units, "from_unit"),
-        str(units, "factor").toDouble, str(units, "standard_unit"),
-        str(units, "out_quantity"), str(units, "out_price"), str(units, "out_unit")),
-      renames = renames,
-      columnOrder = strs(m, "column_order"),
-      output = OutputConf(str(out, "base_path"), strs(out, "partition_by"),
-        str(out, "total_column")),
-      logging = m.get("logging").filter(_ != null).map { _ =>
-        val lg = sec(m, "logging")
-        // present-but-empty keys load as null — treat like absent keys
-        // (same convention as get() above) instead of NPE-ing on toString
-        LoggingConf(lg.get("log_file").filter(_ != null).map(_.toString),
-          lg.get("log_level").filter(_ != null)
-            .map(_.toString.toUpperCase).getOrElse("INFO"))
-      }.getOrElse(LoggingConf(None, "INFO")))
+      fill = FillConf(fill.str("text_value"), fill.strs("text_columns"),
+        fill.parsed("numeric_value", "a number")(_.toDouble), fill.strs("numeric_columns")),
+      units = UnitConf(units.str("unit_column"), units.str("quantity_column"),
+        units.str("price_column"), units.str("from_unit"),
+        units.parsed("factor", "a number")(_.toDouble), units.str("standard_unit"),
+        units.str("out_quantity"), units.str("out_price"), units.str("out_unit")),
+      renames = root.sec("renames").strMap,
+      columnOrder = root.strs("column_order"),
+      output = OutputConf(out.str("base_path"), out.strs("partition_by"),
+        out.str("total_column")),
+      logging = root.optSec("logging").fold(LoggingConf(None, "INFO")) { lg =>
+        LoggingConf(lg.opt("log_file").map(_.toString),
+          lg.opt("log_level").map(_.toString.toUpperCase).getOrElse("INFO"))
+      })
   }
 }

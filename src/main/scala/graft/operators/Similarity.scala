@@ -746,18 +746,6 @@ object Similarity {
           .otherwise(-col("m").getField("neg")).as("cosine"))
   }
 
-  /** The TRAINED codebook from [[kMeans]]'s fit — `(cell, centroid)`
-    * with double-array centroids. The downstream consumer is
-    * [[ivfTopKTrained]] (IVF probing over learned centroids); exposed
-    * separately so one fit can index many query batches.
-    */
-  def kMeansCodebook(emb: DataFrame, vecCol: String, idCol: String,
-                     k: Int = 8, iters: Int = 2): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    kMeansFitSeq(emb, vecCol, idCol, k, iters).toDF("cell", "centroid")
-  }
-
   /** The Lloyd fit alone, as driver state: `(cell, centroid)` rows in
     * cell order — the memoizable form (see [[kMeansAssignWith]]). See
     * [[kMeans]] for the algorithm and the 100 TB analysis.

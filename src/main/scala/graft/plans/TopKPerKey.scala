@@ -23,7 +23,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * The rewrite is transparent: users write the standard window+filter;
   * [[TopKViaWindowRewrite]] swaps in [[TopKPerKeyPlan]] when the window
   * computes exactly one row_number and the filter bounds it by a
-  * literal. Disable with spark.graft.topkRewrite=false.
+  * literal no larger than 10000. Disable with spark.graft.topkRewrite=false.
   */
 case class TopKPerKeyPlan(
     keys: Seq[Expression],
@@ -36,6 +36,9 @@ case class TopKPerKeyPlan(
 }
 
 object TopKViaWindowRewrite extends Rule[LogicalPlan] {
+
+  /** Largest k rewritten: the exec holds up to k rows per key on heap. */
+  private val MaxK = 10000
 
   private def boundOf(cond: Expression, rank: Attribute): Option[Int] = cond match {
     case LessThanOrEqual(a: Attribute, Literal(v: Int, _)) if a.semanticEquals(rank) => Some(v)
@@ -57,9 +60,8 @@ object TopKViaWindowRewrite extends Rule[LogicalPlan] {
             partitionSpec, orderSpec, child, _))
           if spec.frameSpecification.isInstanceOf[SpecifiedWindowFrame] &&
             partitionSpec.nonEmpty && orderSpec.nonEmpty =>
-        val maxK = conf.getConfString("spark.graft.topkRewrite.maxK", "10000").toInt
         boundOf(cond, alias.toAttribute) match {
-          case Some(k) if k > 0 && k <= maxK =>
+          case Some(k) if k > 0 && k <= MaxK =>
             TopKPerKeyPlan(partitionSpec, orderSpec, k, alias.toAttribute, child)
           case _ => f
         }
@@ -83,10 +85,9 @@ object TopKPerKeyStrategy extends SparkStrategy {
   * Memory: O(distinct keys per partition × k) copied rows on heap — the
   * same order as the operator's OUTPUT per partition, but held at once
   * rather than streamed like Spark's spillable window sort. The rewrite
-  * is bounded by spark.graft.topkRewrite.maxK (default 10000) and can
-  * be disabled entirely with spark.graft.topkRewrite=false; extreme
-  * key-cardinality-per-partition workloads should size partitions (AQE)
-  * or disable the rewrite.
+  * only fires for k <= 10000 and can be disabled entirely with
+  * spark.graft.topkRewrite=false; extreme key-cardinality-per-partition
+  * workloads should size partitions (AQE) or disable the rewrite.
   */
 case class TopKPerKeyExec(
     keys: Seq[Expression],

@@ -34,12 +34,33 @@ class EtlConfigSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val base = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(fixture)))
-    // blank out the renames mapping: "renames:" with no value loads as null
-    val patched = base.replaceAll("(?s)renames:.*?column_order", "renames:\ncolumn_order")
-    val m = new org.yaml.snakeyaml.Yaml()
-      .load[java.util.Map[String, Object]](patched).asScala.toMap
-    val e = intercept[IllegalArgumentException](EtlConfig.fromMap(m))
-    assert(e.getMessage.contains("renames"))
+    def section(name: String, next: String, body: String): String =
+      base.replaceAll(s"(?s)\n$name:.*?\n$next:", s"\n$name:$body\n$next:")
+    // (key the error must name, patched YAML)
+    val cases = Seq(
+      // "renames:" with no value loads as null
+      "renames" -> section("renames", "column_order", ""),
+      // a scalar where a section, a list or a list of sections belongs
+      "run" -> section("run", "input", " PROD"),
+      "column_order" -> section("column_order", "output", " fecha_proceso"),
+      "indicators" -> section("indicators", "fill", " ZPRE"),
+      "input.schema[0]" -> base.replace(
+        "- {name: pais, type: string, nullable: true}", "- pais"),
+      // an empty indicator list
+      "indicators" -> section("indicators", "fill", " []"),
+      // scalars that do not parse
+      "quality.min_rows" -> base.replace("min_rows: 10", "min_rows: abc"),
+      "units.factor" -> base.replace("factor: 20", "factor: twenty"),
+      "input.schema[0].nullable" -> base.replace(
+        "{name: pais, type: string, nullable: true}",
+        "{name: pais, type: string, nullable: maybe}"))
+    for ((key, patched) <- cases) {
+      assert(patched != base, s"patch for $key did not apply")
+      val m = new org.yaml.snakeyaml.Yaml()
+        .load[java.util.Map[String, Object]](patched).asScala.toMap
+      val e = intercept[IllegalArgumentException](EtlConfig.fromMap(m))
+      assert(e.getMessage.contains(key), s"$key: ${e.getMessage}")
+    }
   }
 
   test("indicator condition values are deduplicated at load") {

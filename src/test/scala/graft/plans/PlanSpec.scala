@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.tables.{Tables => T}
@@ -42,32 +41,6 @@ class PlanSpec extends SparkTestBase {
     val df = graft.queries.Analytics.queries("a01_agg_pricing")(spark, sf)
     val s = planString(df)
     assert(s.contains("partial_sum") || s.contains("partial_count"), s)
-  }
-
-  test("merge rule: disjoint filter-union collapses the double scan") {
-    val li = T.lineitem(spark, sf)
-    val union = li.filter(upper(col("l_returnflag")).isin("A", "R"))
-      .unionByName(li.filter(upper(col("l_returnflag")).isin("N")))
-    val optimized = union.queryExecution.optimizedPlan
-    assert(optimized.collect { case u: Union => u }.isEmpty,
-      s"union not merged:\n$optimized")
-
-    // semantics unchanged vs the rule disabled
-    val expected = {
-      spark.conf.set("spark.graft.mergeDisjointFilterUnions", "false")
-      try union.count() finally
-        spark.conf.set("spark.graft.mergeDisjointFilterUnions", "true")
-    }
-    assert(union.count() === expected)
-  }
-
-  test("merge rule: OVERLAPPING filter-union is left alone (bag semantics)") {
-    val li = T.lineitem(spark, sf)
-    val union = li.filter(upper(col("l_returnflag")).isin("A", "N"))
-      .unionByName(li.filter(upper(col("l_returnflag")).isin("N")))
-    val optimized = union.queryExecution.optimizedPlan
-    assert(optimized.collect { case u: Union => u }.nonEmpty,
-      "overlapping union must NOT merge — it would change duplicate counts")
   }
 
   test("bucketed tables join co-located: no shuffle exchange in the plan") {
@@ -338,12 +311,5 @@ class PlanSpec extends SparkTestBase {
     // partner join an equi-join on neg_id
     assert(s.contains("BroadcastNestedLoopJoin") || s.contains("BroadcastExchange"),
       s"expected broadcast count:\n$s")
-  }
-
-  test("merge rule: different sources are left alone") {
-    val li = T.lineitem(spark, sf).select(col("l_returnflag").as("f"))
-    val o = T.orders(spark, sf).select(col("o_orderstatus").as("f"))
-    val union = li.filter(col("f") === "A").unionByName(o.filter(col("f") === "F"))
-    assert(union.queryExecution.optimizedPlan.collect { case u: Union => u }.nonEmpty)
   }
 }
