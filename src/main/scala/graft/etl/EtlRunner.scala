@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -11,7 +11,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Lineage uses input_file_name(), which yields a URL-encoded URI — the
   * reference's committed output contains `%20` for spaces, so parity
-  * requires exactly this function (not `_metadata.file_name`).
+  * requires exactly this function (not `_metadata.file_name`). The
+  * basename is the text after the last `/`: `substring_index` finds it in
+  * one scan, where the equivalent `[^/]+$` regex retries from every
+  * position of the URI.
   */
 object Reader {
   def read(spark: SparkSession, conf: InputConf): DataFrame =
@@ -20,7 +23,10 @@ object Reader {
       .schema(SchemaBuilder.build(conf.fields))
       .load(conf.path)
       .withColumn(conf.lineageColumn,
-        regexp_extract(input_file_name(), "[^/]+$", 0))
+        basename(input_file_name()))
+
+  /** The text after the last `/` of `uri`; all of it when there is none. */
+  def basename(uri: Column): Column = substring_index(uri, "/", -1)
 }
 
 /** Static-overwrite partitioned parquet sink under base/<ENV>
@@ -80,13 +86,27 @@ object DataQuality {
     * validation.
     */
   final case class NotNull(column: String) extends Check {
-    def run(df: DataFrame): CheckResult = {
-      val n = df.filter(col(column).isNull).count()
+    def run(df: DataFrame): CheckResult = NotNull.result(column,
+      df.filter(col(column).isNull).count())
+  }
+
+  object NotNull {
+    private def result(column: String, n: Long): CheckResult =
       if (n == 0) CheckResult(s"not_null($column)", true,
         s"La columna '$column' no contiene valores nulos.", Some(n))
       else CheckResult(s"not_null($column)", false,
         s"La columna '$column' contiene $n valores nulos.", Some(n))
-    }
+
+    /** Every column's check, in one job when none has a null: the rows
+      * with a null in any column are counted once, and only a non-zero
+      * count runs the per-column counts that the failure messages need.
+      * Resolves names like [[NotNull.run]], pre-rename quirk included.
+      */
+    def runAll(df: DataFrame, columns: Seq[String]): Seq[CheckResult] =
+      if (columns.isEmpty) Nil
+      else if (df.filter(columns.map(c => col(c).isNull).reduce(_ || _)).count() == 0)
+        columns.map(result(_, 0L))
+      else columns.map(NotNull(_).run(df))
   }
 
   /** Run all checks; the gate passes only if every check passes. */
@@ -162,8 +182,8 @@ object EtlRunner {
       }
       PipeLog.info("rename_and_order_cols", "Renombrado y ordenamiento de columnas >>> OK")
 
-      val (outOk, outResults) =
-        gate(transformed, conf.quality.notNullColumns.map(NotNull))
+      val outResults = NotNull.runAll(transformed, conf.quality.notNullColumns)
+      val outOk = outResults.forall(_.passed)
       outResults.foreach { r =>
         if (r.passed) PipeLog.info("data_quality_output", s"[DQ OUTPUT APROBADA]: ${r.detail}")
         else PipeLog.error("data_quality_output", s"[DQ OUTPUT FALLIDA]: ${r.detail}")

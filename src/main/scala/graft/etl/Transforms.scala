@@ -32,12 +32,34 @@ object SchemaBuilder {
   *    against that union);
   *  - to_date under Spark 4 ANSI throws on unparseable input (the
   *    reference behavior on its own data; documented, not "fixed");
-  *  - rename is a projection of aliases, order a final projection.
+  *  - rename is a projection of aliases, order a final projection;
+  *  - the dedup shuffle is keyed for the write: it hashes rows on the raw
+  *    columns the output is partitioned by, which already clusters the
+  *    all-column dedup, so each output partition is held by one task and
+  *    the write makes one file per partition without a second exchange.
   */
 object Transforms {
 
-  /** A1 — all-column exact dedup (reference :242). */
-  def dedup(df: DataFrame): DataFrame = df.dropDuplicates()
+  /** A1 — all-column exact dedup (reference :242). With `keys` the one
+    * shuffle hashes on those columns only: a hash partitioning on a subset
+    * of the grouping columns satisfies the dedup aggregate, so no second
+    * exchange is planned, and rows equal on `keys` share a task.
+    */
+  def dedup(df: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    if (keys.isEmpty) df.dropDuplicates()
+    else df.repartition(keys.map(col): _*).dropDuplicates()
+
+  /** The raw columns behind the output's partition columns: each
+    * `partition_by` name mapped back through `renames`, kept if `df` has
+    * it. Where a raw value fixes its partition value, as for the reference
+    * config (the date parse is a pure function of the string), hashing on
+    * these puts each output partition in one task; otherwise the rows are
+    * the same, only spread over more files. Derived columns drop out.
+    */
+  def writeKeys(df: DataFrame, conf: EtlConfig): Seq[String] = {
+    val back = conf.renames.map(_.swap)
+    conf.output.partitionBy.map(p => back.getOrElse(p, p)).filter(df.columns.contains)
+  }
 
   /** E2 — parse the date column in place (reference :244). */
   def parseDate(df: DataFrame, conf: RunConf): DataFrame =
@@ -120,7 +142,7 @@ object Transforms {
   /** The full chain in reference order (:240-263). */
   def apply(df: DataFrame, conf: EtlConfig): DataFrame = {
     val chained = df
-      .transform(dedup)
+      .transform(dedup(_, writeKeys(df, conf)))
       .transform(parseDate(_, conf.run))
       .transform(dateFilter(_, conf.run))
       .transform(countryFilter(_, conf.run))

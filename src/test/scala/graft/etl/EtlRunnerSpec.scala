@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
@@ -97,5 +99,50 @@ class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
     assert(csvScans.size === 1, plan.toString)
     assert(shuffles.size === 1, plan.toString)
+    assert(hashKeys(shuffles.head) === Seq("fecha_proceso", "pais"), plan.toString)
+  }
+
+  /** The column names a shuffle hashes on; empty if it does not hash. */
+  private def hashKeys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+    case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+    case _ => Nil
+  }
+
+  /** Three output partitions of 60 distinct rows each, in three files. */
+  private def wideInput(): Path = {
+    val dir = Files.createTempDirectory("graft_etl_wide")
+    val parts = Seq(("GT", "20250513"), ("SV", "20250325"), ("HN", "20250314"))
+    for (f <- 0 until 3)
+      Files.write(dir.resolve(s"f$f.csv"), (header +: (for {
+        (pais, fecha) <- parts; i <- 0 until 20
+      } yield s"$pais,$fecha,${f * 20 + i},100,ZPRE,M$i,10.0,1.0,ST")).asJava)
+    dir
+  }
+
+  test("run writes one parquet file per output partition") {
+    val report = EtlRunner.run(spark, ReferenceJob.config(wideInput().toString, freshOut()))
+    assert(report.rowsOut === 180L)
+    val files = Files.walk(Path.of(report.written.get)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    val perDir = files.groupBy(_.getParent.getFileName.toString).map { case (d, fs) => d -> fs.size }
+    assert(perDir.keySet === Set("pais=GT", "pais=SV", "pais=HN"))
+    assert(perDir.values.forall(_ == 1), perDir)
+  }
+
+  test("partition columns map back through renames; derived ones fall back to the plain dedup") {
+    val base = ReferenceJob.config(input().toString, freshOut())
+    val raw = Reader.read(spark, base.input)
+    def rows(conf: EtlConfig) = Transforms(raw, conf).collect().map(_.toString).sorted.toSeq
+    val plain = rows(base.copy(output = base.output.copy(partitionBy = Nil)))
+    assert(plain.length === 6)
+    val renamed = base.copy(output = base.output.copy(partitionBy = Seq("unidad_origen")))
+    assert(Transforms.writeKeys(raw, renamed) === Seq("unidad"))
+    assert(rows(renamed) === plain)
+    val renamedPlan = Transforms(raw, renamed).queryExecution.executedPlan
+    assert(collect(renamedPlan) { case e: ShuffleExchangeExec => hashKeys(e) } === Seq(Seq("unidad")))
+    val derived = base.copy(output = base.output.copy(
+      partitionBy = Seq("unidad_estandar", "entrega_rutina")))
+    assert(Transforms.writeKeys(raw, derived).isEmpty)
+    assert(rows(derived) === plain)
   }
 }

@@ -1,7 +1,14 @@
 package graft.etl
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import graft.SparkTestBase
 
 /** Per-operator unit tests over the edge semantics pinned in SURVEY §7.5. */
@@ -109,6 +116,85 @@ class TransformsSpec extends SparkTestBase {
     // ResolveMissingReferences — parity with the reference DQ behavior.
     val res = DataQuality.NotNull("precio").run(renamed)
     assert(res.passed)
+  }
+
+  /** `f`'s result and the Spark jobs it started. The listener bus is
+    * async, so a marker job runs after `f`: once the listener has seen
+    * it, it has seen every job `f` started.
+    */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val a = try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds))) { assert(seen.contains(s"$group-marker")) }
+      (a, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("NotNull.runAll passes every column from one count when there are no nulls") {
+    val df = Seq((1.0, "m"), (2.0, "n")).toDF("precio", "material")
+    val (res, jobs) = withJobCount(DataQuality.NotNull.runAll(df, Seq("precio", "material")))
+    assert(jobs === withJobCount(DataQuality.NotNull("precio").run(df))._2)
+    assert(res === Seq("precio", "material").map(DataQuality.NotNull(_).run(df)))
+    assert(res.map(_.detail) === Seq(
+      "La columna 'precio' no contiene valores nulos.",
+      "La columna 'material' no contiene valores nulos."))
+    assert(res.forall(r => r.passed && r.measured.contains(0L)))
+    assert(DataQuality.NotNull.runAll(df, Nil).isEmpty)
+  }
+
+  test("NotNull.runAll keeps the exact per-column counts when a column has nulls") {
+    val df = Seq[(Option[Double], String, String)](
+      (None, "m", "a"), (None, null, "b"), (Some(1.0), null, "c"), (Some(2.0), null, "d"))
+      .toDF("precio", "material", "ruta")
+    val res = DataQuality.NotNull.runAll(df, Seq("precio", "material", "ruta"))
+    assert(res === Seq(
+      DataQuality.CheckResult("not_null(precio)", false,
+        "La columna 'precio' contiene 2 valores nulos.", Some(2L)),
+      DataQuality.CheckResult("not_null(material)", false,
+        "La columna 'material' contiene 3 valores nulos.", Some(3L)),
+      DataQuality.CheckResult("not_null(ruta)", true,
+        "La columna 'ruta' no contiene valores nulos.", Some(0L))))
+  }
+
+  test("NotNull.runAll resolves a pre-rename column post-rename (V3 quirk)") {
+    def renamed(rows: (Option[Double], String)*) = Transforms.renameAndOrder(
+      rows.toDF("precio", "material"),
+      Map("precio" -> "precio_origen"), Seq("precio_origen", "material"))
+    val ok = DataQuality.NotNull.runAll(renamed((Some(1.0), "m")), Seq("precio", "material"))
+    assert(ok.forall(_.passed))
+    val bad = DataQuality.NotNull.runAll(
+      renamed((None, "m"), (Some(1.0), "n")), Seq("precio", "material"))
+    assert(bad.map(r => (r.passed, r.measured)) === Seq((false, Some(1L)), (true, Some(0L))))
+  }
+
+  test("lineage basename equals the [^/]+$ regex on edge-case URIs") {
+    val uris = Seq(
+      "file:///data/raw/entregas%20mayo.csv",
+      "file:///data/raw/",
+      "entregas.csv",
+      "",
+      "file:///data/raw/a\nb.csv",
+      "file:///data/raw/a.csv\n",
+      "file:///data/ra\nw/a.csv",
+      null).toDF("uri")
+    val got = uris.select(
+      regexp_extract(col("uri"), "[^/]+$", 0), Reader.basename(col("uri")))
+      .as[(String, String)].collect()
+    assert(got.length === 8)
+    got.foreach { case (regex, basename) => assert(basename === regex) }
+    assert(got.take(4).map(_._2).toSeq === Seq("entregas%20mayo.csv", "", "entregas.csv", ""))
   }
 
   test("schema builder maps the 3 supported types and rejects others") {
