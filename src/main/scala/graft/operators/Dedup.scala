@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
@@ -24,21 +25,6 @@ import graft.functions.GraftFunctions
   *    [[verifyJaccard]] from banded candidates instead.
   */
 object Dedup {
-
-  /** Session memo behind [[dupFraction]], keyed on (session, canonical
-    * input plan, text column): the probe is one partial-agg job, but the
-    * collapse family runs it per operator per action, and its answer for
-    * a given input cannot change within a session any more than
-    * CacheManager's canonical-plan-matched caches can — the same
-    * staleness contract. Entries die with the driver; they hold only a
-    * canonical plan and a double.
-    */
-  private val dupProbeMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        String),
-      java.lang.Double]
 
   /** Collapse-routing threshold on [[dupFraction]]: the dup collapse
     * pays a FIXED keying/expansion cost (~0.6-0.7 s per operator at
@@ -67,20 +53,27 @@ object Dedup {
     * subtrees cannot. Routing never affects results: both paths are
     * output-equal (pinned on adversarial corpora in OperatorsSpec).
     */
-  private[operators] def dupFraction(docs: DataFrame, textCol: String): Double = {
-    val key = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized, textCol)
-    val cached = dupProbeMemo.get(key)
-    if (cached != null) cached.doubleValue()
-    else {
+  private[graft] def dupFraction(docs: DataFrame, textCol: String): Double = {
+    // [[graft.Caches]] memo keyed on the canonical input plan and the
+    // directories it reads: the probe is one partial-agg job, but the
+    // collapse family runs it per operator per action, and its answer for
+    // a given input cannot change within a session any more than
+    // CacheManager's canonical-plan-matched caches can — the same
+    // staleness contract, and the same release (Tables.invalidate).
+    val plan = docs.queryExecution.analyzed
+    val dirs = plan.collectLeaves().flatMap {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    graft.Caches.memo(docs.sparkSession, dirs, ("dupFraction", plan.canonicalized, textCol)) {
       val r = docs.agg(
         count(lit(1)).as("n"),
         count_distinct(sha2(col(textCol), 256)).as("nd")).head()
-      val v =
-        if (r.getLong(0) == 0L) 0.0
-        else (r.getLong(0) - r.getLong(1)).toDouble / r.getLong(0)
-      dupProbeMemo.putIfAbsent(key, java.lang.Double.valueOf(v))
-      v
+      if (r.getLong(0) == 0L) 0.0
+      else (r.getLong(0) - r.getLong(1)).toDouble / r.getLong(0)
     }
   }
 
@@ -589,34 +582,24 @@ object Dedup {
     */
   def minhashNative(docs: DataFrame, textCol: String, idCol: String,
                     n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                    minEstimate: Double = 0.2, seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = graft.Caches.persistOnce(
-      minhashSignatures(docs, textCol, idCol, n, numHashes, seed))
-    val banded = sigs.select(col("doc_id"), explode(
-      array((0 until bands).map(b =>
-        struct(lit(b).as("band"), hash(slice(col("sig"), b * r + 1, r)).as("bucket"))): _*))
-      .as("bk"))
-    // shuffle_hash: the banded table is bands× its parent but Catalyst
-    // estimates Generate at ~the parent's size, so the planner would
-    // BROADCAST a corpus-sized side of this self-join (same trap as
-    // containmentPairs). Pin the documented plan: one shuffle on
-    // (band, bucket).
-    val cand = banded.select(col("doc_id").as("d1"), col("bk"))
-      .hint("shuffle_hash")
-      .join(banded.select(col("doc_id").as("d2"), col("bk")), Seq("bk"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
+                    minEstimate: Double = 0.2, seed: Long = 42L): DataFrame =
+    estimatePairs(minhashBandPairs(docs, textCol, idCol, n, numHashes, bands, seed),
+      graft.Caches.persistOnce(minhashSignatures(docs, textCol, idCol, n, numHashes, seed)),
+      numHashes, minEstimate)
+
+  /** The estimate step of the banded families: each candidate pair
+    * joins its two `k`-lane signatures and keeps the pair when the
+    * fraction of agreeing lanes reaches `minEstimate`.
+    */
+  private def estimatePairs(cand: DataFrame, sigs: DataFrame,
+                            k: Int, minEstimate: Double): DataFrame =
     cand
       .join(sigs.select(col("doc_id").as("d1"), col("sig").as("sig1")), "d1")
       .join(sigs.select(col("doc_id").as("d2"), col("sig").as("sig2")), "d2")
       .withColumn("jaccard_est",
-        lanesAgree(col("sig1"), col("sig2"), numHashes)
-          .cast("double") / numHashes)
+        lanesAgree(col("sig1"), col("sig2"), k).cast("double") / k)
       .filter(col("jaccard_est") >= minEstimate)
       .select("d1", "d2", "jaccard_est")
-  }
 
   /** Count of agreeing signature lanes — k codegen'd element
     * comparisons (r16; the x127 "no HOF" discipline applied to every
@@ -688,20 +671,13 @@ object Dedup {
           (0 until r).map(i => col("sig")(b * r + i).as(s"c$i"))): _*)): _*))
       .as("bk"))
     // shuffle_hash: same Generate-estimate broadcast trap as
-    // minhashNative — pin the (band, components)-keyed shuffle.
+    // minhashBandPairs — pin the (band, components)-keyed shuffle.
     val cand = banded.select(col("doc_id").as("d1"), col("bk"))
       .hint("shuffle_hash")
       .join(banded.select(col("doc_id").as("d2"), col("bk")), Seq("bk"))
       .filter(col("d1") < col("d2"))
       .select("d1", "d2").distinct()
-    cand
-      .join(sigs.select(col("doc_id").as("d1"), col("sig").as("sig1")), "d1")
-      .join(sigs.select(col("doc_id").as("d2"), col("sig").as("sig2")), "d2")
-      .withColumn("jaccard_est",
-        lanesAgree(col("sig1"), col("sig2"), k)
-          .cast("double") / k)
-      .filter(col("jaccard_est") >= minEstimate)
-      .select("d1", "d2", "jaccard_est")
+    estimatePairs(cand, sigs, k, minEstimate)
   }
 
   /** SimHash fingerprints + banded bucket candidates: documents sharing
@@ -1089,8 +1065,8 @@ object Dedup {
                        seed: Long = 42L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // persisted (the minhashNative choice): both sides of the band
-    // self-join read the signatures. Round-13 adjudication: measured
+    // persisted: both sides of the band self-join read the signatures
+    // (and minhashNative's estimate step reads them again). Round-13 adjudication: measured
     // cold x21 is UNCHANGED by this pin (ReuseExchange already
     // deduplicated the identical self-join subtrees), so the persist
     // is a structural guarantee — single build regardless of planner
@@ -1102,9 +1078,11 @@ object Dedup {
       array((0 until bands).map(b =>
         struct(lit(b).as("band"), hash(slice(col("sig"), b * r + 1, r)).as("bucket"))): _*))
       .as("bk"))
-    // shuffle_hash: pin the (band, bucket)-keyed shuffle — Generate's
-    // size estimate would let the planner broadcast the corpus-sized
-    // banded table (see minhashNative).
+    // shuffle_hash: the banded table is bands× its parent but Catalyst
+    // estimates Generate at ~the parent's size, so the planner would
+    // BROADCAST a corpus-sized side of this self-join (same trap as
+    // containmentPairs). Pin the documented plan: one shuffle on
+    // (band, bucket).
     banded.select(col("doc_id").as("d1"), col("bk"))
       .hint("shuffle_hash")
       .join(banded.select(col("doc_id").as("d2"), col("bk")), Seq("bk"))

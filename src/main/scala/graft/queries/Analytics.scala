@@ -55,39 +55,20 @@ object Analytics {
     * subtree (converging only via canonical-plan cache matching — the
     * exact silent-split risk the r8 verdict flagged for x20/x84).
     * Object identity instead, the [[Extensions.bandedPairs]] pattern:
-    * one build + persist per (session, dir), pinned in Round10PlanSpec;
-    * release via [[releaseRepeatEdges]]. Built OUTSIDE the map lock
-    * (get + putIfAbsent; racing builders converge on the winner).
+    * one build + persist per (session, dir) in the [[graft.Caches]]
+    * memo, pinned in Round10PlanSpec.
     */
-  private val repeatEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private[graft] def repeatEdges(s: SparkSession, dir: String): DataFrame = {
-    val key = (s, dir)
-    val cached = repeatEdgeCache.get(key)
-    if (cached != null) cached
-    else {
+  private[graft] def repeatEdges(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo(s, Seq(dir), "repeatEdges") {
       val baskets = graft.Caches.persistOnce(fencedBaskets(T.lineitem(s, dir)))
-      val built = graft.Caches.persistOnce(baskets
+      graft.Caches.persistOnce(baskets
         .select(col("parts"), posexplode(col("parts")).as(Seq("i", "p1")))
         .select(col("p1"),
           explode(slice(col("parts"), col("i") + lit(2), size(col("parts"))))
             .as("p2"))
         .groupBy("p1", "p2").agg(count(lit(1)).as("n_ab"))
         .filter(col("n_ab") >= 2))
-      val prev = repeatEdgeCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
-
-  /** Drop the memoized repeat-edge frames (all dirs of `s`), unpersisting each. */
-  def releaseRepeatEdges(s: SparkSession): Unit = {
-    val it = repeatEdgeCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) { e.getValue.unpersist(); it.remove() }
-    }
-  }
 
   val queries: Map[String, Q] = Map(
     // TPC-H Q1 pricing summary: partial-aggregatable group-by over the
@@ -992,6 +973,11 @@ object Analytics {
       // the directed-edge frame, and AQE does not reuse the two arms'
       // identical exchanges (measured: both map sides ran per run).
       // Part-cardinality bounded — dimension-sized pinned bytes.
+      // Inherited fence: fencedBaskets raise_error()s on any order with
+      // more than MaxBasketSize distinct parts, so a62 fails on such
+      // input although support itself needs no fence — the price of
+      // sharing a56's cached baskets (repeatEdges reads the same
+      // fenced frame).
       val sup = graft.Caches.persistOnce(
         graft.Caches.persistOnce(fencedBaskets(T.lineitem(s, dir)))
           .select(explode(col("parts")).as("pk"))

@@ -46,36 +46,16 @@ object Extensions {
     * runs eager actions (the edge count / driver collect), so canonical-
     * plan cache matching alone cannot deduplicate it across queries: the
     * chain must be built ONCE and the resulting frame shared. Same
-    * lesson as x21's "mine pairs once", applied across queries.
-    *
-    * Ownership ([[graft.Caches]] policy): the table lives for the
-    * session — entries are retained until [[releaseClusterLabels]] is
-    * called for that session (long-lived multi-session hosts must call
-    * it on session teardown or the map pins the session). The chain is
-    * built OUTSIDE any map lock (get + putIfAbsent, not
-    * computeIfAbsent): construction runs eager Spark actions taking
-    * seconds, and holding the bin lock through them would block
-    * concurrent first-use of other dirs hashing to the same bin. Two
-    * threads racing the same key both build, but `persistOnce`
-    * memoizes by canonical plan, so they converge on the SAME cached
-    * frame — the loser's handle is the winner's frame, nothing leaks.
+    * lesson as x21's "mine pairs once", applied across queries. Kept in
+    * the [[graft.Caches]] memo, which owns its lifecycle.
     */
-  private val clusterLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val key = (s, dir)
-    val cached = clusterLabelCache.get(key)
-    if (cached != null) cached
-    else {
+  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo(s, Seq(dir), "clusterLabels") {
       val docs = T.documents(s, dir)
       val pairs = bandedPairs(s, dir).select("d1", "d2")
-      val built = graft.Caches.persistOnce(
+      graft.Caches.persistOnce(
         Dedup.connectedComponentsKeepOne(docs, "doc_id", pairs))
-      val prev = clusterLabelCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   /** Session-memoized corpus banded-jaccard pair frame — the ONE
     * parameter site for the (n=3, threshold=0.2, 16 hashes, 8 bands)
@@ -85,66 +65,28 @@ object Extensions {
     * textually identical call sites — load-bearing for the bench but
     * unpinned: a parameter drift at either site would silently split
     * the cache and ~5× the x84 row (r8 verdict "what's wrong" item 4).
-    * Memoizing the FRAME (persistOnce + this map) makes the sharing an
-    * identity, asserted in SharedSubtreeSpec. Release via
-    * [[releaseBandedPairs]]; same get + putIfAbsent-outside-the-lock
-    * discipline as [[clusterLabels]].
+    * Memoizing the FRAME (persistOnce + the [[graft.Caches]] memo) makes
+    * the sharing an identity, asserted in SharedSubtreeSpec.
     */
-  private val bandedPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private[graft] def bandedPairs(s: SparkSession, dir: String): DataFrame = {
-    val key = (s, dir)
-    val cached = bandedPairCache.get(key)
-    if (cached != null) cached
-    else {
-      val built = graft.Caches.persistOnce(
+  private[graft] def bandedPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo(s, Seq(dir), "bandedPairs") {
+      graft.Caches.persistOnce(
         Dedup.bandedJaccardMinhash(T.documents(s, dir), "text", "doc_id",
           n = 3, threshold = 0.2, numHashes = 16, bands = 8))
-      val prev = bandedPairCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
-
-  /** Drop the memoized banded-pair frames (all dirs of `s`), unpersisting each. */
-  def releaseBandedPairs(s: SparkSession): Unit = {
-    val it = bandedPairCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) { e.getValue.unpersist(); it.remove() }
-    }
-  }
 
   /** Session-memoized learned BPE merge table — the x67b induction loop
     * runs `steps` eager driver elections, so (like [[clusterLabels]])
     * plan-level caching cannot deduplicate a re-learn across queries:
     * x67b (report the table) and x70 (encode with it) share ONE learn
-    * per (session, dir, steps). The value is `steps` driver-side rows —
-    * no persisted frames, so release is a plain map drop. Same locking
-    * discipline as clusterLabels: built OUTSIDE any map lock (get +
-    * putIfAbsent); two racing builders converge on the winner's value.
+    * per (session, dir, steps). The value is `steps` driver-side rows,
+    * no persisted frame.
     */
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int),
-      Seq[(Int, String, String, Long)]]
-
   private[graft] def bpeMerges(s: SparkSession, dir: String,
-                               steps: Int): Seq[(Int, String, String, Long)] = {
-    val key = (s, dir, steps)
-    val cached = bpeMergeCache.get(key)
-    if (cached != null) cached
-    else {
-      val built = TextAnalysis.bpeMergeSeq(T.documents(s, dir), "text", steps)
-      val prev = bpeMergeCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+                               steps: Int): Seq[(Int, String, String, Long)] =
+    graft.Caches.memo(s, Seq(dir), ("bpeMerges", steps)) {
+      TextAnalysis.bpeMergeSeq(T.documents(s, dir), "text", steps)
     }
-  }
-
-  /** Drop the memoized merge tables for `s` (driver rows only). */
-  def releaseBpeMerges(s: SparkSession): Unit = {
-    val it = bpeMergeCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq s) it.remove()
-  }
 
   /** Session-memoized k-means codebook (the [[bpeMerges]] pattern for
     * the embedding side): x71's labeling and x72's trained IVF index
@@ -153,37 +95,11 @@ object Extensions {
     * (k·dim doubles of driver state) is learned once per
     * (session, dir, k, iters) and both queries consume it.
     */
-  private val kmeansFitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Int),
-      Seq[(Long, Seq[Double])]]
-
   private[graft] def kmeansFit(s: SparkSession, dir: String,
-                               k: Int, iters: Int): Seq[(Long, Seq[Double])] = {
-    val key = (s, dir, k, iters)
-    val cached = kmeansFitCache.get(key)
-    if (cached != null) cached
-    else {
-      val built = Similarity.kMeansFitSeq(T.embeddings(s, dir),
-        "embedding", "vec_id", k, iters)
-      val prev = kmeansFitCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+                               k: Int, iters: Int): Seq[(Long, Seq[Double])] =
+    graft.Caches.memo(s, Seq(dir), ("kmeansFit", k, iters)) {
+      Similarity.kMeansFitSeq(T.embeddings(s, dir), "embedding", "vec_id", k, iters)
     }
-  }
-
-  /** Drop the memoized k-means fits for `s` (driver rows only). */
-  def releaseKmeansFits(s: SparkSession): Unit = {
-    val it = kmeansFitCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq s) it.remove()
-  }
-
-  /** Drop the memoized label tables (all dirs of `s`), unpersisting each. */
-  def releaseClusterLabels(s: SparkSession): Unit = {
-    val it = clusterLabelCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) { e.getValue.unpersist(); it.remove() }
-    }
-  }
 
   /** The end-to-end document pipeline behind x21: language filter →
     * quality gate → exact content dedup → banded near-dup keep-one →

@@ -1,5 +1,6 @@
 package graft.tables
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,8 @@ import org.apache.spark.sql.functions._
   * directories, which exercises the identical DataSource V2 scan path.
   */
 object Tables {
-  /** Session-scoped catalog of RESOLVED relations (r16 optimization).
+  /** Session-scoped catalog of RESOLVED relations (r16 optimization),
+    * kept in the [[graft.Caches]] memo.
     *
     * `spark.read.parquet` re-resolves the datasource on every call —
     * file listing + footer schema inference — measured at 0.10–0.17 s
@@ -23,13 +25,7 @@ object Tables {
     * RELATION (schema + file index) only — no data, no results, nothing
     * persisted across sessions. Every action still scans the parquet.
     *
-    * Keyed per session; values are immutable DataFrames, safe to share
-    * across queries. The weak keying alone cannot collect entries — the
-    * cached DataFrames strongly reference their session, so the value
-    * chain pins the key (ADVICE r16) — hence the explicit stopped-
-    * session sweep on every catalog access.
-    *
-    * Aliasing note (ADVICE r16): [[memo]] returns the SAME Dataset
+    * Aliasing note (ADVICE r16): the memo returns the SAME Dataset
     * instance for repeated loads, so two loads of one table share
     * exprIds — a future query self-joining two loads with
     * `df1("c") === df2("c")` would hit failAmbiguousSelfJoin. Current
@@ -39,42 +35,30 @@ object Tables {
     * Immutability assumption (ADVICE r16): the memo pins the resolved
     * FILE LISTING for the session. Driver test data is immutable by
     * contract; any code path that rewrites a table directory
-    * mid-session must call [[invalidate]] first or readers serve stale
-    * listings / missing-file errors. Sink paths stay unmemoized for
-    * exactly this reason.
+    * mid-session must call [[invalidate]] once the rewrite is done, or
+    * readers serve stale listings / missing-file errors. Sink paths stay
+    * unmemoized for exactly this reason.
     */
-  private val catalogs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  private def catalog(spark: SparkSession) = catalogs.synchronized {
-    val it = catalogs.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next().sparkContext.isStopped) it.remove()
-    }
-    var m = catalogs.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-      catalogs.put(spark, m)
-    }
-    m
-  }
-
-  /** Drop memoized relations under `dir` for `spark` — call before
-    * rewriting a table directory mid-session (see the immutability
-    * note above). Matches whole path segments: invalidating `…/sf0.1`
-    * leaves `…/sf0.15` memoized. */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    catalogs.synchronized {
-      val m = catalogs.get(spark)
-      val prefix = dir.stripSuffix("/") + "/"
-      if (m != null) m.keys.filter(_.startsWith(prefix)).foreach(m.remove)
-    }
-  private[tables] def memo(spark: SparkSession, key: String)
-                          (load: => DataFrame): DataFrame =
-    catalog(spark).getOrElseUpdate(key, load)
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, s"$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
+    graft.Caches.memo(spark, Seq(dir), ("table", name))(spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** Forget what the session knows of the tables under `dir`: call it
+    * after rewriting a table directory mid-session (see the
+    * immutability note above). Drops every [[graft.Caches]] memo entry
+    * built from `dir` or a directory below it (relations and the query
+    * memos alike), and refreshes Spark's cached plans that read there
+    * (Spark refreshes them itself only when it wrote the files).
+    * Matches whole path segments: invalidating `…/sf0.1` leaves
+    * `…/sf0.15` memoized.
+    */
+  def invalidate(spark: SparkSession, dir: String): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    def qualified(p: String) = new Path(p).makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val root = qualified(dir)
+    graft.Caches.drop(spark)(_.dirs.exists(d =>
+      Iterator.iterate(qualified(d))(_.getParent).takeWhile(_ != null).contains(root)))
+    spark.catalog.refreshByPath(dir)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame  = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "orders")
@@ -96,7 +80,7 @@ object Tables {
     * to the same TimestampType column.
     */
   def events(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"$dir/events#ts") { eventsUnmemoized(spark, dir) }
+    graft.Caches.memo(spark, Seq(dir), ("table", "events#ts")) { eventsUnmemoized(spark, dir) }
 
   private def eventsUnmemoized(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -396,4 +396,67 @@ class GraftFunctionsSpec extends SparkTestBase {
       .select(GraftFunctions.slidingMin(col("kh"), 4)).head()
     assert(nullRow.isNullAt(0))
   }
+
+  test("max_run_len equals the aggregate(struct(prev, run, best)) fold " +
+    "in codegen and interpreted eval (empty, single, all-equal, null edges)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    val cases = Seq(
+      Seq("a", "a", "b", "c", "c", "c", "d"), // normal: longest run 3
+      Seq.empty[String],                      // empty → 0
+      Seq("x"),                               // single element → 1
+      Seq("z", "z", "z", "z"),                // all equal → 4
+      Seq("a", null, "a", "b", "b"),          // a null breaks a run
+      Seq(null, null, null),                  // nulls never extend a run → 1
+      Seq("", "", "a")                        // empty-string tokens do → 2
+    )
+    val expected = Seq(3, 0, 1, 4, 2, 1, 2)
+    // the fold gopherQuality ran before max_run_len replaced it
+    val fold = aggregate(col("ws"),
+      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
+      (acc, w) => {
+        val run = when(w === acc.getField("prev"), acc.getField("run") + 1)
+          .otherwise(lit(1))
+        struct(w.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      },
+      acc => acc.getField("best"))
+    val rows = (cases.map(Option(_)) :+ None).toDF("ws")
+    // keep the projection out of the optimizer (ConvertToLocalRelation
+    // would evaluate it interpreted at plan time)
+    val modes = Seq(
+      "codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    val keys = Seq("spark.sql.optimizer.excludedRules", "spark.sql.codegen.fallback",
+      "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      for ((mode, confs) <- modes) {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        // separate projections: the fold is CodegenFallback, which would
+        // keep a shared projection out of whole-stage codegen
+        val native = rows.select(GraftFunctions.maxRunLen(col("ws")))
+        val plan = native.queryExecution.executedPlan
+        assert(plan.collect { case w: WholeStageCodegenExec => w }.nonEmpty === (mode == "codegen"),
+          s"$mode plan:\n$plan")
+        val got = native.collect().map(r => Option(r.get(0)))
+        val oracle = rows.select(fold).collect().map(r => Option(r.get(0)))
+        assert(got.toSeq === oracle.toSeq, s"$mode: native vs fold")
+        assert(got.toSeq === expected.map(Option(_)) :+ None, s"$mode: native vs hand values")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // the expression's own eval, without a plan around it
+    cases.zip(expected).foreach { case (c, e) =>
+      assert(MaxRunLen(Literal.create(c, ArrayType(StringType))).eval(null) === e, s"eval on $c")
+    }
+  }
 }

@@ -311,7 +311,7 @@ class Round8bOpsSpec extends SparkTestBase {
   test("bpeMerges session memo: one learn per (session, dir, steps) — " +
        "the second call returns the SAME driver value; release drops it") {
     import graft.queries.Extensions
-    Extensions.releaseBpeMerges(spark)
+    graft.Caches.clearAll(spark)
     val a = Extensions.bpeMerges(spark, sf, steps = 2)
     val b = Extensions.bpeMerges(spark, sf, steps = 2)
     assert(a eq b, "second call must hit the memo, not re-learn")
@@ -320,16 +320,16 @@ class Round8bOpsSpec extends SparkTestBase {
     val direct = TextAnalysis.bpeMergeSeq(
       T.documents(spark, sf), "text", steps = 2)
     assert(a === direct)
-    Extensions.releaseBpeMerges(spark)
+    graft.Caches.clearAll(spark)
     val c = Extensions.bpeMerges(spark, sf, steps = 2)
     assert(!(c eq a) && c === a, "release must force a re-learn to the same value")
-    Extensions.releaseBpeMerges(spark)
+    graft.Caches.clearAll(spark)
   }
 
   test("kmeansFit session memo: one Lloyd fit per (session, dir, k, iters); " +
        "assignment-with equals the self-fitting kMeans") {
     import graft.queries.Extensions
-    Extensions.releaseKmeansFits(spark)
+    graft.Caches.clearAll(spark)
     val a = Extensions.kmeansFit(spark, sf, k = 4, iters = 1)
     val b = Extensions.kmeansFit(spark, sf, k = 4, iters = 1)
     assert(a eq b, "second call must hit the memo, not re-fit")
@@ -339,7 +339,7 @@ class Round8bOpsSpec extends SparkTestBase {
     val direct = Similarity.kMeans(emb, "embedding", "vec_id", k = 4, iters = 1)
       .orderBy("vec_id").collect().toSeq
     assert(viaMemo === direct)
-    Extensions.releaseKmeansFits(spark)
+    graft.Caches.clearAll(spark)
   }
 
   // ---------------------------------------------------------------- x76

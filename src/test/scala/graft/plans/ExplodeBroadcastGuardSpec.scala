@@ -12,7 +12,9 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   * to AQE (a static broadcast join has no shuffle for AQE to replan).
   *
   * This spec re-plans EVERY `SparkEntry.queries` entry (AQE off so the
-  * static choice is visible) and pins the EXACT number of
+  * static choice is visible), each from a released session
+  * (`Caches.clearAll`: no memo or cached plan left by the query before,
+  * as in a fresh session), and pins the EXACT number of
   * broadcast-of-explode sites per query; a query missing from both maps
   * below must have none. A site is allowed for one of two reasons:
   *  - `bounded`: the broadcast side is bounded by construction, not by
@@ -38,6 +40,7 @@ class ExplodeBroadcastGuardSpec extends SparkTestBase {
     // PQ codebook slices, query LUT and the query-side probe list
     // (|queries|·nProbe rows)
     "x50_ann_ivfpq" -> 4,
+    "x72_ann_ivf_trained" -> 1,    // query-side probe list: |queries|·nProbe rows
     "x52_bm25" -> 1,               // df rows for the fixed query-token list
     "x63_eval_contamination" -> 2, // eval shingle set and its hit set (≤ eval shingles)
     "x73_dsir" -> 1,               // one collected row of ≤ 512 hashed-bucket weights
@@ -87,7 +90,7 @@ class ExplodeBroadcastGuardSpec extends SparkTestBase {
       val actual = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
         val plan = graft.SparkEntry.queries(name)(spark, sf)
           .queryExecution.executedPlan
-        spark.sharedState.cacheManager.clearCache()
+        graft.Caches.clearAll(spark)
         name -> broadcastExplodeSites(plan)
       }.toMap
       val diffs = actual.filter { case (k, v) => expected.getOrElse(k, 0) != v }

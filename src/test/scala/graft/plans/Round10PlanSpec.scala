@@ -23,7 +23,7 @@ class Round10PlanSpec extends SparkTestBase {
 
   test("a62/a60/a61 ride ONE memoized repeat-edge frame (object identity " +
        "extended to the third consumer)") {
-    graft.queries.Analytics.releaseRepeatEdges(spark)
+    graft.Caches.clearAll(spark)
     val e = graft.queries.Analytics.repeatEdges(spark, sf)
     // building a62 must not rebuild or re-persist another edge frame
     val e2 = graft.queries.Analytics.repeatEdges(spark, sf)

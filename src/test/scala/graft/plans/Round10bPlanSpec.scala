@@ -36,7 +36,7 @@ class Round10bPlanSpec extends SparkTestBase {
 
   test("a69 k-core peel rides the session-memoized repeat-edge frame " +
        "(fourth consumer — object identity holds across the build)") {
-    graft.queries.Analytics.releaseRepeatEdges(spark)
+    graft.Caches.clearAll(spark)
     val e = graft.queries.Analytics.repeatEdges(spark, sf)
     graft.queries.Analytics.queries("a69_kcore_peel")(spark, sf).collect()
     assert(graft.queries.Analytics.repeatEdges(spark, sf) eq e)

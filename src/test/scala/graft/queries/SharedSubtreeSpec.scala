@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{Caches, SparkTestBase}
 import org.apache.spark.storage.StorageLevel
 
 /** The session-memoized banded-pair frame shared by x20, x84, and the
@@ -15,7 +15,7 @@ class SharedSubtreeSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   test("bandedPairs memoizes per (session, dir) and persists") {
-    Extensions.releaseBandedPairs(spark)
+    Caches.clearAll(spark)
     val a = Extensions.bandedPairs(spark, sf)
     val b = Extensions.bandedPairs(spark, sf)
     assert(a eq b, "second call must return the memoized frame")
@@ -32,18 +32,33 @@ class SharedSubtreeSpec extends SparkTestBase {
     assert(x84.map(_.getLong(2)).sum === x20.length.toLong)
   }
 
-  test("releaseBandedPairs unpersists and drops the memo") {
+  test("Caches.clearAll unpersists the pair frame and drops the memo") {
     val a = Extensions.bandedPairs(spark, sf)
-    Extensions.releaseBandedPairs(spark)
+    Caches.clearAll(spark)
     assert(a.storageLevel === StorageLevel.NONE, "release must unpersist")
     val c = Extensions.bandedPairs(spark, sf)
     assert(!(a eq c), "release must drop the memo so the next call rebuilds")
-    Extensions.releaseBandedPairs(spark)
+    Caches.clearAll(spark)
+  }
+
+  test("a newSession() sibling gets its own pair frame; clearAll drops both") {
+    val s2 = spark.newSession()
+    val a = Extensions.bandedPairs(spark, sf)
+    val b = Extensions.bandedPairs(s2, sf)
+    assert(!(a eq b), "each session must build its own entry")
+    assert(b.sparkSession eq s2)
+    assert(Extensions.bandedPairs(s2, sf) eq b)
+    // the sessions share one Spark cache, so releasing it releases both memos
+    Caches.clearAll(spark)
+    val b2 = Extensions.bandedPairs(s2, sf)
+    assert(!(b2 eq b), "clearAll must drop the sibling's entry too")
+    assert(b2.storageLevel != StorageLevel.NONE)
+    Caches.clearAll(spark)
   }
 
   test("repeatEdges memoizes per (session, dir) and persists — a60/a61 " +
        "share one edge build (r9 verdict ask 3)") {
-    Analytics.releaseRepeatEdges(spark)
+    Caches.clearAll(spark)
     val a = Analytics.repeatEdges(spark, sf)
     val b = Analytics.repeatEdges(spark, sf)
     assert(a eq b, "second call must return the memoized frame")
@@ -59,12 +74,12 @@ class SharedSubtreeSpec extends SparkTestBase {
     assert(a60.count() <= nodes)
   }
 
-  test("releaseRepeatEdges unpersists and drops the memo") {
+  test("Caches.clearAll unpersists the edge frame and drops the memo") {
     val a = Analytics.repeatEdges(spark, sf)
-    Analytics.releaseRepeatEdges(spark)
+    Caches.clearAll(spark)
     assert(a.storageLevel === StorageLevel.NONE, "release must unpersist")
     val c = Analytics.repeatEdges(spark, sf)
     assert(!(a eq c), "release must drop the memo so the next call rebuilds")
-    Analytics.releaseRepeatEdges(spark)
+    Caches.clearAll(spark)
   }
 }

@@ -169,6 +169,44 @@ class SourcesSpec extends SparkTestBase {
     assert(Tables(spark, sibling, "t") eq s, "invalidate must keep the sibling's relation")
   }
 
+  test("catalog memo: Caches.clearAll drops the memoized relations") {
+    val a = Tables.documents(spark, "/root/testdata/sf0.001")
+    graft.Caches.clearAll(spark)
+    assert(!(Tables.documents(spark, "/root/testdata/sf0.001") eq a),
+      "clearAll must drop the memoized relation")
+  }
+
+  test("invalidate(dir) drops the dup-rate probe memo of a rewritten table") {
+    val dir = Files.createTempDirectory("graft_probe").toString
+    import spark.implicits._
+    Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text").write
+      .parquet(s"$dir/documents.parquet")
+    def rate = graft.operators.Dedup.dupFraction(Tables.documents(spark, dir), "text")
+    assert(rate === 0.0)
+    Seq((1L, "a b c"), (2L, "a b c")).toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    Tables.invalidate(spark, dir)
+    assert(rate === 0.5, "the probe must re-run on the rewritten rows")
+  }
+
+  test("invalidate(dir) refreshes cached plans over a table rewritten outside Spark") {
+    val root = Files.createTempDirectory("graft_refresh")
+    val table = root.resolve("t.parquet")
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(table.toString)
+    def ids = graft.Caches.persistOnce(Tables(spark, root.toString, "t").select("id"))
+    assert(ids.count() === 2)
+    // replace the files as another process would: Spark's own writes
+    // refresh the cache by path, this rewrite does not
+    val staged = root.resolve("staged")
+    Seq((1L, "a")).toDF("id", "v").write.parquet(staged.toString)
+    Files.walk(table).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
+    Files.move(staged, table)
+    Tables.invalidate(spark, root.toString)
+    assert(ids.count() === 1, "a cached plan over the old files must not serve them")
+  }
+
   test("catalog memo: stopped sessions are swept from the catalog map " +
        "on the next access (the value chain pins the weak key)") {
     // a private-field probe via reflection would overfit; instead pin
