@@ -2,7 +2,10 @@ package graft.etl
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -48,25 +51,24 @@ object DataQuality {
   final case class CheckResult(check: String, passed: Boolean, detail: String,
                                measured: Option[Long] = None)
 
-  sealed trait Check { def run(df: DataFrame): CheckResult }
-
   /** V1 — minimum row count. `detail` carries the reference's exact log
     * message (data_process.py:278-281) so the logging site stays dumb.
     */
-  final case class MinRows(min: Long) extends Check {
-    def run(df: DataFrame): CheckResult = {
-      val n = df.count()
+  final case class MinRows(min: Long) {
+    def run(df: DataFrame): CheckResult = of(df.count())
+
+    /** The check's result for a row count taken elsewhere. */
+    def of(n: Long): CheckResult =
       if (n >= min) CheckResult(s"min_rows>=$min", true, s"Conteo de filas: $n", Some(n))
       else CheckResult(s"min_rows>=$min", false,
         s"Conteo bajo: $n filas. Se esperaban al menos $min", Some(n))
-    }
   }
 
   /** V2 — required columns; metadata-only, no Spark job. The failure
     * detail mirrors the reference's python-set repr of the missing
     * names (data_process.py:288).
     */
-  final case class RequiredColumns(required: Seq[String]) extends Check {
+  final case class RequiredColumns(required: Seq[String]) {
     def run(df: DataFrame): CheckResult = {
       val missing = required.filterNot(df.columns.contains)
       if (missing.isEmpty)
@@ -85,7 +87,7 @@ object DataQuality {
     * translation inherits that behavior; do not "fix" to output-schema
     * validation.
     */
-  final case class NotNull(column: String) extends Check {
+  final case class NotNull(column: String) {
     def run(df: DataFrame): CheckResult = NotNull.result(column,
       df.filter(col(column).isNull).count())
   }
@@ -100,19 +102,21 @@ object DataQuality {
     /** Every column's check, in one job when none has a null: the rows
       * with a null in any column are counted once, and only a non-zero
       * count runs the per-column counts that the failure messages need.
-      * Resolves names like [[NotNull.run]], pre-rename quirk included.
+      * No job at all when the analyzed filter reads only non-nullable
+      * columns (a column filled upstream): the optimizer would fold it to
+      * an empty relation. Resolves names like [[NotNull.run]], pre-rename
+      * quirk included.
       */
     def runAll(df: DataFrame, columns: Seq[String]): Seq[CheckResult] =
       if (columns.isEmpty) Nil
-      else if (df.filter(columns.map(c => col(c).isNull).reduce(_ || _)).count() == 0)
-        columns.map(result(_, 0L))
-      else columns.map(NotNull(_).run(df))
-  }
-
-  /** Run all checks; the gate passes only if every check passes. */
-  def gate(df: DataFrame, checks: Seq[Check]): (Boolean, Seq[CheckResult]) = {
-    val results = checks.map(_.run(df))
-    (results.forall(_.passed), results)
+      else {
+        val anyNull = df.filter(columns.map(c => col(c).isNull).reduce(_ || _))
+        val nullable = anyNull.queryExecution.analyzed
+          .collectFirst { case f: Filter => f.condition.references.exists(_.nullable) }
+          .getOrElse(true)
+        if (!nullable || anyNull.count() == 0) columns.map(result(_, 0L))
+        else columns.map(NotNull(_).run(df))
+      }
   }
 }
 
@@ -124,6 +128,20 @@ object DataQuality {
   * The reference recomputes the full upstream plan for every action (5×);
   * a single persist changes nothing semantically and removes the
   * recompute amplification that dominates its runtime.
+  *
+  * The input is parsed once. One action (a `noop` write, which needs no
+  * aggregation stage) fills the cache, and two observed metrics on it
+  * count the raw rows (the `MinRows` gate) and the transformed rows
+  * (`rowsOut`), so no other action re-reads the CSV or counts the cache.
+  * The input gate therefore decides after that action, not before it.
+  * Nothing visible changes: required columns are still checked first,
+  * from the schema alone; the gate's lines are still logged before any
+  * transform line; a failing gate still returns before anything is
+  * written; and an error in the transform surfaces only after the gate,
+  * then evaluated by its own count, has passed. Observing the raw frame
+  * keeps every filter above the CSV scan, but the lineage column's
+  * nondeterministic `input_file_name()` already did: no filter reaches
+  * the reader either way.
   */
 object EtlRunner {
   final case class EtlReport(
@@ -147,33 +165,60 @@ object EtlRunner {
       }
 
     PipeLog.info("data_quality_input", "Ejecutando Comprobación de Calidad de Datos...")
-    val (inOk, inResults) = gate(raw, Seq(
-      MinRows(conf.quality.minRows),
-      RequiredColumns(conf.quality.requiredColumns)))
-    inResults.foreach { r =>
-      if (r.passed) PipeLog.info("data_quality_input", s"[DQ INPUT APROBADA] ${r.detail}")
-      else PipeLog.error("data_quality_input", s"[DQ INPUT FALLIDA] ${r.detail}")
+    val minRows = MinRows(conf.quality.minRows)
+    val columns = RequiredColumns(conf.quality.requiredColumns).run(raw)
+    /** Logs and returns the input gate's results, the row count's first. */
+    def inputGate(rows: CheckResult): Seq[CheckResult] = {
+      val results = Seq(rows, columns)
+      results.foreach { r =>
+        if (r.passed) PipeLog.info("data_quality_input", s"[DQ INPUT APROBADA] ${r.detail}")
+        else PipeLog.error("data_quality_input", s"[DQ INPUT FALLIDA] ${r.detail}")
+      }
+      results
     }
-    if (!inOk) return EtlReport(inResults, Nil, None, 0L)
+    def blocked(inResults: Seq[CheckResult]) = EtlReport(inResults, Nil, None, 0L)
+    /** The outcome when building or filling the frame threw `e`: the
+      * reference runs the gate before the transform, so the gate, by its
+      * own count, decides first. If that count throws too, `e` carries it.
+      */
+    def gateBefore(e: Throwable): EtlReport = {
+      val rows = try minRows.run(raw) catch { case NonFatal(again) =>
+        e.addSuppressed(again)
+        throw e
+      }
+      val inResults = inputGate(rows)
+      if (inResults.forall(_.passed)) throw e
+      blocked(inResults)
+    }
+    if (!columns.passed) return blocked(inputGate(minRows.run(raw)))
 
-    val transformed = Transforms(raw, conf).persist(StorageLevel.MEMORY_AND_DISK)
+    val rowsIn = Observation()
+    val rowsOut = Observation()
+    val rows = count(lit(1)).as("rows")
+    val transformed =
+      try Transforms(raw.observe(rowsIn, rows), conf).observe(rowsOut, rows)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      catch { case NonFatal(e) => return gateBefore(e) }
     try {
-      val rowsOut = transformed.count()
+      try transformed.write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(e) => return gateBefore(e) }
+      val rawCount = observed(rowsIn)
+      val inResults = inputGate(minRows.of(rawCount))
+      if (!inResults.forall(_.passed)) return blocked(inResults)
+
+      val rowsOutCount = observed(rowsOut)
       // Reference-parity transform stage lines (data_process.py:98-263).
       // The plan is built lazily in one shot, so the messages are emitted
-      // together here, in the reference's order, using counts the gates
-      // already paid for: `Registros originales` is MinRows' count and
-      // every post-filter stage is row-preserving, so `filtrados` equals
-      // rowsOut — no extra scan for log parity.
-      val rawCount = inResults.collectFirst {
-        case CheckResult(_, _, _, Some(n)) => n }.getOrElse(raw.count())
+      // together here, in the reference's order, using the two observed
+      // counts: every post-filter stage is row-preserving, so `filtrados`
+      // equals rowsOut.
       PipeLog.info("transform_data", "Eliminando registros duplicados...")
       PipeLog.info("transform_data", "Aplicando Filtros...")
       PipeLog.info("date_filter", "Filtro fecha >>> OK")
       PipeLog.info("country_filter", "Filtro pais >>> OK")
       PipeLog.info("delivery_filter", "Filtro tipo entrega >>> OK")
       PipeLog.info("transform_data",
-        s"Registros originales: $rawCount | Registros filtrados: $rowsOut")
+        s"Registros originales: $rawCount | Registros filtrados: $rowsOutCount")
       PipeLog.info("derived_cols", "Columnas derivadas de tipo entrega >>> OK")
       PipeLog.info("fix_nulls", "Rellenado valores nulos >>> OK")
       PipeLog.info("treatment_units", "Unidad, cantidad y precio ajustadas >>> OK")
@@ -188,7 +233,7 @@ object EtlRunner {
         if (r.passed) PipeLog.info("data_quality_output", s"[DQ OUTPUT APROBADA]: ${r.detail}")
         else PipeLog.error("data_quality_output", s"[DQ OUTPUT FALLIDA]: ${r.detail}")
       }
-      if (!outOk) EtlReport(inResults, outResults, None, rowsOut)
+      if (!outOk) EtlReport(inResults, outResults, None, rowsOutCount)
       else {
         val path = Writer.outputPath(conf.output, conf.run.environment)
         PipeLog.info("write_data", s"Escribiendo datos en: $path")
@@ -199,13 +244,16 @@ object EtlRunner {
           PipeLog.error("write_data", s"ERROR: No se pudo escribir el resultado: $e")
           throw e
         }
-        EtlReport(inResults, outResults, Some(path), rowsOut)
+        EtlReport(inResults, outResults, Some(path), rowsOutCount)
       }
     } finally {
       transformed.unpersist()
       ()
     }
   }
+
+  /** The row count an observation took; its action has completed. */
+  private def observed(o: Observation): Long = o.get("rows").asInstanceOf[Long]
 }
 
 /** CLI: run the pipeline from a YAML config path. Logging follows the

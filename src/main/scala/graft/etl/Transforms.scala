@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -99,9 +101,9 @@ object Transforms {
       .drop(copy)
   }
 
-  /** E4 — 0/1 indicator columns (reference :150-159). */
+  /** E4 — 0/1 indicator columns (reference :150-159), in one projection. */
   def indicatorCols(df: DataFrame, indicators: Seq[IndicatorConf]): DataFrame =
-    indicators.foldLeft(df)((d, i) => d.withColumn(i.name, matches(i)))
+    df.withColumns(ListMap(indicators.map(i => i.name -> matches(i)): _*))
 
   /** E10/E11 — typed null fills (reference :163-180). */
   def fillNulls(df: DataFrame, conf: FillConf): DataFrame =
@@ -111,16 +113,17 @@ object Transforms {
   /** E5/E6/E7 — unit standardization (reference :182-210): quantity
     * scaled by `factor` for `fromUnit` rows, price re-derived per
     * standardized unit with HALF_UP 2-decimal rounding, constant target
-    * unit for every row.
+    * unit for every row. One projection over the input, so the price
+    * divides by the scaled quantity recomputed, not by `outQuantity`.
     */
   def standardizeUnits(df: DataFrame, u: UnitConf): DataFrame = {
     val isFrom = upper(col(u.unitColumn)) === lit(u.fromUnit)
-    df.withColumn(u.outQuantity,
-        when(isFrom, col(u.quantityColumn) * u.factor).otherwise(col(u.quantityColumn)))
-      .withColumn(u.outPrice,
-        when(isFrom, round(col(u.priceColumn) / col(u.outQuantity), 2))
-          .otherwise(col(u.priceColumn)))
-      .withColumn(u.outUnit, lit(u.standardUnit))
+    val qty = col(u.quantityColumn)
+    val price = col(u.priceColumn)
+    df.withColumns(ListMap(
+      u.outQuantity -> when(isFrom, qty * u.factor).otherwise(qty),
+      u.outPrice -> when(isFrom, round(price / (qty * u.factor), 2)).otherwise(price),
+      u.outUnit -> lit(u.standardUnit)))
   }
 
   /** E8 — total from the ROUNDED standardized price (reference :259-262;

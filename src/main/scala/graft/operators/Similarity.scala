@@ -845,7 +845,10 @@ object Similarity {
       .select(col("query_id"), col("qv"), col("pc.cell").as("cell"))
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("cand_id"))
-    probes.join(assigned, Seq("cell"))
+    // the probe list (|queries|·nProbe rows) is the build side: planned
+    // over an unmaterialized cache of the corpus, `assigned` can look
+    // smaller than it is and be broadcast instead
+    broadcast(probes).join(assigned, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Exact.round6(GraftFunctions.cosineSim(col("qv"), col("cvec"))))

@@ -18,9 +18,7 @@ import graft.SparkTestBase
   */
 class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
-
-  private val header =
-    "pais,fecha_proceso,transporte,ruta,tipo_entrega,material,precio,cantidad,unidad"
+  import EtlProbes.header
 
   /** Two files, 11 rows. Kept (reference config): GT 2025-05-13 a1, a3 and
     * b1 (b1 duplicates a1 across files, so only `filename` differs); SV
@@ -100,6 +98,32 @@ class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(csvScans.size === 1, plan.toString)
     assert(shuffles.size === 1, plan.toString)
     assert(hashKeys(shuffles.head) === Seq("fecha_proceso", "pais"), plan.toString)
+  }
+
+  test("a run scans its CSV input in one SQL execution and starts at most 4 jobs") {
+    val conf = ReferenceJob.config(input().toString, freshOut())
+    val ((report, scans), jobs) =
+      EtlProbes.jobs(spark)(EtlProbes.csvScans(spark)(EtlRunner.run(spark, conf)))
+    assert(report.written.nonEmpty && report.rowsOut === 6L)
+    assert(scans === 1, "SQL executions that scan the CSV input")
+    assert(jobs <= 4, "Spark jobs in one run")
+  }
+
+  test("the observed counts equal plain counts under AQE on/off and 1 or 7 shuffle partitions") {
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val prev = keys.map(spark.conf.get)
+    try for (aqe <- Seq("true", "false"); parts <- Seq("1", "7")) {
+      spark.conf.set(keys(0), aqe)
+      spark.conf.set(keys(1), parts)
+      val conf = ReferenceJob.config(input().toString, freshOut())
+      val report = EtlRunner.run(spark, conf)
+      val raw = Reader.read(spark, conf.input)
+      val cell = s"AQE $aqe, $parts partitions"
+      assert(report.inputGate.head.measured === Some(raw.count()), cell)
+      assert(report.rowsOut === Transforms(raw, conf).count(), cell)
+      assert(report.rowsOut === 6L, cell)
+      assert(perPartition(report.written.get).values.map(_._1).sum === 6L, cell)
+    } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   /** The column names a shuffle hashes on; empty if it does not hash. */

@@ -1,14 +1,9 @@
 package graft.etl
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.{Seconds, Span}
 import graft.SparkTestBase
 
 /** Per-operator unit tests over the edge semantics pinned in SURVEY §7.5. */
@@ -118,40 +113,40 @@ class TransformsSpec extends SparkTestBase {
     assert(res.passed)
   }
 
-  /** `f`'s result and the Spark jobs it started. The listener bus is
-    * async, so a marker job runs after `f`: once the listener has seen
-    * it, it has seen every job `f` started.
+  /** `rows` as a parquet-backed frame: its columns are nullable and its
+    * data unknown to the optimizer, so a null filter over it cannot fold.
     */
-  private def withJobCount[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val a = try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", group)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      eventually(timeout(Span(30, Seconds))) { assert(seen.contains(s"$group-marker")) }
-      (a, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
+  private def parquet(rows: (Double, String)*) = {
+    val dir = Files.createTempDirectory("graft_notnull").resolve("t").toString
+    rows.toDF("precio", "material").write.parquet(dir)
+    spark.read.parquet(dir)
   }
 
   test("NotNull.runAll passes every column from one count when there are no nulls") {
-    val df = Seq((1.0, "m"), (2.0, "n")).toDF("precio", "material")
-    val (res, jobs) = withJobCount(DataQuality.NotNull.runAll(df, Seq("precio", "material")))
-    assert(jobs === withJobCount(DataQuality.NotNull("precio").run(df))._2)
+    val df = parquet((1.0, "m"), (2.0, "n"))
+    val (res, jobs) = EtlProbes.jobs(spark)(DataQuality.NotNull.runAll(df, Seq("precio", "material")))
+    assert(jobs > 0)
+    assert(jobs === EtlProbes.jobs(spark)(DataQuality.NotNull("precio").run(df))._2)
     assert(res === Seq("precio", "material").map(DataQuality.NotNull(_).run(df)))
     assert(res.map(_.detail) === Seq(
       "La columna 'precio' no contiene valores nulos.",
       "La columna 'material' no contiene valores nulos."))
     assert(res.forall(r => r.passed && r.measured.contains(0L)))
     assert(DataQuality.NotNull.runAll(df, Nil).isEmpty)
+  }
+
+  test("NotNull.runAll runs no job when every gated column is non-nullable") {
+    // filled columns are non-nullable, so `isnull` is false on every row,
+    // as on the ETL's gated columns
+    val df = Transforms.fillNulls(parquet((1.0, "m"), (2.0, null)),
+      FillConf("NOT INFO", Seq("material"), 0.0, Seq("precio")))
+    val (res, jobs) = EtlProbes.jobs(spark)(DataQuality.NotNull.runAll(df, Seq("precio", "material")))
+    assert(jobs === 0)
+    assert(res === Seq("precio", "material").map(DataQuality.NotNull(_).run(df)))
+    assert(res.map(_.detail) === Seq(
+      "La columna 'precio' no contiene valores nulos.",
+      "La columna 'material' no contiene valores nulos."))
+    assert(res.forall(r => r.passed && r.measured.contains(0L)))
   }
 
   test("NotNull.runAll keeps the exact per-column counts when a column has nulls") {

@@ -65,9 +65,10 @@ class ExplodeBroadcastGuardSpec extends SparkTestBase {
 
   private val expected = bounded ++ knownDefects
 
+  private def hasGenerate(p: SparkPlan): Boolean =
+    p.collectFirst { case g: GenerateExec => g }.isDefined
+
   private def broadcastExplodeSites(plan: SparkPlan): Int = {
-    def hasGenerate(p: SparkPlan): Boolean =
-      p.collectFirst { case g: GenerateExec => g }.isDefined
     var n = 0
     plan.foreach {
       case j: BroadcastHashJoinExec =>
@@ -98,5 +99,30 @@ class ExplodeBroadcastGuardSpec extends SparkTestBase {
         s"broadcast-of-explode sites moved (actual vs expected): " +
           diffs.toSeq.sorted.map { case (k, v) => s"$k: $v != ${expected.getOrElse(k, 0)}" }.mkString(", "))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("x72 planned after x71 in one session broadcasts only its query-side probe list") {
+    // x71 memoizes the k-means fit. Clearing Spark's cache keeps that memo,
+    // so x72 persists its candidate frame afresh and plans against an
+    // unmaterialized cache, whose estimate must not make the corpus-sized
+    // `assigned` side look small enough to broadcast.
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      graft.Caches.clearAll(spark)
+      graft.SparkEntry.queries("x71_kmeans")(spark, sf).queryExecution.executedPlan
+      spark.catalog.clearCache()
+      val plan = graft.SparkEntry.queries("x72_ann_ivf_trained")(spark, sf)
+        .queryExecution.executedPlan
+      val builds = plan.collect { case j: BroadcastHashJoinExec =>
+        j.buildSide match { case BuildLeft => j.left; case BuildRight => j.right }
+      }
+      assert(builds.nonEmpty, plan.toString)
+      assert(builds.forall(hasGenerate),
+        s"a broadcast build side without the probe explode:\n$plan")
+    } finally {
+      graft.Caches.clearAll(spark)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 }
