@@ -11,11 +11,14 @@ import org.apache.spark.sql.functions._
   * The driver's sf0.1 parquet is one file with one row group per table,
   * which caps every local scan at 1 task (PERF.md) — plan-level
   * parallel-scan claims could be asserted (PlanSpec) but not measured.
-  * This fixture replicates each table `copies`× with every key family
-  * shifted by a per-family offset (orderkey offsets applied to BOTH
-  * orders and lineitem, etc.), so joins stay consistent and key
+  * This fixture replicates each keyed table `copies`× with every key
+  * family shifted by a per-family offset (orderkey offsets applied to
+  * BOTH orders and lineitem, etc.), so joins stay consistent and key
   * cardinalities scale with volume, and writes `filesPerTable` parquet
-  * files per table so scans genuinely fan out.
+  * files per table so scans genuinely fan out. The keyless dimensions
+  * (`nation`, `region`) are written once, as one file: a copy of a row
+  * whose key is not shifted is a duplicate key, and every join on it
+  * would fan out `copies`×.
   *
   * Dup-heavy by construction: each document/embedding recurs `copies`
   * times under distinct ids — representative of crawl data and a
@@ -23,7 +26,9 @@ import org.apache.spark.sql.functions._
   * quadratically in dup-group size), which is exactly what the sf1 bench
   * wants to stress.
   *
-  * Idempotent via a marker file; safe to call from tests and benches.
+  * Idempotent via the marker file `_SF1_READY`, which records the layout
+  * version (2: keyless dims written once) and parameters; a directory
+  * whose marker differs is rebuilt. Safe to call from tests and benches.
   */
 object Fixtures {
   val DefaultDir: String =
@@ -33,7 +38,7 @@ object Fixtures {
     * below. Offsets derive from the OWNER's max so every member shifts
     * by the same amount and FK joins keep resolving within a copy.
     */
-  private val families: Map[String, (String, String)] = Map(
+  private[graft] val families: Map[String, (String, String)] = Map(
     "orderkey" -> ("orders", "o_orderkey"),
     "custkey" -> ("customer", "c_custkey"),
     "suppkey" -> ("supplier", "s_suppkey"),
@@ -43,7 +48,7 @@ object Fixtures {
     "eventid" -> ("events", "event_id"),
     "userid" -> ("events", "user_id"))
 
-  private val shifted: Map[String, Seq[(String, String)]] = Map(
+  private[graft] val shifted: Map[String, Seq[(String, String)]] = Map(
     "lineitem" -> Seq("l_orderkey" -> "orderkey", "l_partkey" -> "partkey",
       "l_suppkey" -> "suppkey"),
     "orders" -> Seq("o_orderkey" -> "orderkey", "o_custkey" -> "custkey"),
@@ -53,7 +58,7 @@ object Fixtures {
     "documents" -> Seq("doc_id" -> "docid"),
     "embeddings" -> Seq("vec_id" -> "vecid"),
     "events" -> Seq("event_id" -> "eventid", "user_id" -> "userid"),
-    // small dims: replicated file layout, keys untouched
+    // keyless dims: written once
     "nation" -> Nil,
     "region" -> Nil)
 
@@ -63,7 +68,8 @@ object Fixtures {
                 copies: Int = 10,
                 filesPerTable: Int = 16): String = synchronized {
     val marker = Paths.get(destDir, "_SF1_READY")
-    if (Files.exists(marker)) return destDir
+    val stamp = s"layout=2 copies=$copies files=$filesPerTable"
+    if (Files.exists(marker) && Files.readString(marker).trim == stamp) return destDir
 
     // events carries parquet TIMESTAMP(NANOS) (see Tables.events): read
     // the nanos as raw longs and write them back as plain INT64 — the
@@ -76,25 +82,28 @@ object Fixtures {
 
     shifted.foreach { case (table, keys) =>
       val base = src(table)
-      val rep = (0 until copies).map { k =>
-        keys.foldLeft(base) { case (d, (c, fam)) =>
-          d.withColumn(c, col(c) + lit(k * offsets(fam)))
-        }
-      }.reduce(_ unionByName _)
-      // round-robin repartition: uniform file sizes, no key clustering —
-      // each file carries every copy's keys, like a real ingest layout
-      rep.repartition(filesPerTable)
-        .write.mode("overwrite").parquet(s"$destDir/$table.parquet")
+      val out = if (keys.isEmpty) base.coalesce(1) else
+        (0 until copies).map { k =>
+          keys.foldLeft(base) { case (d, (c, fam)) =>
+            d.withColumn(c, col(c) + lit(k * offsets(fam)))
+          }
+        }.reduce(_ unionByName _)
+          // round-robin repartition: uniform file sizes, no key
+          // clustering — each file carries every copy's keys, like a
+          // real ingest layout
+          .repartition(filesPerTable)
+      out.write.mode("overwrite").parquet(s"$destDir/$table.parquet")
     }
     Files.createDirectories(marker.getParent)
-    Files.write(marker, java.util.Arrays.asList(s"copies=$copies files=$filesPerTable"))
+    Files.writeString(marker, stamp + "\n")
     destDir
   }
 }
 
 /** Standalone fixture builder: `runMain graft.EnsureSf1 [destDir]` —
-  * lets the full-surface sf1 sweep (Verify + oracle_check) run without
-  * first paying a BenchSf1 pass. Idempotent via the marker file.
+  * builds the fixture for the full-surface sf1 sweep (Verify +
+  * oracle_check). Idempotent via the versioned marker file: a fixture
+  * of an older layout (keyless dims replicated) is rebuilt.
   */
 object EnsureSf1 {
   def main(args: Array[String]): Unit = {

@@ -923,9 +923,8 @@ object Analytics {
     // self-join); the count runs the degree-oriented node-iterator
     // ([[graft.operators.Graph.triangleCounts]]) so wedge volume is
     // O(m^1.5)-bounded even under hub parts. The support-1
-    // co-occurrence graph (1.2 M edges / 41 M wedges at sf0.1) is the
-    // BenchSf1 `triangles_dense_forced` stress row, not a per-round
-    // bench tax.
+    // co-occurrence graph (1.2 M edges / 41 M wedges at sf0.1) is a
+    // stress case, not a per-query workload.
     "a60_basket_triangles" -> ((s, dir) =>
       graft.operators.Graph.triangleCounts(repeatEdges(s, dir), "p1", "p2")
         .withColumnRenamed("v", "part")
