@@ -104,6 +104,9 @@ object Caches {
 
   /** The one release for long-lived callers: drop every memo entry and
     * every cached plan of `s` and of the sessions sharing its cache.
+    * Release API: no query or main calls it (a one-shot run ends with
+    * its session); it stays for sessions that outlive a workload, and
+    * the specs that reset state between cases use it.
     */
   def clearAll(s: SparkSession): Unit = {
     s.catalog.clearCache()

@@ -86,10 +86,18 @@ object DataQuality {
     * reference a dropped column) — see SURVEY.md §2.6. The literal
     * translation inherits that behavior; do not "fix" to output-schema
     * validation.
+    *
+    * Given the job's `renames`, a name `df` lacks is read as the renamed
+    * column `df` carries: the same values the quirk reads, but resolved
+    * on `df`'s own output, so a cached `df` answers the count from its
+    * cache. Resolved below the rename projection, the filter's plan
+    * would no longer match the cached one and the count would re-run
+    * the whole transform. Names neither `df` nor `renames` resolve keep
+    * the quirk. Results and messages carry the configured name.
     */
   final case class NotNull(column: String) {
-    def run(df: DataFrame): CheckResult = NotNull.result(column,
-      df.filter(col(column).isNull).count())
+    def run(df: DataFrame, renames: Map[String, String] = Map.empty): CheckResult =
+      NotNull.result(column, df.filter(NotNull.read(df, column, renames).isNull).count())
   }
 
   object NotNull {
@@ -99,23 +107,29 @@ object DataQuality {
       else CheckResult(s"not_null($column)", false,
         s"La columna '$column' contiene $n valores nulos.", Some(n))
 
+    /** The gated `column` as [[NotNull.run]] reads it from `df`. */
+    private def read(df: DataFrame, column: String, renames: Map[String, String]): Column =
+      col(renames.get(column)
+        .filter(r => !df.columns.contains(column) && df.columns.contains(r))
+        .getOrElse(column))
+
     /** Every column's check, in one job when none has a null: the rows
       * with a null in any column are counted once, and only a non-zero
       * count runs the per-column counts that the failure messages need.
       * No job at all when the analyzed filter reads only non-nullable
       * columns (a column filled upstream): the optimizer would fold it to
-      * an empty relation. Resolves names like [[NotNull.run]], pre-rename
-      * quirk included.
+      * an empty relation. Resolves names like [[NotNull.run]].
       */
-    def runAll(df: DataFrame, columns: Seq[String]): Seq[CheckResult] =
+    def runAll(df: DataFrame, columns: Seq[String],
+               renames: Map[String, String] = Map.empty): Seq[CheckResult] =
       if (columns.isEmpty) Nil
       else {
-        val anyNull = df.filter(columns.map(c => col(c).isNull).reduce(_ || _))
+        val anyNull = df.filter(columns.map(read(df, _, renames).isNull).reduce(_ || _))
         val nullable = anyNull.queryExecution.analyzed
           .collectFirst { case f: Filter => f.condition.references.exists(_.nullable) }
           .getOrElse(true)
         if (!nullable || anyNull.count() == 0) columns.map(result(_, 0L))
-        else columns.map(NotNull(_).run(df))
+        else columns.map(NotNull(_).run(df, renames))
       }
   }
 }
@@ -227,7 +241,7 @@ object EtlRunner {
       }
       PipeLog.info("rename_and_order_cols", "Renombrado y ordenamiento de columnas >>> OK")
 
-      val outResults = NotNull.runAll(transformed, conf.quality.notNullColumns)
+      val outResults = NotNull.runAll(transformed, conf.quality.notNullColumns, conf.renames)
       val outOk = outResults.forall(_.passed)
       outResults.foreach { r =>
         if (r.passed) PipeLog.info("data_quality_output", s"[DQ OUTPUT APROBADA]: ${r.detail}")

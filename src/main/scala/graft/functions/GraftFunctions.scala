@@ -1069,6 +1069,10 @@ object GraftFunctions {
   def simhash64(c: Column): Column = call_function("simhash64", c)
   def cdcHashes(c: Column): Column = call_function("cdc_hashes", c)
   def cdcCharHashes(c: Column): Column = call_function("cdc_char_hashes", c)
+  /** Test oracle: no query calls `l2_normalize`; the Column form stays
+    * so GraftFunctionsSpec can pin the native expression (unit vectors,
+    * null on a zero vector or a null element, two instances compiling
+    * in one codegen projection). */
   def l2Normalize(c: Column): Column = call_function("l2_normalize", c)
   def hilbert2d(x: Column, y: Column, bits: Int): Column =
     call_function("hilbert2d", x, y,

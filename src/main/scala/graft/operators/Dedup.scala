@@ -139,18 +139,11 @@ object Dedup {
         array_distinct(shingleArrayOfTokens(col("__ws"), n)).as("shingles")))
   }
 
-  /** The raw n-gram array (duplicates preserved) behind [[shingles]] —
-    * zip_with over shifted slices; see the alias-inlining note above.
-    * Shared with TextAnalysis.repetition, which needs duplicate counts.
-    */
-  private[operators] def shingleArray(textCol: Column, n: Int): Column =
-    shingleArrayOfTokens(split(lower(textCol), "\\s+"), n)
-
   /** The zip_with n-gram chain over a PRE-SPLIT token-array column.
     *
     * r16: hot consumers project `split(lower(text))` into a real
     * attribute FIRST and build the chain over that attribute. Inlining
-    * the split directly (the [[shingleArray]] wrapper) re-evaluates the
+    * the split directly into the chain re-evaluates the
     * regex ~2n× per row — every `slice` operand and every
     * `greatest(size(..))` bound re-inlines it, zip_with is
     * CodegenFallback so nothing CSEs, and InferFiltersFromGenerate
@@ -171,9 +164,10 @@ object Dedup {
   private[operators] def shingleArrayOfTokens(ws: Column, n: Int): Column =
     GraftFunctions.shingleArr(ws, n)
 
-  /** The pre-r16 interpreted chain, kept as the parity reference for
-    * [[graft.functions.ShingleArray]] (GraftFunctionsSpec pins equality
-    * element-for-element, including null/short/empty edges). */
+  /** The pre-r16 interpreted chain. Test oracle: no query calls it; it
+    * stays as the parity reference for [[graft.functions.ShingleArray]]
+    * (GraftFunctionsSpec pins equality element-for-element, including
+    * null/short/empty edges). */
   private[graft] def shingleArrayZipWith(ws: Column, n: Int): Column = {
     val m = greatest(size(ws) - (n - 1), lit(0))
     (1 until n).foldLeft(slice(ws, lit(1), m)) { (acc, k) =>
@@ -449,26 +443,15 @@ object Dedup {
     * Candidate joins are shuffle_hash-pinned (the banded tables sit
     * above Generate, whose row estimate blinds the planner — the
     * containmentPairs trap).
-    */
-  def nearDedupAgainst(batch: DataFrame, historical: DataFrame,
-                       textCol: String, idCol: String,
-                       n: Int = 3, numHashes: Int = 16, bands: Int = 8,
-                       minEstimate: Double = 0.2, seed: Long = 42L): DataFrame =
-    nearDedupAgainstSigs(batch, idCol,
-      graft.Caches.persistOnce(
-        minhashSignatures(batch, textCol, idCol, n, numHashes, seed)),
-      graft.Caches.persistOnce(
-        minhashSignatures(historical, textCol, idCol, n, numHashes, seed)),
-      numHashes, bands, minEstimate)
-
-  /** [[nearDedupAgainst]] over PRECOMPUTED signature frames (r16): when
-    * batch and history are row-slices of one corpus, the caller can
-    * slice a shared (session-cached) full-corpus signature frame
-    * instead of building two private signature chains — per-doc
-    * signatures commute with row filters, so the results are identical
-    * and the regex/shingle/signature pass runs once per corpus, not
-    * once per slice. `batch` still supplies the surviving-id domain
-    * (docs too short to sign never pair and always survive).
+    *
+    * The candidate joins run over PRECOMPUTED signature frames
+    * (`bs`, `hs` from [[minhashSignatures]]): when batch and history
+    * are row-slices of one corpus (x66), the caller slices a shared
+    * (session-cached) full-corpus signature frame instead of building
+    * two private signature chains — per-doc signatures commute with row
+    * filters, so the results are identical and the
+    * regex/shingle/signature pass runs once per corpus, not once per
+    * slice. `batch` supplies the surviving-id domain.
     */
   def nearDedupAgainstSigs(batch: DataFrame, idCol: String,
                            bs: DataFrame, hs: DataFrame,
@@ -1043,6 +1026,10 @@ object Dedup {
     * where no 16-bit band is clean). Prefer [[bandedJaccardMinhash]]
     * when recall at a similarity floor matters; SimHash banding shines
     * when the fingerprint itself is the product (x04/x19).
+    *
+    * Test oracle: no query calls it; it stays because OperatorsSpec and
+    * RecallSpec check through it that SimHash-banded candidates verify
+    * to the exact Jaccard values (precision 1.0).
     */
   def bandedJaccard(docs: DataFrame, textCol: String, idCol: String,
                     n: Int = 3, threshold: Double = 0.5,
@@ -1153,9 +1140,10 @@ object Dedup {
   }
 
   /** Embedding near-dup pairs: all pairs with cosine >= threshold.
-    * Brute force n² via an inequality join (cartesian) — kept ONLY as the
-    * correctness baseline for [[embeddingCosinePairsBlocked]]'s test; the
-    * exposed query path is the blocked variant.
+    * Brute force n² via an inequality join (cartesian). Test oracle: no
+    * query calls it; it stays as the correctness baseline that
+    * RecallSpec holds [[embeddingCosinePairsBlocked]] (the query path)
+    * equal to.
     */
   def embeddingCosinePairs(emb: DataFrame, vecCol: String, idCol: String,
                            threshold: Double): DataFrame = {
@@ -1182,8 +1170,7 @@ object Dedup {
     * so full recall needs more bucket-join volume than brute force.
     * Exact O(n²) FLOPs is inherent at such thresholds; the scale answer
     * is organizing them with bounded memory and full parallelism, which
-    * this shape does. For true near-dup mining (cos ≥ ~0.9) use
-    * [[embeddingCosinePairsBucketed]].
+    * this shape does.
     *
     * Cache ownership ([[graft.Caches]] policy): the RESULT — the
     * threshold-filtered pair set, O(matching pairs), corpus-free bound —
@@ -1216,55 +1203,6 @@ object Dedup {
         least(col("d1"), col("d2")).as("d1"),
         greatest(col("d1"), col("d2")).as("d2"),
         col("cosine")))
-  }
-
-  /** Approximate near-dup embedding pairs via seeded random-hyperplane
-    * LSH: per table, a vector's bucket is the sign pattern of `planes`
-    * hyperplane projections; only bucket-colliding pairs are scored
-    * exactly. Keep probability per table for a pair at angle θ is
-    * (1-θ/π)^planes; across L tables recall is 1-(1-p)^L — with the
-    * defaults, a cos ≥ 0.99 near-dup is missed with probability < 1e-4
-    * while near-orthogonal pairs almost never collide, so the bucket
-    * join is O(dups). This is the right tool ONLY in the near-dup
-    * regime; see [[embeddingCosinePairsBlocked]] for low thresholds.
-    */
-  def embeddingCosinePairsBucketed(emb: DataFrame, vecCol: String, idCol: String,
-                                   threshold: Double, dim: Int,
-                                   planes: Int = 8, tables: Int = 8,
-                                   seed: Long = 42L): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val rnd = new scala.util.Random(seed)
-    val hyperplanes = Array.fill(tables, planes, dim)(rnd.nextGaussian())
-    // Bucket bit = sign of the hyperplane PROJECTION: sign(dot) ==
-    // sign(cosine), so the codegen'd dot product skips the row-norm,
-    // two sqrts and a division that a cosine call would redo per plane
-    // (planes×tables = 64 times per row).
-    val bucketCols = (0 until tables).map { t =>
-      val bits = (0 until planes).map { p =>
-        val plane = typedLit(hyperplanes(t)(p).toSeq)
-        when(GraftFunctions.dotProduct(col("v"), plane) > 0, lit(1L << p)).otherwise(lit(0L))
-      }
-      struct(lit(t).as("table"), bits.reduce(_ + _).as("bucket"))
-    }
-    // NOT persisted: the bucket columns are cheap scan-side codegen
-    // (planes·dim multiplies per row), so recomputing them on each side
-    // of the self-join beats holding a tables×-exploded copy of the
-    // corpus in executor cache for the rest of the session.
-    val hashed = emb
-      .select(col(idCol).as("doc_id"), col(vecCol).as("v"))
-      .withColumn("bk", explode(array(bucketCols: _*)))
-    val cand = hashed.select(col("doc_id").as("d1"), col("bk"))
-      .join(hashed.select(col("doc_id").as("d2"), col("bk")), Seq("bk"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    cand
-      .join(vecs.select(col("id").as("d1"), col("vec").as("v1")), "d1")
-      .join(vecs.select(col("id").as("d2"), col("vec").as("v2")), "d2")
-      .withColumn("cosine",
-        graft.tables.Exact.round6(GraftFunctions.cosineSim(col("v1"), col("v2"))))
-      .filter(col("cosine") >= threshold)
-      .select("d1", "d2", "cosine")
   }
 
   /** Edit-distance near-dup pairs: block on (text prefix, length band),

@@ -3,15 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Multi-dimensional data LAYOUT for the write path: Z-order (Morton)
-  * clustering, the standard trick for making a single sort order serve
-  * range predicates on SEVERAL columns at once (Morton 1966; the same
+/** Multi-dimensional data LAYOUT keys: the Z-order (Morton) interleave,
+  * the standard trick for making a single sort order serve range
+  * predicates on SEVERAL columns at once (Morton 1966; the same
   * interleaving Delta Lake's OPTIMIZE ZORDER and ClickHouse's
   * mortonEncode expose). Rows whose z-values are close are close in
   * EVERY interleaved dimension, so min/max footer pruning on a
   * z-sorted parquet layout skips files for predicates on either
-  * column — at 100 TB the difference between scanning a shard and
-  * scanning the lake.
+  * column; [[skippingReport]] measures how many.
   */
 object Layout {
   /** The Morton interleave of two non-negative dimension values, low
@@ -29,42 +28,6 @@ object Layout {
       (shiftright(xm, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i))) +
         (shiftright(ym, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
     }.reduce(_ + _)
-  }
-
-  /** Cluster `df` for writing: z-value from two dimensions, then
-    * range-repartition + intra-partition sort ON the z-value. Each
-    * output file then covers a tight z-range — i.e. a tight rectangle
-    * in (x, y) — so parquet min/max stats prune on BOTH dimensions.
-    * `repartitionByRange` samples to pick balanced bounds (RangePartitioning
-    * in the plan — the same exchange a global sort uses, but without
-    * the final merge); the sort inside each partition is the spill-safe
-    * local sort. Partition BOUNDS are sampling-dependent, so file
-    * assignment is not bit-deterministic across runs — row CONTENT and
-    * per-file ordering are; callers needing deterministic assignment
-    * use explicit bucket bounds on the z-value instead.
-    */
-  def zOrderLayout(df: DataFrame, x: Column, y: Column,
-                   partitions: Int, bits: Int = 16): DataFrame =
-    df.withColumn("zval", mortonInterleave(x, y, bits))
-      .repartitionByRange(partitions, col("zval"))
-      .sortWithinPartitions(col("zval"))
-
-  /** [[zOrderLayout]] with the Hilbert index as the clustering key —
-    * strictly better locality than Morton (consecutive indices are
-    * always Manhattan-adjacent cells, so an index range is a seam-free
-    * spatial region; the reason Delta's liquid clustering moved from
-    * Z-order to Hilbert). Same write-path mechanics: range-repartition
-    * + spill-safe local sort on the key; the index itself is the
-    * codegen'd [[graft.functions.HilbertIndex2D]] — scan-side, no
-    * shuffle beyond the range exchange every clustered write pays.
-    */
-  def hilbertLayout(df: DataFrame, x: Column, y: Column,
-                    partitions: Int, bits: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.withColumn("hval", graft.functions.GraftFunctions.hilbert2d(
-        x.cast("long"), y.cast("long"), bits))
-      .repartitionByRange(partitions, col("hval"))
-      .sortWithinPartitions(col("hval"))
   }
 
   /** Block-level min-max DATA-SKIPPING effectiveness report — what a

@@ -144,52 +144,6 @@ object Multimodal {
     }
   }
 
-  /** STUB resize: shrink a payload by an integer factor via strided byte
-    * sampling — kept for NON-image payloads (no audio/video codecs in
-    * this container); images go through [[resizeImage]].
-    */
-  def resizeStub(records: Dataset[MediaRecord], factor: Int = 4): Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.map { r =>
-      val out = r.payload.indices.collect { case i if i % factor == 0 => r.payload(i) }.toArray
-      MediaRecord(r.doc_id, r.media_type, out)
-    }
-  }
-
-  /** REAL image resize: decode, nearest-neighbor resample in pixel
-    * space, re-encode as PNG. Resampling is hand-rolled integer
-    * arithmetic (out(x,y) = in(x·w/W, y·h/H)) rather than Graphics2D so
-    * the output pixels — and the PNG bytes — are bit-deterministic,
-    * which keeps the operator oracle-able. Non-image or undecodable
-    * payloads pass through unchanged (media pipelines drop or route
-    * such rows downstream; silently emitting garbage would hide them).
-    */
-  def resizeImage(records: Dataset[MediaRecord],
-                  targetW: Int, targetH: Int): Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.map { r =>
-      val img = decodeImage(r.media_type, r.payload)
-      if (img == null) r
-      else {
-        val out = new java.awt.image.BufferedImage(
-          targetW, targetH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < targetH) {
-          val sy = y * img.getHeight / targetH
-          var x = 0
-          while (x < targetW) {
-            out.setRGB(x, y, img.getRGB(x * img.getWidth / targetW, sy))
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(out, "png", bos)
-        MediaRecord(r.doc_id, "image/png", bos.toByteArray)
-      }
-    }
-  }
-
   /** Decode + featurize a media dataset; one decoder per partition.
     * [[ImageDecoder]] routes by media type: real pixel decode for
     * `image/`-typed, byte-derived features otherwise.
@@ -202,33 +156,6 @@ object Multimodal {
         val p = decoder.decode(r.media_type, r.payload)
         MediaFeatures(r.doc_id, r.media_type, p.byteLen, p.nFrames, p.sampleRate,
           p.checksum, p.width, p.height)
-      }
-    }
-  }
-
-  /** REAL image frame sampling: decode the payload and emit every
-    * `everyN`-th pixel ROW as a frame — frame_idx is the row index,
-    * offset the row's first-pixel linear offset, checksum the row's
-    * R+G+B sum. The Spark-side shape (flatMap explode to one row per
-    * sampled frame) is identical to [[sampleFrames]]; only the window
-    * source differs (decoded pixels vs raw bytes). Undecodable payloads
-    * yield no frames.
-    */
-  def sampleImageRows(records: Dataset[MediaRecord],
-                      everyN: Int = 2): Dataset[FrameSample] = {
-    import records.sparkSession.implicits._
-    records.flatMap { r =>
-      val img = decodeImage(r.media_type, r.payload)
-      if (img == null) Seq.empty[FrameSample]
-      else (0 until img.getHeight by everyN).map { y =>
-        var sum = 0L
-        var x = 0
-        while (x < img.getWidth) {
-          val rgb = img.getRGB(x, y)
-          sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-          x += 1
-        }
-        FrameSample(r.doc_id, y, y * img.getWidth, sum)
       }
     }
   }

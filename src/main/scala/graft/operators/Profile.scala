@@ -178,7 +178,7 @@ object Profile {
     *
     * 100 TB: one partial-aggregatable count shuffle; everything after
     * operates on the key-count table. This report IS the decision
-    * input for `Skew.saltedAgg`'s factor.
+    * input for `Skew.saltedCountSum`'s factor.
     */
   def skewReport(df: DataFrame, key: Column, k: Int = 10,
                  targetPerKey: Long = 64): DataFrame = {

@@ -23,14 +23,11 @@ object Sampling {
   def hashBucket(id: Column, buckets: Int = 100): Column =
     hash(id).cast("bigint").bitwiseAND(lit(4294967295L)) % buckets
 
-  /** Keep rows whose hash bucket falls below `pct` (a pct% sample). */
-  def hashSample(df: DataFrame, id: Column, pct: Int,
-                 buckets: Int = 100): DataFrame =
-    df.filter(hashBucket(id, buckets) < pct)
-
-  /** Stratified variant: per-stratum rates (e.g. oversample a rare
-    * language), `defaultPct` elsewhere. `rates` is evaluated as a
-    * chained when/otherwise — strata count is expected to be small.
+  /** Keep rows whose hash bucket falls below their stratum's rate:
+    * per-stratum rates (e.g. oversample a rare language), `defaultPct`
+    * elsewhere. `rates` is evaluated as a chained when/otherwise —
+    * strata count is expected to be small. With no `rates` this is the
+    * plain `defaultPct`% sample.
     */
   def stratifiedHashSample(df: DataFrame, id: Column, stratum: Column,
                            rates: Seq[(String, Int)], defaultPct: Int,

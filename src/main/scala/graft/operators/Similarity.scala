@@ -484,7 +484,7 @@ object Similarity {
     * Each candidate joins its nearest center's cell, each query probes
     * its `nProbe` nearest cells and brute-forces within them.
     *
-    * Versus a trained codebook ([[ivfTopKTrained]]): every step — hash
+    * Versus a trained codebook ([[ivfTopKTrainedWith]]): every step — hash
     * sample, cosine argmax, probe ranking — is plain relational algebra,
     * so the DuckDB oracle replays the whole operator bit-exactly
     * (RecallSpec floors its recall). Cosines are floor-rounded to 1e-6
@@ -680,6 +680,31 @@ object Similarity {
       .agg(Exact.round6(sum(q) / count(lit(1))).as("centroid_val"))
   }
 
+  /** Final assignment against an already-fitted codebook (the
+    * local `Seq` [[kMeansFitSeq]] returns): one row per vector,
+    * `(vec_id, cell, cosine)`, each vector electing its nearest final
+    * centroid scan-side (see [[kMeansFitSeq]]). One fit can label many
+    * corpora, and session callers memoize the fit across queries (the
+    * x67b/x70 merge-table pattern: the fit's per-round elections are
+    * eager Spark actions plan caching cannot deduplicate; the k·dim
+    * Seq can be shared).
+    */
+  def kMeansAssignWith(emb: DataFrame, vecCol: String, idCol: String,
+                       cb: Seq[(Long, Seq[Double])]): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val c = graft.Caches.persistOnce(
+      emb.select(col(idCol).as("vec_id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")))
+    c.crossJoin(cbArray(cb.toDF("cell", "centroid")))
+      .withColumn("m", array_min(cellRanking(col("v"))))
+      .select(col("vec_id"), col("m").getField("cell").as("cell"),
+        when(col("m").getField("neg") === lit(Double.MaxValue),
+            lit(null).cast("double"))
+          .otherwise(-col("m").getField("neg")).as("cosine"))
+  }
+
   /** Distributed Lloyd k-means over the embedding column — the real
     * iterative fit behind the sampled-codebook stand-ins ([[ivfTopKSampled]]
     * / [[semanticDedup]] use a hash-min sample precisely because a
@@ -699,12 +724,13 @@ object Similarity {
     * the sum uses ≤ 26 mantissa bits and is accumulation-order-
     * independent; the mean is floor-rounded to 1e-6). Cells that lose
     * every member keep their previous centroid — deterministic, no
-    * respawn heuristic. After `iters` updates the corpus is assigned
-    * once more against the final codebook; the result is one row per
-    * vector: `(vec_id, cell, cosine)` with cosine the 1e-6-floored
-    * similarity to its final centroid (null for zero-norm vectors,
-    * which rank last in every election — same null discipline as the
-    * ANN family).
+    * respawn heuristic. The fit returns the codebook after `iters`
+    * updates as a local `Seq`, `(cell, centroid)` rows in cell order —
+    * the memoizable form; [[kMeansAssignWith]] assigns a corpus against
+    * it: one row per vector, `(vec_id, cell, cosine)` with cosine the
+    * 1e-6-floored similarity to its final centroid (null for zero-norm
+    * vectors, which rank last in every election — same null discipline
+    * as the ANN family).
     *
     * Every step is relational and bit-deterministic, so the FULL fit —
     * sample, k elections, k mean updates — replays in the DuckDB oracle
@@ -717,38 +743,6 @@ object Similarity {
     * [[MaxCodebookEntries]] — the same "learned vocabulary on the
     * driver" shape as the BPE merge table), so each round's plan starts
     * from literals instead of a growing lineage chain.
-    */
-  def kMeans(emb: DataFrame, vecCol: String, idCol: String,
-             k: Int = 8, iters: Int = 2): DataFrame =
-    kMeansAssignWith(emb, vecCol, idCol,
-      kMeansFitSeq(emb, vecCol, idCol, k, iters))
-
-  /** Final-assignment half of [[kMeans]], given an already-fitted
-    * codebook (the driver-state form [[kMeansFitSeq]] returns) — so one
-    * fit can label many corpora, and session callers can memoize the
-    * fit across queries (the x67b/x70 merge-table pattern: the fit's
-    * per-round elections are eager driver actions plan caching cannot
-    * deduplicate; the k·dim Seq can be shared).
-    */
-  def kMeansAssignWith(emb: DataFrame, vecCol: String, idCol: String,
-                       cb: Seq[(Long, Seq[Double])]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    GraftFunctions.register(spark)
-    val c = graft.Caches.persistOnce(
-      emb.select(col(idCol).as("vec_id"),
-        transform(col(vecCol), x => x.cast("double")).as("v")))
-    c.crossJoin(cbArray(cb.toDF("cell", "centroid")))
-      .withColumn("m", array_min(cellRanking(col("v"))))
-      .select(col("vec_id"), col("m").getField("cell").as("cell"),
-        when(col("m").getField("neg") === lit(Double.MaxValue),
-            lit(null).cast("double"))
-          .otherwise(-col("m").getField("neg")).as("cosine"))
-  }
-
-  /** The Lloyd fit alone, as driver state: `(cell, centroid)` rows in
-    * cell order — the memoizable form (see [[kMeansAssignWith]]). See
-    * [[kMeans]] for the algorithm and the 100 TB analysis.
     */
   def kMeansFitSeq(emb: DataFrame, vecCol: String, idCol: String,
                    k: Int, iters: Int): Seq[(Long, Seq[Double])] = {
@@ -796,8 +790,8 @@ object Similarity {
 
   /** IVF ANN over a TRAINED k-means codebook — the composition the
     * sampled-codebook family ([[ivfTopKSampled]]) stands in for when a
-    * fit is unaffordable or unreplayable: now that [[kMeans]]'s fit is
-    * itself exact and SQL-replayable, the full index — train, assign,
+    * fit is unaffordable or unreplayable: now that the [[kMeansFitSeq]]
+    * fit is itself exact and SQL-replayable, the full index — train, assign,
     * probe, re-rank — is oracle-checkable end to end (the round-7
     * note "k-means fit is not SQL-expressible" no longer holds for
     * THIS fit; it held for MLlib's RNG-seeded one).
@@ -811,17 +805,10 @@ object Similarity {
     * assignment + a k·dim-group update); the index build and probe
     * join are the ivfTopKSampled shapes — scan-side assignment, probe
     * join touching nProbe/cells of the index.
-    */
-  def ivfTopKTrained(candidates: DataFrame, queries: DataFrame,
-                     vecCol: String, idCol: String, k: Int,
-                     cells: Int = 8, nProbe: Int = 2,
-                     iters: Int = 2): DataFrame =
-    ivfTopKTrainedWith(candidates, queries, vecCol, idCol, k,
-      kMeansFitSeq(candidates, vecCol, idCol, cells, iters), nProbe)
-
-  /** [[ivfTopKTrained]] with an already-fitted codebook (driver state
-    * from [[kMeansFitSeq]]) — one fit serves both the x71 labeling and
-    * this index, and session callers memoize it across queries.
+    *
+    * The codebook `cb` is the fit as a local `Seq` ([[kMeansFitSeq]],
+    * one row per cell): one fit serves both the x71 labeling and this
+    * index, and session callers memoize it across queries.
     */
   def ivfTopKTrainedWith(candidates: DataFrame, queries: DataFrame,
                          vecCol: String, idCol: String, k: Int,
@@ -901,16 +888,21 @@ object Similarity {
     // shuffled corpus×m×ks exploded rows on (vec_id, sub)
     val cws = broadcast(cw.groupBy("sub")
       .agg(collect_list(struct(col("code"), col("csv"))).as("cws")))
-    def d2Of(sv: org.apache.spark.sql.Column, csv: org.apache.spark.sql.Column) =
-      aggregate(zip_with(sv, csv, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v)
     sub.join(cws, Seq("sub"))
       .withColumn("sel", array_min(transform(col("cws"), w =>
-        struct(Exact.round6(d2Of(col("sv"), w.getField("csv"))).as("d2r"),
+        struct(Exact.round6(l2Sq(col("sv"), w.getField("csv"))).as("d2r"),
           w.getField("code").as("code")))))
       .select(col("vec_id"), col("sub"),
         col("sel.code").as("code"), col("sel.d2r").as("qerr"))
   }
+
+  /** Squared L2 distance of two equal-length double arrays, summed left
+    * to right from 0.0 (the subvector-to-codeword distance of
+    * [[productQuantize]] and [[ivfPqTopK]]'s lookup table).
+    */
+  private def l2Sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0.0), (acc, v) => acc + v)
 
   /** IVF + PQ: the composed billion-vector ANN shape — coarse inverted
     * cells prune the search space ([[ivfTopKSampled]]'s assignment and
@@ -985,9 +977,7 @@ object Similarity {
       .withColumn("w", (size(col("dv")) / m).cast("int"))
       .withColumn("qsv", slice(col("dv"), col("sub") * col("w") + 1, col("w")))
       .select("query_id", "sub", "qsv")
-    val d2 = aggregate(
-      zip_with(col("qsv"), col("csv"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
+    val d2 = l2Sq(col("qsv"), col("csv"))
     val lut = qsub.join(broadcast(cw), Seq("sub"))
       .withColumn("lutv", floor(d2 * grid + lit(0.5)) / grid)
       .select("query_id", "sub", "code", "lutv")

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * At 100 TB a single hot key (empty doc, null-ish id, default value)
   * can pin one reducer for hours; salting bounds any key's partition to
   * 1/saltBuckets of its rows. AQE's skew-join handling covers sort-merge
-  * joins at runtime; salting is the static tool for aggregations and
-  * broadcast-side replication.
+  * joins at runtime; salting is the static tool for aggregations.
   */
 object Skew {
 
@@ -27,19 +26,5 @@ object Skew {
       .agg(count(lit(1)).as("__n"), sum(sumCol).as("__s"))
       .groupBy(keyRefs: _*)
       .agg(sum(col("__n")).as("n"), sum(col("__s")).as(sumName))
-  }
-
-  /** Salted broadcast-replication join for a skewed fact joining a small
-    * dimension: the fact side gets a random-ish salt, the dimension is
-    * exploded once per salt value, and the join key becomes (key, salt)
-    * — no single reducer sees a whole hot key.
-    */
-  def saltedJoinSmall(fact: DataFrame, dim: DataFrame, key: String,
-                      saltBuckets: Int = 16): DataFrame = {
-    val saltedFact = fact.withColumn("__salt",
-      pmod(spark_partition_id() + monotonically_increasing_id(), lit(saltBuckets)).cast("int"))
-    val explodedDim = dim.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    saltedFact.join(explodedDim, Seq(key, "__salt")).drop("__salt")
   }
 }

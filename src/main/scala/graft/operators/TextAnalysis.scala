@@ -117,9 +117,9 @@ object TextAnalysis {
     * (a) counting adjacent token pairs corpus-wide, (b) electing the
     * most frequent pair (count desc, then pair asc), and (c) merging
     * every left-to-right non-overlapping occurrence of that pair into
-    * one token before the next round. Returns the learned merge TABLE —
-    * (step, w1, w2, n_pairs), one row per round, ending early if the
-    * stream runs out of pairs.
+    * one token before the next round. The result is the learned merge
+    * TABLE — one entry per round, ending early if the stream runs out
+    * of pairs.
     *
     * Representation: each doc's token stream is carried as ONE string
     * with a DOUBLED U+001F boundary between tokens (and at both ends).
@@ -150,23 +150,13 @@ object TextAnalysis {
     * election (`limit(1).collect()`) PER merge step — `steps`
     * sequential Spark jobs. Fine at demo/analysis vocabularies
     * (steps ≲ 100); a production 32 k-merge vocabulary would be 32 k
-    * sequential jobs and wants the batched election ([[bpeMergeSeqBatched]]):
-    * elect the top-m pairs per round and apply the maximal mutually
-    * symbol-disjoint ranking prefix — up to m× fewer rounds, with the
-    * exactness argument (and its one tie-break caveat) stated there.
-    */
-  def bpeMergeSequence(docs: DataFrame, textCol: String,
-                       steps: Int = 4): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bpeMergeSeq(docs, textCol, steps).toDF("step", "w1", "w2", "n_pairs")
-  }
-
-  /** The learned merge table of [[bpeMergeSequence]] as driver state --
-    * (step, w1, w2, n_pairs) in learned order. This is the form callers
-    * memoize and share across queries: the loop's per-round elections
-    * are eager driver actions, so plan-level caching cannot deduplicate
-    * a re-learn; the tiny Seq can (see Extensions.bpeMerges).
+    * sequential jobs.
+    *
+    * Returns the table as a local `Seq`, (step, w1, w2, n_pairs) in
+    * learned order: the form callers memoize and share across queries.
+    * The loop's per-round elections are eager Spark actions, so
+    * plan-level caching cannot deduplicate a re-learn; the tiny Seq can
+    * (see Extensions.bpeMerges).
     */
   def bpeMergeSeq(docs: DataFrame, textCol: String,
                   steps: Int = 4): Seq[(Int, String, String, Long)] = {
@@ -222,99 +212,16 @@ object TextAnalysis {
     merges.toSeq
   }
 
-  /** Batched-election BPE learn — the vocabulary-scale path the
-    * [[bpeMergeSeq]] bound note names: per round, ONE driver election
-    * fetches the top-`batch` pairs and applies the maximal RANKING
-    * PREFIX that is mutually symbol-disjoint, stopping at the FIRST
-    * conflict (not skip-and-continue — a skipped conflicting pair's
-    * count may survive the earlier merge untouched, in which case true
-    * sequential BPE would elect IT next, so skipping past it would
-    * reorder the vocabulary). Up to `batch`× fewer sequential jobs:
-    * 32 k merges at batch=64 is ~500 rounds, not 32 k.
-    *
-    * Exactness: symbol-disjoint merges cannot change each other's
-    * counts, merging never increases any existing pair's count, and a
-    * pair newly created by merge (a,b) has count ≤ count(a,b), so every
-    * applied electee still dominates everything below it — the batched
-    * table equals the sequential one except when such a new pair TIES a
-    * later electee's count and wins the lexicographic tie-break
-    * (adversarial corpora only; equality at this corpus is pinned in
-    * BpeBatchSpec). The applied prefix inherits the sequential
-    * tie-break order, and disjoint merges commute, so intra-round
-    * apply order is immaterial.
-    */
-  def bpeMergeSeqBatched(docs: DataFrame, textCol: String,
-                         steps: Int = 4, batch: Int = 8): Seq[(Int, String, String, Long)] = {
-    require(steps >= 1, "steps must be >= 1")
-    require(batch >= 1, "batch must be >= 1")
-    val bb = "\u001f\u001f"
-    def pairCounts(stream: DataFrame): DataFrame = {
-      val arr = split(col("stream"), bb)
-      stream.select(slice(arr, lit(2), size(arr) - 2).as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(explode(zip_with(
-          slice(col("ws"), lit(1), size(col("ws")) - 1),
-          slice(col("ws"), lit(2), size(col("ws")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-        .select(col("p.w1"), col("p.w2"))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("n_pairs"))
-    }
-    var cur = docs
-      .select(concat(lit(bb), array_join(tokens(col(textCol)), bb), lit(bb))
-        .as("stream"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    while (merges.size < steps && !exhausted) {
-      val top = pairCounts(cur)
-        .orderBy(col("n_pairs").desc, col("w1"), col("w2"))
-        .limit(batch).collect()
-      if (prev != null) prev.unpersist()
-      prev = null
-      if (top.isEmpty) exhausted = true
-      else {
-        // maximal mutually-disjoint ranking prefix, capped at the
-        // remaining step budget
-        val used = scala.collection.mutable.Set.empty[String]
-        val applied = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var i = 0
-        var stop = false
-        while (i < top.length && !stop && merges.size + applied.size < steps) {
-          val r = top(i)
-          val (w1, w2, n) = (r.getString(0), r.getString(1), r.getLong(2))
-          if (used(w1) || used(w2)) stop = true
-          else { applied += ((w1, w2, n)); used += w1; used += w2 }
-          i += 1
-        }
-        applied.foreach { case (w1, w2, n) =>
-          merges += ((merges.size + 1, w1, w2, n))
-        }
-        if (merges.size < steps) {
-          val enc = applied.foldLeft(col("stream")) { case (sc, (w1, w2, _)) =>
-            replace(sc,
-              lit("\u001f" + w1 + bb + w2 + "\u001f"),
-              lit("\u001f" + w1 + " " + w2 + "\u001f"))
-          }
-          val next = cur.select(enc.as("stream"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prev = cur
-          cur = next
-        }
-      }
-    }
-    if (prev != null) prev.unpersist()
-    cur.unpersist()
-    merges.toSeq
-  }
-
   /** TOKENIZE with a learned BPE vocabulary — the application half of
-    * [[bpeMergeSequence]]'s induction (learn once, encode every shard
+    * [[bpeMergeSeq]]'s induction (learn once, encode every shard
     * forever): rebuild each document's doubled-boundary token stream
     * and apply the `merges` list IN LEARNED ORDER as the same
     * boundary-anchored literal replaces the induction used, so the
     * encoded stream is exactly the state the learner's corpus stream
-    * would reach (BpeEncodeSpec pins that equality). Returns one row
+    * would reach (BpeEncodeSpec pins that equality). Unlike the
+    * learner's loop (which never applies the LAST elected merge — it
+    * only needs the stream for the NEXT election), encoding applies
+    * every merge it is given, the final one included. Returns one row
     * per document: post-merge token count, how many tokens are merged
     * units (they keep an interior space), and an md5 of the encoded
     * stream (the cross-engine witness that the whole chain — not just
@@ -342,20 +249,6 @@ object TextAnalysis {
         size(inner).as("n_tokens"),
         size(filter(inner, t => t.contains(" "))).as("n_merged"),
         md5(col("stream")).as("enc_md5"))
-  }
-
-  /** Learn `steps` BPE merges on `docs` ([[bpeMergeSequence]]) and
-    * encode the same corpus with them ([[bpeEncodeWith]]) — the
-    * self-tokenizing shape pipelines use when inducing a vocabulary
-    * and materializing the tokenized corpus in one job. Unlike the
-    * learner's loop (which never applies the LAST elected merge — it
-    * only needs the stream for the NEXT election), encoding applies
-    * every learned merge including the final one.
-    */
-  def bpeEncode(docs: DataFrame, textCol: String, idCol: String,
-                steps: Int = 4): DataFrame = {
-    val learned = bpeMergeSeq(docs, textCol, steps).map(m => (m._2, m._3))
-    bpeEncodeWith(docs, textCol, idCol, learned)
   }
 
   /** Content fingerprints: an md5 of the normalized text (cross-engine
@@ -453,8 +346,7 @@ object TextAnalysis {
     * two engines' ln can differ in the last ulp and flip a ranking
     * tie, so the exposed operator uses the rational variant whose
     * every score is one IEEE division of two exact integers
-    * (bit-deterministic across engines); `tfIdfLog` keeps the ln
-    * formulation for callers who want textbook weights.
+    * (bit-deterministic across engines).
     *
     * 100 TB: one explode + two partial-aggregatable shuffles (term
     * frequency keyed on (doc, token); document frequency is a second
@@ -532,30 +424,6 @@ object TextAnalysis {
       .withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= k)
       .select("cell", "rk", "term", "n_tc", "lift")
-  }
-
-  /** Textbook TF-IDF weights (tf · ln((N+1)/(df+1)) + smoothing) —
-    * JVM-side only; rankings agree with [[tfIdf]] wherever ln ordering
-    * and rational ordering coincide (PipelinePrepSpec pins both the
-    * agreement and the documented divergence case).
-    */
-  def tfIdfLog(docs: DataFrame, textCol: String, idCol: String,
-               k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("doc_id"),
-      explode(tokens(col(textCol))).as("token"))
-    val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val n = docs.count() // driver scalar: one count job over the id column
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("score").desc, col("token"))
-    // shuffle_hash on the vocabulary-sized df table — see tfIdf.
-    tf.join(dfreq.hint("shuffle_hash"), "token")
-      .withColumn("score",
-        col("tf") * (log((lit(n) + 1).cast("double") / (col("df") + 1)) + 1))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select("doc_id", "rank", "token", "tf", "df", "score")
   }
 
   /** BM25 document ranking against a fixed query term set — the

@@ -639,8 +639,7 @@ object Extensions {
     // Z-order (Morton) write-layout clustering on the events table:
     // (user_id, epoch-day) interleaved, the two-predicate pruning key.
     // The query emits the deterministic z-value + a fixed-width z-shard
-    // (zval >> 24); the sampling-dependent repartitionByRange half of
-    // zOrderLayout is the write path, plan-pinned in LayoutSpec.
+    // (zval >> 24).
     "x75_zorder" -> ((s, dir) => {
       val ev = T.events(s, dir)
       ev.withColumn("epoch_day",
@@ -658,7 +657,7 @@ object Extensions {
     // epoch-day) domain and shard harness; the index is the codegen'd
     // HilbertIndex2D expression, replayed by the oracle as staged
     // per-level CTEs (HilbertSql). Locality vs Z-order measured in
-    // LayoutSpec (per-shard bounding boxes).
+    // Round10cOpsSpec (per-shard bounding boxes).
     "x108_hilbert" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val ev = T.events(s, dir)
@@ -1358,7 +1357,7 @@ object Extensions {
     // Key-skew diagnosis on the documents language key: per-key counts,
     // integer log2 buckets, quantized shares, and the salting factor
     // that bounds the heaviest reducer at 64 rows — the decision input
-    // for Skew.saltedAgg's factor.
+    // for Skew.saltedCountSum's factor.
     "x79_skew_report" -> ((s, dir) =>
       graft.operators.Profile.skewReport(T.documents(s, dir), col("lang"),
           k = 10, targetPerKey = 64)

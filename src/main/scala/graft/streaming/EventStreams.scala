@@ -171,21 +171,32 @@ object EventStreams {
         (col("dst_ts").cast("long") - col("src_ts").cast("long")).as("lag_seconds"))
   }
 
+  /** [[intervalJoinOuter]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def intervalJoinOuterStream(left: DataFrame, right: DataFrame,
                               within: String = "30 minutes",
                               watermark: String = "1 hour"): DataFrame =
     intervalJoinOuter(left.withWatermark("ts", watermark),
       right.withWatermark("ts", watermark), within)
 
-  /** Streaming wrappers: identical transforms with a watermark bound. */
+  /** [[tumblingCounts]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def tumblingCountsStream(events: DataFrame, width: String = "1 hour",
                            watermark: String = "2 hours"): DataFrame =
     tumblingCounts(events.withWatermark("ts", watermark), width)
 
+  /** [[sessionize]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def sessionizeStream(events: DataFrame, gap: String = "10 minutes",
                        watermark: String = "30 minutes"): DataFrame =
     sessionize(events.withWatermark("ts", watermark), gap)
 
+  /** [[intervalJoin]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def intervalJoinStream(left: DataFrame, right: DataFrame,
                          within: String = "30 minutes",
                          watermark: String = "1 hour"): DataFrame =
@@ -213,6 +224,9 @@ object EventStreams {
       .select(col("w.start").as("w_start"), col("c_mktsegment"),
         col("event_type"), col("n"))
 
+  /** [[enrichedSegmentCounts]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def enrichedSegmentCountsStream(events: DataFrame, customer: DataFrame,
                                   width: String = "1 hour",
                                   watermark: String = "2 hours"): DataFrame =
@@ -223,7 +237,8 @@ object EventStreams {
     * the watermark (bounded state — the property that makes streaming
     * dedup viable at scale). Equals batch [[firstEvents]] (min-ts) when
     * the stream arrives in event-time order; EventStreamsSpec certifies
-    * that equivalence.
+    * that equivalence. Streaming floor: no query calls it; it stays for
+    * that certification.
     */
   def firstEventsStream(events: DataFrame,
                         watermark: String = "1 hour"): DataFrame =
@@ -251,6 +266,9 @@ object EventStreams {
       .select(col("w.start").as("w_start"), col("event_type"),
         col("bucket"), col("c"))
 
+  /** [[windowValueSketch]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def windowValueSketchStream(events: DataFrame, width: String = "1 hour",
                               grid: Double = 5.0,
                               watermark: String = "2 hours"): DataFrame =
@@ -281,6 +299,9 @@ object EventStreams {
         col("hll_bucket"), col("mj"))
   }
 
+  /** [[windowDistinctSketch]] over a watermarked stream. Streaming floor: no query
+    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
+    * result equal to the batch form. */
   def windowDistinctSketchStream(events: DataFrame, width: String = "1 hour",
                                  p: Int = graft.operators.Sketches.HllP,
                                  watermark: String = "2 hours"): DataFrame =

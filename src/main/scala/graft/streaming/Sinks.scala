@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB: one directory per micro-batch is the standard streaming-
   * ingest layout (compaction is a downstream batch job —
-  * [[compactCommitted]]); the manifest
+  * [[compactIncremental]]); the manifest
   * is O(batches) empty files, listable in one RPC per poll. On object
   * stores without atomic directory rename, pair this with a cloud
   * committer for the data write — the marker commit is a single-file
@@ -93,9 +93,9 @@ object Sinks {
       System.currentTimeMillis() - st.getModificationTime < staleMs
     }
 
-  /** Housekeeping shared by both GCs: drop stale leases (crashed
-    * holders) and leases whose cut is already manifested (committed,
-    * crashed before release — the work is durable, the lease is dead).
+  /** GC housekeeping: drop stale leases (crashed holders) and leases
+    * whose cut is already manifested (committed, crashed before
+    * release — the work is durable, the lease is dead).
     */
   private def sweepLeases(hfs: org.apache.hadoop.fs.FileSystem,
                           dir: Path, manifested: Set[Long],
@@ -112,6 +112,10 @@ object Sinks {
     * Pass as `.writeStream.foreachBatch(Sinks.exactlyOnceParquet(dir) _)`
     * with a `checkpointLocation` — the checkpoint provides replay, this
     * sink provides idempotence; exactly-once is the pair.
+    *
+    * Streaming floor: no query calls the sink; it stays because
+    * SinksSpec drives st20's stream through it to hold the committed
+    * view equal to the batch report across crashes and restarts.
     */
   def exactlyOnceParquet(outDir: String)(df: DataFrame, batchId: Long): Unit = {
     val spark = df.sparkSession
@@ -151,7 +155,8 @@ object Sinks {
 
   /** The exactly-once view: union of manifest-committed batch
     * directories only — a batch directory without its marker (crash
-    * mid-write) is invisible until its replay commits it.
+    * mid-write) is invisible until its replay commits it. Streaming
+    * floor: read only by SinksSpec and the compacted view below.
     */
   def readCommitted(spark: SparkSession, outDir: String): DataFrame = {
     val ids = committedBatches(spark, outDir).toSeq.sorted
@@ -159,220 +164,14 @@ object Sinks {
     spark.read.parquet(ids.map(id => s"$outDir/data/batch_id=$id"): _*)
   }
 
-  /** Partition directory key a compaction snapshot is laid out by;
-    * dropped again on read, so the compacted view's schema equals the
-    * sink's.
+  /** Partition directory key a compaction version is laid out by;
+    * never read back, so the compacted view's schema equals the sink's.
     */
   private[streaming] val CompactPartCol = "__part"
 
-  /** Batch id the latest compaction snapshot covers through (None
-    * before the first compaction). Same all-digit-name discipline as
-    * [[committedBatches]].
-    */
-  def latestCompaction(spark: SparkSession, targetDir: String): Option[Long] = {
-    val hfs = fs(spark, targetDir)
-    val dir = new Path(s"$targetDir/_manifests")
-    if (!hfs.exists(dir)) None
-    else hfs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.matches("\\d+")).map(_.toLong)
-      .reduceOption(_ max _)
-  }
-
-  /** The downstream compaction job [[exactlyOnceParquet]]'s scaladoc
-    * defers: rewrite every manifest-committed `batch_id=` partition
-    * into ONE partitioned snapshot (typically date-partitioned — pass
-    * `to_date(col("ts"))` — so readers prune on time instead of
-    * listing O(batches) micro-batch directories), committed by an
-    * atomic manifest swap.
-    *
-    * Restart-safety is the sink's own discipline, one level up:
-    *   snapshots/<cut>/__part=<v>/...parquet  (cut = max batch id covered)
-    *   _manifests/<cut>                       (empty marker; atomic create)
-    * The snapshot directory is keyed by `cut`, so a re-run after a
-    * crash mid-compaction overwrites it deterministically and then
-    * commits the same marker — convergent; a snapshot without its
-    * manifest is invisible to readers (they fall back to the previous
-    * manifest, or to the raw committed view before the first one), so
-    * a crash mid-compaction never degrades readability. Source batch
-    * directories are retained (they are the recovery input and the
-    * incremental tail); orphaned manifest-less snapshot directories
-    * are dead and GC-able.
-    *
-    * 100 TB: the swap is a single-file atomic create (object-store
-    * safe); readers of an old snapshot keep a consistent view while a
-    * new one builds (nothing is rewritten in place). This job REWRITES
-    * the full committed history per run (its read side is bounded:
-    * previous snapshot + post-cut batches); when the rewrite volume is
-    * the problem, use [[compactIncremental]] — the partition-granular
-    * bounded-rewrite variant. The file-granular design (a Delta/
-    * Iceberg log) stays out of scope.
-    *
-    * Returns the cut compacted through (None when nothing is
-    * committed); already-compacted-through-cut re-runs are no-ops.
-    */
-  def compactCommitted(spark: SparkSession, outDir: String,
-                       targetDir: String,
-                       partition: org.apache.spark.sql.Column,
-                       leaseStaleMs: Long = LeaseStaleMs): Option[Long] = {
-    val ids = committedBatches(spark, outDir)
-    val prev = latestCompaction(spark, targetDir)
-    if (ids.isEmpty && prev.isEmpty) return None
-    val cut = (ids ++ prev).max
-    val hfs = fs(spark, targetDir)
-    val manifest = new Path(s"$targetDir/_manifests/$cut")
-    if (hfs.exists(manifest)) return Some(cut)
-    // Single-compactor discipline, ENFORCED per cut (not just stated):
-    // a live concurrent compactor on the same cut would race this
-    // run's mode("overwrite") on one directory — the lease makes the
-    // newcomer abort instead (the holder commits identical content).
-    // Compactors on DIFFERENT cuts are convergent by construction:
-    // this run's read-set is pinned to `prev` (the snapshot read below
-    // names `pc` directly, never "the latest"), so a concurrent
-    // commit of a newer manifest cannot change what this run reads,
-    // and readers always resolve the newest manifest.
-    val lease = new Path(s"$targetDir/_leases/$cut")
-    acquireLease(hfs, lease, leaseStaleMs)
-    try {
-      // Build from the latest snapshot plus only the batches PAST its
-      // cut — row-identical to re-reading the full committed prefix (the
-      // snapshot IS batches ≤ prev cut, certified in SinksSpec), but the
-      // read volume stops growing with history and [[gcCompacted]]'s
-      // optional batch-dir GC becomes sound (pre-cut dirs are never
-      // needed again).
-      val rows = prev match {
-        case Some(pc) =>
-          val tail = ids.filter(_ > pc).toSeq.sorted
-          val snap = spark.read.parquet(s"$targetDir/snapshots/$pc")
-            .drop(CompactPartCol)
-          if (tail.isEmpty) snap // cut == pc is returned above; defensive
-          else snap.unionByName(spark.read.parquet(
-            tail.map(id => s"$outDir/data/batch_id=$id"): _*))
-        case None =>
-          spark.read.parquet(
-            ids.toSeq.sorted.map(id => s"$outDir/data/batch_id=$id"): _*)
-      }
-      rows.withColumn(CompactPartCol, partition)
-        .write.mode("overwrite")
-        .partitionBy(CompactPartCol)
-        .parquet(s"$targetDir/snapshots/$cut")
-      hfs.mkdirs(manifest.getParent)
-      if (!hfs.createNewFile(manifest))
-        // Post-write conflict re-check: reachable only through a stale-
-        // lease takeover race. The committed content is input-identical
-        // to ours (same prev + same tail), and our just-finished
-        // overwrite of the SAME keyed dir is what the marker now
-        // commits — log-and-converge.
-        System.err.println(s"[sink] manifest $cut appeared during this " +
-          "run — a concurrent compactor committed the same cut; " +
-          "converging (single-compactor discipline violated upstream)")
-      Some(cut)
-    } finally hfs.delete(lease, false)
-  }
-
-  /** GC for the compacted layout (the job [[compactCommitted]]'s
-    * scaladoc promised): deletes what no retained view can reference.
-    *
-    *  - every manifest-less `snapshots/<cut>` dir — a crashed
-    *    compaction's debris (a re-run keys by the CURRENT max batch
-    *    id, so an old orphan can never be committed);
-    *  - manifested snapshots older than the newest `keepSnapshots`
-    *    (manifest deleted FIRST, so no reader resolves a manifest
-    *    whose data is gone);
-    *  - with `gcBatchDirs`, batch dirs (and their commit markers)
-    *    covered by EVERY retained snapshot (id ≤ the oldest retained
-    *    cut) — sound because [[compactCommitted]] builds from the
-    *    latest snapshot + tail, never the pre-cut prefix. After batch
-    *    GC the RAW [[readCommitted]] view is truncated to the tail by
-    *    design; [[readCompactedView]] remains the complete view.
-    *
-    * A reader of the LATEST view is never broken: the latest snapshot
-    * and all post-cut batch dirs are always retained. `keepSnapshots`
-    * is the protection window for readers pinned to OLDER snapshots —
-    * size it beyond the longest-running reader. A compactor racing
-    * this GC is DETECTED, not assumed away: while any fresh
-    * `_leases/<cut>` exists (an in-flight [[compactCommitted]], this
-    * host or another) the snapshot sweep is skipped for the run — an
-    * in-progress snapshot is manifest-less and would otherwise read
-    * as debris, and the in-flight run's `prev` source snapshot must
-    * outlive it. Batch-dir GC stays safe concurrently (a compactor
-    * reads batches > its prev ≥ the retention floor). Stale leases
-    * (crashed holders) and leases of already-manifested cuts are
-    * swept here.
-    *
-    * Returns (snapshot dirs deleted, batch dirs deleted).
-    */
-  def gcCompacted(spark: SparkSession, outDir: String, targetDir: String,
-                  keepSnapshots: Int = 2,
-                  gcBatchDirs: Boolean = false,
-                  leaseStaleMs: Long = LeaseStaleMs): (Int, Int) = {
-    require(keepSnapshots >= 1, "must retain at least the latest snapshot")
-    val hfs = fs(spark, targetDir)
-    val manifested = {
-      val dir = new Path(s"$targetDir/_manifests")
-      if (!hfs.exists(dir)) Seq.empty[Long]
-      else hfs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.matches("\\d+")).map(_.toLong).toSeq.sorted
-    }
-    val leaseDir = new Path(s"$targetDir/_leases")
-    sweepLeases(hfs, leaseDir, manifested.toSet, leaseStaleMs)
-    val inProgress = anyFreshLease(hfs, leaseDir, leaseStaleMs)
-    if (inProgress)
-      System.err.println("[sink] fresh compaction lease present — " +
-        "skipping the snapshot sweep this run (in-flight compactor)")
-    val retained = manifested.takeRight(keepSnapshots).toSet
-    var snapsDeleted = 0
-    val snapRoot = new Path(s"$targetDir/snapshots")
-    if (!inProgress && hfs.exists(snapRoot))
-      hfs.listStatus(snapRoot).foreach { st =>
-        val name = st.getPath.getName
-        val keep = name.matches("\\d+") && retained.contains(name.toLong)
-        if (!keep) {
-          if (name.matches("\\d+") && manifested.contains(name.toLong))
-            hfs.delete(new Path(s"$targetDir/_manifests/$name"), false)
-          hfs.delete(st.getPath, true)
-          snapsDeleted += 1
-        }
-      }
-    var batchesDeleted = 0
-    if (gcBatchDirs && retained.nonEmpty) {
-      val floor = retained.min
-      val ofs = fs(spark, outDir)
-      committedBatches(spark, outDir).filter(_ <= floor).toSeq.sorted
-        .foreach { id =>
-          // marker first: the tail view never lists an id whose dir is
-          // mid-delete
-          ofs.delete(new Path(s"$outDir/_commits/$id"), false)
-          ofs.delete(new Path(s"$outDir/data/batch_id=$id"), true)
-          batchesDeleted += 1
-        }
-    }
-    (snapsDeleted, batchesDeleted)
-  }
-
-  /** The reader over a compacted sink: the latest manifest-committed
-    * snapshot plus every committed batch directory NEWER than its cut
-    * (the incremental tail) — before the first compaction, exactly
-    * [[readCommitted]]. Equal to [[readCommitted]] at every point in
-    * the compaction lifecycle (certified in SinksSpec, including a
-    * crash mid-compaction).
-    */
-  def readCompactedView(spark: SparkSession, outDir: String,
-                        targetDir: String): DataFrame =
-    latestCompaction(spark, targetDir) match {
-      case None => readCommitted(spark, outDir)
-      case Some(cut) =>
-        val snap = spark.read.parquet(s"$targetDir/snapshots/$cut")
-          .drop(CompactPartCol)
-        val newer = committedBatches(spark, outDir).filter(_ > cut).toSeq.sorted
-        if (newer.isEmpty) snap
-        else snap.unionByName(spark.read.parquet(
-          newer.map(id => s"$outDir/data/batch_id=$id"): _*))
-    }
-
   // ---------------------------------------------------------------------
-  // Partition-granular bounded-rewrite compaction (the middle step
-  // between the full-prefix snapshot job above and a file-granular
-  // Delta/Iceberg log).
+  // Partition-granular bounded-rewrite compaction (the step short of a
+  // file-granular Delta/Iceberg log, which stays out of scope).
   // ---------------------------------------------------------------------
 
   /** Committed incremental-compaction cuts, ascending (empty before the
@@ -447,6 +246,9 @@ object Sinks {
     * strings — the usual compaction grains). The touched-partition set
     * is collected to the driver: it is bounded by the partition grain
     * (dates at 100 TB), never by the data, and fenced below.
+    *
+    * Streaming floor: no query compacts; SinksSpec holds the compacted
+    * view equal to [[readCommitted]] through crashes, races and GC.
     */
   def compactIncremental(spark: SparkSession, outDir: String,
                          targetDir: String,
@@ -535,8 +337,11 @@ object Sinks {
       }
       hfs.mkdirs(marker.getParent)
       if (!hfs.createNewFile(marker))
-        // reachable only through a stale-lease takeover race; content
-        // is input-identical — log-and-converge (see compactCommitted)
+        // Post-write conflict re-check: reachable only through a stale-
+        // lease takeover race. The committed content is input-identical
+        // to ours (same prev + same tail), and our just-finished
+        // overwrite of the SAME keyed dir is what the marker now
+        // commits — log-and-converge.
         System.err.println(s"[sink] pmanifest $cut appeared during this " +
           "run — a concurrent compactor committed the same cut; " +
           "converging (single-compactor discipline violated upstream)")
@@ -549,7 +354,8 @@ object Sinks {
     * latest cut — before the first compaction, exactly
     * [[readCommitted]]. Equal to [[readCommitted]] at every lifecycle
     * point (certified in SinksSpec). Schema equals the sink's (the
-    * partition column is layout-only and never read back).
+    * partition column is layout-only and never read back). Streaming
+    * floor: only SinksSpec reads it.
     */
   def readIncrementalView(spark: SparkSession, outDir: String,
                           targetDir: String): DataFrame =
@@ -569,14 +375,19 @@ object Sinks {
 
   /** GC for the incremental layout. Deletes, in this order:
     *
-    *  - marker-less `pdata/v=` dirs (crashed attempts; while any fresh
-    *    `_pleases/<cut>` exists the pdata sweep is skipped for the run,
-    *    as [[gcCompacted]] — an in-progress version dir is marker-less
-    *    and the in-flight run's source versions must outlive it);
+    *  - marker-less `pdata/v=` dirs (crashed attempts; a re-run
+    *    overwrites its version dir before committing, so deleting one
+    *    loses nothing). A compactor racing this GC is DETECTED, not
+    *    assumed away: while any fresh `_pleases/<cut>` exists (an
+    *    in-flight [[compactIncremental]], this host or another) the
+    *    pdata sweep is skipped for the run — an in-progress version dir
+    *    is marker-less and the in-flight run's source versions must
+    *    outlive it;
     *  - SUPERSEDED partition subdirs: a `v=<v>/__part=<p>` whose p no
     *    longer resolves to v under the newest `keepCuts` manifests
     *    (each older manifest's as-of view is protection for readers
-    *    pinned to it — the keep window mirrors [[gcCompacted]]);
+    *    pinned to it — size `keepCuts` beyond the longest-running
+    *    reader);
     *  - version dirs (and their manifests) left EMPTY by the above —
     *    a manifest may only disappear together with its last data,
     *    since resolution walks manifested version dirs;
@@ -584,6 +395,8 @@ object Sinks {
     *    (sound: [[compactIncremental]] reads only past-cut batches).
     *
     * Returns (partition subdirs deleted, batch dirs deleted).
+    * Streaming floor: only SinksSpec runs it, to show GC never breaks
+    * the compacted view.
     */
   def gcIncremental(spark: SparkSession, outDir: String, targetDir: String,
                     keepCuts: Int = 2,

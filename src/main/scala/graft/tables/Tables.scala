@@ -49,7 +49,9 @@ object Tables {
     * memos alike), and refreshes Spark's cached plans that read there
     * (Spark refreshes them itself only when it wrote the files).
     * Matches whole path segments: invalidating `…/sf0.1` leaves
-    * `…/sf0.15` memoized.
+    * `…/sf0.15` memoized. Release API: no query or main calls it; it
+    * stays for long-lived callers that rewrite tables mid-session, and
+    * SourcesSpec pins it.
     */
   def invalidate(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -110,9 +112,12 @@ object Tables {
     * hash- or shingle-heavy stage runs serially on one core regardless
     * of cluster size. No-op for inputs already at least as wide as the
     * default parallelism — at scale the scan has thousands of splits and
-    * this adds nothing. The `.rdd` probe converts the plan once per
-    * DataFrame instance (driver-side milliseconds); a files peek cannot
-    * see the real scan-task count.
+    * this adds nothing. The `.rdd` probe reads the scan-task count,
+    * which a files peek cannot see. It is cheap (milliseconds of
+    * planning) only on a bare scan, which is what every caller
+    * passes: on a frame with an exchange, `.rdd` plans the frame
+    * adaptively and runs its upstream stages once for the probe, and
+    * the repartitioned frame re-runs them in its own execution.
     */
   def spread(df: DataFrame): DataFrame = {
     // Streaming frames can't be probed (.rdd is a batch-only

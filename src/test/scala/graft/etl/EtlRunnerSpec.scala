@@ -109,6 +109,61 @@ class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(jobs <= 4, "Spark jobs in one run")
   }
 
+  test("a not-null gate on a renamed and a nullable column counts from the cache, " +
+       "not the CSV, and reports under the configured names") {
+    val base = ReferenceJob.config(input().toString, freshOut())
+    // `precio` is renamed to `precio_origen`; `transporte` is nullable, so
+    // the gate cannot be skipped and its count runs
+    val conf = base.copy(quality = base.quality.copy(notNullColumns = Seq("precio", "transporte")))
+    val (run, lines) = EtlProbes.logged(EtlProbes.csvScans(spark)(EtlRunner.run(spark, conf)))
+    val (report, scans) = run.get
+    assert(scans === 1, "SQL executions that scan the CSV input")
+    assert(report.outputGate === Seq(
+      DataQuality.CheckResult("not_null(precio)", true,
+        "La columna 'precio' no contiene valores nulos.", Some(0L)),
+      DataQuality.CheckResult("not_null(transporte)", true,
+        "La columna 'transporte' no contiene valores nulos.", Some(0L))))
+    assert(report.written.contains(s"${conf.output.basePath}/PROD") && report.rowsOut === 6L)
+    assert(lines === Seq(
+      s"INFO | read_data | Datos cargados exitosamente desde: ${conf.input.path}",
+      "INFO | data_quality_input | Ejecutando Comprobación de Calidad de Datos...",
+      "INFO | data_quality_input | [DQ INPUT APROBADA] Conteo de filas: 11",
+      "INFO | data_quality_input | [DQ INPUT APROBADA] Todas las columnas requeridas están presentes",
+      "INFO | transform_data | Eliminando registros duplicados...",
+      "INFO | transform_data | Aplicando Filtros...",
+      "INFO | date_filter | Filtro fecha >>> OK",
+      "INFO | country_filter | Filtro pais >>> OK",
+      "INFO | delivery_filter | Filtro tipo entrega >>> OK",
+      "INFO | transform_data | Registros originales: 11 | Registros filtrados: 6",
+      "INFO | derived_cols | Columnas derivadas de tipo entrega >>> OK",
+      "INFO | fix_nulls | Rellenado valores nulos >>> OK",
+      "INFO | treatment_units | Unidad, cantidad y precio ajustadas >>> OK",
+      "INFO | rename_and_order_cols | Renombrado: 'precio' a 'precio_origen'",
+      "INFO | rename_and_order_cols | Renombrado: 'cantidad' a 'cantidad_origen'",
+      "INFO | rename_and_order_cols | Renombrado: 'unidad' a 'unidad_origen'",
+      "INFO | rename_and_order_cols | Renombrado y ordenamiento de columnas >>> OK",
+      "INFO | data_quality_output | [DQ OUTPUT APROBADA]: La columna 'precio' no contiene valores nulos.",
+      "INFO | data_quality_output | [DQ OUTPUT APROBADA]: La columna 'transporte' no contiene valores nulos.",
+      s"INFO | write_data | Escribiendo datos en: ${conf.output.basePath}/PROD",
+      "INFO | write_data | Escritura exitosa."))
+  }
+
+  test("a failing not-null gate on a renamed column counts each column from the cache") {
+    val dir = input()
+    // a kept row with a null `transporte`: the per-column counts run too
+    Files.write(dir.resolve("c.csv"), Seq(header, "GT,20250513,,100,Z05,M9,1.0,1.0,ST").asJava)
+    val base = ReferenceJob.config(dir.toString, freshOut())
+    val conf = base.copy(quality = base.quality.copy(notNullColumns = Seq("precio", "transporte")))
+    val (report, scans) = EtlProbes.csvScans(spark)(EtlRunner.run(spark, conf))
+    assert(scans === 1, "SQL executions that scan the CSV input")
+    assert(report.outputGate === Seq(
+      DataQuality.CheckResult("not_null(precio)", true,
+        "La columna 'precio' no contiene valores nulos.", Some(0L)),
+      DataQuality.CheckResult("not_null(transporte)", false,
+        "La columna 'transporte' contiene 1 valores nulos.", Some(1L))))
+    assert(report.written.isEmpty && report.rowsOut === 7L)
+  }
+
   test("the observed counts equal plain counts under AQE on/off and 1 or 7 shuffle partitions") {
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val prev = keys.map(spark.conf.get)

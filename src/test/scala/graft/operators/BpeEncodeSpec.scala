@@ -1,10 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** Pins for BPE encoding (x70) — applying a learned merge table to a
-  * corpus ([[TextAnalysis.bpeEncodeWith]] / [[TextAnalysis.bpeEncode]]):
+  * corpus ([[TextAnalysis.bpeEncodeWith]] over [[TextAnalysis.bpeMergeSeq]]):
   * the encoded stream equals the learner's own stream state, ALL merges
   * are applied (the learner never applies its last election), counts
   * and the md5 witness are exact, and the encode plan is one scan-side
@@ -16,6 +17,15 @@ class BpeEncodeSpec extends SparkTestBase {
   private val B = "\u001f"
   private val BB = B + B
 
+  /** Learn `steps` merges on `docs` and encode the same corpus with them. */
+  private def bpeEncode(docs: DataFrame, steps: Int): DataFrame =
+    TextAnalysis.bpeEncodeWith(docs, "text", "doc_id",
+      TextAnalysis.bpeMergeSeq(docs, "text", steps).map(m => (m._2, m._3)))
+
+  /** The learned merge table, one row per step. */
+  private def bpeMergeSequence(docs: DataFrame, steps: Int): DataFrame =
+    TextAnalysis.bpeMergeSeq(docs, "text", steps).toDF("step", "w1", "w2", "n_pairs")
+
   test("hand-checked corpus: merges apply in learned order, counts and " +
        "merged-unit tallies are exact") {
     // corpus: "a b" dominates (4 pairs), then "a b c" (merged-token pair)
@@ -25,11 +35,11 @@ class BpeEncodeSpec extends SparkTestBase {
       (3L, "a b x"),
       (4L, "a b")).toDF("doc_id", "text")
     // learned merges at steps=2: step1 = (a,b) n=4; step2 = ("a b", c) n=2
-    val merges = TextAnalysis.bpeMergeSequence(docs, "text", steps = 2)
+    val merges = bpeMergeSequence(docs, steps = 2)
       .orderBy("step").collect()
       .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(merges === Seq(("a", "b", 4L), ("a b", "c", 2L)))
-    val got = TextAnalysis.bpeEncode(docs, "text", "doc_id", steps = 2)
+    val got = bpeEncode(docs, steps = 2)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3)))
     // doc1/doc2: "a b c" → ["a b c"]: 1 token, 1 merged unit
@@ -47,7 +57,7 @@ class BpeEncodeSpec extends SparkTestBase {
     val docs = Seq((1L, "p q p q")).toDF("doc_id", "text")
     // steps=1: one merge (p,q) learned; without applying it the stream
     // would still be 4 tokens — encoded must be 2 merged tokens
-    val got = TextAnalysis.bpeEncode(docs, "text", "doc_id", steps = 1)
+    val got = bpeEncode(docs, steps = 1)
       .collect().map(r => (r.getInt(1), r.getInt(2))).head
     assert(got === ((2, 2)), s"last merge not applied: $got")
   }
@@ -58,7 +68,7 @@ class BpeEncodeSpec extends SparkTestBase {
       (1L, "the cat sat on the mat"),
       (2L, "the cat ran"),
       (3L, "a dog sat on the cat")).toDF("doc_id", "text")
-    val learned = TextAnalysis.bpeMergeSequence(docs, "text", steps = 3)
+    val learned = bpeMergeSequence(docs, steps = 3)
       .orderBy("step").collect().map(r => (r.getString(1), r.getString(2))).toSeq
     // manual replay of the doubled-boundary stream for doc 1
     def streamOf(text: String): String =
@@ -69,7 +79,7 @@ class BpeEncodeSpec extends SparkTestBase {
     }
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(replayed.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val got = TextAnalysis.bpeEncode(docs, "text", "doc_id", steps = 3)
+    val got = bpeEncode(docs, steps = 3)
       .filter(col("doc_id") === 1).collect().head
     assert(got.getString(3) === md, "encoded stream md5 != manual replay")
     val inner = replayed.split(BB).drop(1).dropRight(0)
@@ -83,7 +93,7 @@ class BpeEncodeSpec extends SparkTestBase {
   test("degenerate docs: empty text and single-token text encode without " +
        "merges; empty corpus learns an empty table") {
     val docs = Seq((1L, ""), (2L, "solo")).toDF("doc_id", "text")
-    val got = TextAnalysis.bpeEncode(docs, "text", "doc_id", steps = 2)
+    val got = bpeEncode(docs, steps = 2)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
     // "" tokenizes to one empty token (split semantics), "solo" to one

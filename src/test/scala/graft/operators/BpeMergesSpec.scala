@@ -10,7 +10,8 @@ class BpeMergesSpec extends SparkTestBase {
   import spark.implicits._
 
   private def merges(docs: Seq[(Long, String)], steps: Int): List[(Int, String, String, Long)] =
-    TextAnalysis.bpeMergeSequence(docs.toDF("doc_id", "text"), "text", steps)
+    TextAnalysis.bpeMergeSeq(docs.toDF("doc_id", "text"), "text", steps)
+      .toDF("step", "w1", "w2", "n_pairs")
       .orderBy("step")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toList

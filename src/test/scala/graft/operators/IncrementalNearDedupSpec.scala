@@ -1,11 +1,19 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
-/** x66 nearDedupAgainst: batch-vs-history near-dup semantics. */
+/** x66 nearDedupAgainstSigs: batch-vs-history near-dup semantics. */
 class IncrementalNearDedupSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Batch survivors against `hist`, over persisted signatures of each. */
+  private def nearDedupAgainst(batch: DataFrame, hist: DataFrame): DataFrame =
+    Dedup.nearDedupAgainstSigs(batch, "doc_id",
+      graft.Caches.persistOnce(Dedup.minhashSignatures(batch, "text", "doc_id")),
+      graft.Caches.persistOnce(Dedup.minhashSignatures(hist, "text", "doc_id")),
+      numHashes = 16, bands = 8, minEstimate = 0.2)
 
   private val base = "the quick brown fox jumps over the lazy dog " +
     "while the bright summer sun warms the quiet meadow near the river"
@@ -23,7 +31,7 @@ class IncrementalNearDedupSpec extends SparkTestBase {
       // near-dup of 12 within batch → dominated by the smaller id
       (14L, "tiny doc"))                         // < 3 words: no shingles → survives
       .toDF("doc_id", "text")
-    val kept = Dedup.nearDedupAgainst(batch, hist, "text", "doc_id")
+    val kept = nearDedupAgainst(batch, hist)
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(12L, 14L),
       s"expected {12 survivor, 14 shingle-less}, got $kept")
@@ -34,10 +42,10 @@ class IncrementalNearDedupSpec extends SparkTestBase {
         "unrelated to anything above in this little corpus"))
       .toDF("doc_id", "text")
     val emptyHist = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val kept = Dedup.nearDedupAgainst(batch, emptyHist, "text", "doc_id")
+    val kept = nearDedupAgainst(batch, emptyHist)
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 3L))
-    val emptyBatch = Dedup.nearDedupAgainst(emptyHist, batch, "text", "doc_id")
+    val emptyBatch = nearDedupAgainst(emptyHist, batch)
     assert(emptyBatch.count() === 0)
   }
 
@@ -47,9 +55,9 @@ class IncrementalNearDedupSpec extends SparkTestBase {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val q = Dedup.nearDedupAgainst(
+      val q = nearDedupAgainst(
         docs.filter(pmod(col("doc_id"), lit(10)) >= 8),
-        docs.filter(pmod(col("doc_id"), lit(10)) < 8), "text", "doc_id")
+        docs.filter(pmod(col("doc_id"), lit(10)) < 8))
       // Both candidate joins must have a batch-derived side: the batch
       // filter (doc_id % 10) >= 8 appears under every shuffle-hash join.
       val joins = q.queryExecution.executedPlan.collect {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.tables.{Tables => T}
@@ -16,11 +17,16 @@ class KMeansSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The x71 shape: a Lloyd fit, then the corpus assigned against it. */
+  private def kMeans(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    Similarity.kMeansAssignWith(emb, "embedding", "vec_id",
+      Similarity.kMeansFitSeq(emb, "embedding", "vec_id", k, iters))
+
   test("kMeans: every vector is assigned to a cell named by an initial " +
        "sample id, exactly one row per vector, cosine present") {
     val emb = T.embeddings(spark, sf)
     val n = emb.count()
-    val got = Similarity.kMeans(emb, "embedding", "vec_id", k = 8, iters = 2)
+    val got = kMeans(emb, k = 8, iters = 2)
     val rows = got.collect()
     assert(rows.length === n)
     assert(rows.map(_.getLong(0)).distinct.length === n, "duplicate vec_id rows")
@@ -31,7 +37,7 @@ class KMeansSpec extends SparkTestBase {
 
   test("kMeans is deterministic: two independent fits agree row-for-row") {
     val emb = T.embeddings(spark, sf)
-    def run() = Similarity.kMeans(emb, "embedding", "vec_id", k = 4, iters = 2)
+    def run() = kMeans(emb, k = 4, iters = 2)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(run() === run())
@@ -46,7 +52,7 @@ class KMeansSpec extends SparkTestBase {
       (0L to 4L).map(i => (i, Array(1f, 0.001f * i, 0f))) ++
       (10L to 14L).map(i => (i, Array(0f, 0.001f * i, 1f)))).toSeq
     val emb = vecs.toDF("vec_id", "embedding")
-    val got = Similarity.kMeans(emb, "embedding", "vec_id", k = 2, iters = 4)
+    val got = kMeans(emb, k = 2, iters = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // cluster-mates must share a cell, the two clusters must not
     val cellsA = (0L to 4L).map(got).toSet
@@ -63,7 +69,7 @@ class KMeansSpec extends SparkTestBase {
     val emb = Seq(
       (1L, Array(1f, 0f)), (2L, Array(1f, 0f)), (3L, Array(1f, 0f)))
       .toDF("vec_id", "embedding")
-    val got = Similarity.kMeans(emb, "embedding", "vec_id", k = 3, iters = 3)
+    val got = kMeans(emb, k = 3, iters = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length === 3)
     assert(got.map(_._2).distinct.length === 1, s"identical vectors split: ${got.toList}")
@@ -73,8 +79,7 @@ class KMeansSpec extends SparkTestBase {
   test("kMeans guard: k beyond MaxCodebookEntries fails fast") {
     val emb = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      Similarity.kMeans(emb, "embedding", "vec_id",
-        k = Similarity.MaxCodebookEntries + 1, iters = 1)
+      kMeans(emb, k = Similarity.MaxCodebookEntries + 1, iters = 1)
     }
     assert(e.getMessage.contains("MaxCodebookEntries"))
   }
@@ -118,7 +123,7 @@ class KMeansSpec extends SparkTestBase {
       cb = cb.map { case (cell, old) => cell -> upd.getOrElse(cell, old) }
     }
     val expected = assignAll()
-    val got = Similarity.kMeans(emb, "embedding", "vec_id", k = k, iters = iters)
+    val got = kMeans(emb, k = k, iters = iters)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got === expected, "assignment diverged from the reference fit")
   }
@@ -129,12 +134,13 @@ class KMeansSpec extends SparkTestBase {
     val queries = emb.filter(col("vec_id") < 5)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val all = rows(Similarity.ivfTopKTrained(emb, queries, "embedding", "vec_id",
-      k = 10, cells = 4, nProbe = 4, iters = 2))
+    val cb = Similarity.kMeansFitSeq(emb, "embedding", "vec_id", k = 4, iters = 2)
+    val all = rows(Similarity.ivfTopKTrainedWith(emb, queries, "embedding", "vec_id",
+      k = 10, cb = cb, nProbe = 4))
     val exact = rows(Similarity.bruteForceTopK(emb, queries, "embedding", "vec_id", k = 10))
     assert(all === exact, "full-probe trained IVF must equal brute force")
-    val probed = Similarity.ivfTopKTrained(emb, queries, "embedding", "vec_id",
-        k = 10, cells = 4, nProbe = 2, iters = 2)
+    val probed = Similarity.ivfTopKTrainedWith(emb, queries, "embedding", "vec_id",
+        k = 10, cb = cb, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val exactPairs = exact.map(t => (t._1, t._3))
     // partial probing returns candidates only from probed cells — every
@@ -148,7 +154,7 @@ class KMeansSpec extends SparkTestBase {
        "election without an Exchange (only the 1-row codebook aggregate " +
        "and the k*dim update shuffle exchange)") {
     val emb = T.embeddings(spark, sf)
-    val out = Similarity.kMeans(emb, "embedding", "vec_id", k = 4, iters = 1)
+    val out = kMeans(emb, k = 4, iters = 1)
     val plan = out.queryExecution.executedPlan.toString
     // final plan = cached corpus × broadcast single-row codebook + project
     assert(plan.contains("BroadcastNestedLoopJoin"),

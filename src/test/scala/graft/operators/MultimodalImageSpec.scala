@@ -16,7 +16,6 @@ class MultimodalImageSpec extends SparkTestBase {
 
   // gradient_8x5: rgb(x,y) = ((x*31+y*7)%256, (x*13+y*101)%256, (x*3+y*53)%256)
   private val TotalRgbSum = 14596L
-  private val RowSums = Seq(1316L, 2604L, 3124L, 3132L, 4420L)
 
   test("imageio decode: PNG and BMP fixtures yield real dimensions and pixel checksum") {
     val media = Seq(
@@ -36,22 +35,11 @@ class MultimodalImageSpec extends SparkTestBase {
     assert(feats(0L).checksum === feats(1L).checksum)
   }
 
-  test("imageio frame sampling emits every Nth pixel row with exact row checksums") {
-    val media = Seq(
-      Multimodal.MediaRecord(7L, "image/png", fixture("gradient_8x5.png"))).toDS()
-    val frames = Multimodal.sampleImageRows(media, everyN = 2)
-      .collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq === Seq(0, 2, 4))
-    assert(frames.map(_.offset).toSeq === Seq(0, 16, 32))
-    assert(frames.map(_.checksum).toSeq === Seq(RowSums(0), RowSums(2), RowSums(4)))
-  }
-
   test("corrupt image bytes surface as sentinel features, not silent stubs") {
     val media = Seq(
       Multimodal.MediaRecord(9L, "image/png", Array[Byte](1, 2, 3, 4))).toDS()
     val f = Multimodal.extractFeatures(media).collect().head
     assert(f.checksum === -1L && f.width === 0 && f.height === 0)
-    assert(Multimodal.sampleImageRows(media).collect().isEmpty)
   }
 
   test("truncated payload behind a VALID image signature is a bad row, not a task killer") {
@@ -61,31 +49,6 @@ class MultimodalImageSpec extends SparkTestBase {
     val media = Seq(Multimodal.MediaRecord(11L, "image/png", truncated)).toDS()
     val f = Multimodal.extractFeatures(media).collect().head
     assert(f.checksum === -1L && f.width === 0)
-    assert(Multimodal.sampleImageRows(media).collect().isEmpty)
-    val passedThrough = Multimodal.resizeImage(media, 4, 2).collect().head
-    assert(java.util.Arrays.equals(passedThrough.payload, truncated))
-  }
-
-  test("image resize: nearest-neighbor downscale with pinned pixels, round-trips through PNG") {
-    val media = Seq(
-      Multimodal.MediaRecord(5L, "image/png", fixture("gradient_8x5.png"))).toDS()
-    val resized = Multimodal.resizeImage(media, targetW = 4, targetH = 2).collect().head
-    assert(resized.media_type === "image/png")
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(resized.payload))
-    assert(img.getWidth === 4 && img.getHeight === 2)
-    // nearest neighbor with integer mapping: out(x,y) = in(x*8/4, y*5/2)
-    def rgb(x: Int, y: Int): Int = {
-      val (sx, sy) = (x * 2, y * 5 / 2)
-      val r = (sx * 31 + sy * 7) % 256
-      val g = (sx * 13 + sy * 101) % 256
-      val b = (sx * 3 + sy * 53) % 256
-      (r << 16) | (g << 8) | b
-    }
-    for (y <- 0 until 2; x <- 0 until 4)
-      assert((img.getRGB(x, y) & 0xffffff) === rgb(x, y), s"pixel ($x,$y)")
-    // resize is deterministic at the byte level (oracle-able)
-    val again = Multimodal.resizeImage(media, 4, 2).collect().head
-    assert(java.util.Arrays.equals(resized.payload, again.payload))
   }
 
   test("non-image media types still route to the deterministic byte decoder") {

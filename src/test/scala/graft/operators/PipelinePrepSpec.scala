@@ -41,13 +41,16 @@ class PipelinePrepSpec extends SparkTestBase {
 
   test("hash sampling is deterministic, rate-accurate, and join-stable") {
     val ids = (0L until 2000L).toDF("id")
-    val s1 = Sampling.hashSample(ids, col("id"), 10).as[Long].collect().toSet
-    val s2 = Sampling.hashSample(ids, col("id"), 10).as[Long].collect().toSet
+    // no strata: every row is sampled at the default rate
+    def sample(pct: Int) = Sampling.stratifiedHashSample(ids, col("id"), lit(""),
+      rates = Nil, defaultPct = pct).as[Long].collect().toSet
+    val s1 = sample(10)
+    val s2 = sample(10)
     assert(s1 == s2) // rerun → identical sample (pure function of data)
     assert(math.abs(s1.size - 200) < 60, s"rate off: ${s1.size}/2000")
     // rate monotonicity: a 20% sample contains the 10% sample (bucket
     // predicate is a prefix test, the property that makes splits stable)
-    val s20 = Sampling.hashSample(ids, col("id"), 20).as[Long].collect().toSet
+    val s20 = sample(20)
     assert(s1.subsetOf(s20))
   }
 
@@ -124,22 +127,18 @@ class PipelinePrepSpec extends SparkTestBase {
       (2L, 1, "unique", 1.0), (2L, 2, "common", 1.0 / 3)))
   }
 
-  test("tfIdf vs tfIdfLog: agree when df ordering decides, diverge on the documented case") {
+  test("tfIdf: linear 1/df ranks a df-1 singleton above a tf-2 common term") {
     val docs = Seq(
       (0L, "common other other"),
       (1L, "common common stuff"),
       (2L, "common filler words")).toDF("doc_id", "text")
     val lin = TextAnalysis.tfIdf(docs, "text", "doc_id", k = 1)
       .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    val log = TextAnalysis.tfIdfLog(docs, "text", "doc_id", k = 1)
-      .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    // docs 0 and 2: the rare df-1 term wins under both weightings
-    assert(lin(0L) == "other" && log(0L) == "other")
-    assert(lin(2L) == "filler" && log(2L) == "filler")
-    // doc 1 is the divergence the scaladoc documents: linear 1/df ranks
-    // the df-1 singleton (1/1 > 2/3); smoothed-log idf is flatter, so
-    // the tf-2 common term wins (2·(ln(4/4)+1)=2 > 1·(ln(4/2)+1)≈1.69)
-    assert(lin(1L) == "stuff" && log(1L) == "common")
+    // docs 0 and 2: the rare df-1 term wins
+    assert(lin(0L) == "other")
+    assert(lin(2L) == "filler")
+    // doc 1: linear 1/df ranks the df-1 singleton (1/1 > 2/3)
+    assert(lin(1L) == "stuff")
   }
 
   test("packTokens: stream positions, bins, and spans per shard") {

@@ -218,33 +218,6 @@ class RecallSpec extends SparkTestBase {
       s"blocked plan still has a cartesian:\n$plan")
   }
 
-  test("bucketed embedding pairs: planted near-dups fully recovered with " +
-       "far fewer comparisons than all-pairs") {
-    import spark.implicits._
-    val dim = 16
-    val rnd = new scala.util.Random(7L)
-    def randVec(): Array[Float] = Array.fill(dim)(rnd.nextGaussian().toFloat)
-    val base = (0 until 200).map(i => (i.toLong, randVec()))
-    // plant 10 near-dups: copies with tiny noise => cosine ≈ 0.999
-    val dups = (0 until 10).map { i =>
-      val v = base(i)._2.map(x => x + 0.01f * rnd.nextGaussian().toFloat)
-      ((1000 + i).toLong, v)
-    }
-    val df = (base ++ dups).toDF("vec_id", "embedding")
-    val got = Dedup.embeddingCosinePairsBucketed(df, "embedding", "vec_id",
-        threshold = 0.95, dim = dim)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = (0 until 10).map(i => (i.toLong, (1000 + i).toLong)).toSet
-    assert(want.subsetOf(got), s"missed planted dups: ${want -- got}")
-    // pruning is real: the bucket join examines far fewer than n²/2 pairs
-    val cand = Dedup.embeddingCosinePairsBucketed(df, "embedding", "vec_id",
-        threshold = -1.0, dim = dim) // keep every scored candidate
-      .count()
-    val allPairs = 210L * 209L / 2
-    info(s"bucketed candidates: $cand of $allPairs possible pairs")
-    assert(cand < allPairs / 4, s"bucket join is not pruning: $cand of $allPairs")
-  }
-
   test("fuzzy dedup blocking: recall vs the full n² levenshtein truth, and real pruning") {
     import spark.implicits._
     // full n² truth at the x37 parameters (500 docs → 125k pairs is

@@ -129,10 +129,12 @@ class Round8OpsSpec extends SparkTestBase {
   test("nearDedupAgainst: batch banded keys are persisted — ONE live Generate " +
        "(the history side) in the physical plan, not three") {
     val docs = T.documents(spark, sf)
-    val out = Dedup.nearDedupAgainst(
-      docs.filter(pmod(col("doc_id"), lit(10)) >= 8),
-      docs.filter(pmod(col("doc_id"), lit(10)) < 8),
-      "text", "doc_id", numHashes = 16, bands = 8, minEstimate = 0.2)
+    val (batch, hist) = (docs.filter(pmod(col("doc_id"), lit(10)) >= 8),
+      docs.filter(pmod(col("doc_id"), lit(10)) < 8))
+    val out = Dedup.nearDedupAgainstSigs(batch, "doc_id",
+      graft.Caches.persistOnce(Dedup.minhashSignatures(batch, "text", "doc_id")),
+      graft.Caches.persistOnce(Dedup.minhashSignatures(hist, "text", "doc_id")),
+      numHashes = 16, bands = 8, minEstimate = 0.2)
     // the batch side reads the persisted key table (InMemoryRelation
     // leaves — their cached build plan is not part of this query), so
     // the only LIVE Generate is the history side's band explode

@@ -154,31 +154,6 @@ class Round8bOpsSpec extends SparkTestBase {
     assert(got((65535L, 65535L)) === (1L << 32) - 1)
   }
 
-  test("zOrderLayout plan: RangePartitioning on zval + local (non-global) " +
-       "sort — the write-clustering exchange, not a global sort") {
-    val ev = T.events(spark, sf)
-    val plan = Layout.zOrderLayout(ev,
-        pmod(col("user_id"), lit(65536L)),
-        pmod(col("event_id"), lit(65536L)), partitions = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning") || plan.contains("RangePartitioning"),
-      s"layout must range-partition on zval:\n$plan")
-    // executedPlan prints SortExec as `Sort [keys], <global>, 0` — the
-    // boolean after the key list is the global flag
-    assert("Sort \\[zval[^\\]]*\\], false".r.findFirstIn(plan).isDefined,
-      s"the per-file sort must be partition-local (global=false):\n$plan")
-  }
-
-  test("zOrderLayout: clustering is a permutation — row multiset unchanged") {
-    val ev = T.events(spark, sf).select("event_id")
-    val out = Layout.zOrderLayout(T.events(spark, sf),
-        pmod(col("user_id"), lit(65536L)),
-        pmod(col("event_id"), lit(65536L)), partitions = 4)
-      .select("event_id")
-    assert(out.count() === ev.count())
-    assert(out.except(ev).count() === 0 && ev.except(out).count() === 0)
-  }
-
   // ---------------------------------------------------------------- x80
 
   test("tripletMine: negatives are the murmur3 draw mod n; collisions " +
@@ -336,7 +311,8 @@ class Round8bOpsSpec extends SparkTestBase {
     val emb = T.embeddings(spark, sf)
     val viaMemo = Similarity.kMeansAssignWith(emb, "embedding", "vec_id", a)
       .orderBy("vec_id").collect().toSeq
-    val direct = Similarity.kMeans(emb, "embedding", "vec_id", k = 4, iters = 1)
+    val direct = Similarity.kMeansAssignWith(emb, "embedding", "vec_id",
+        Similarity.kMeansFitSeq(emb, "embedding", "vec_id", k = 4, iters = 1))
       .orderBy("vec_id").collect().toSeq
     assert(viaMemo === direct)
     graft.Caches.clearAll(spark)

@@ -68,15 +68,6 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("salted join equals the plain join (skew mitigation is transparent)") {
-    val li = T.lineitem(spark, sf).select("l_orderkey", "l_partkey", "l_quantity")
-    val p = T.part(spark, sf).select("p_partkey", "p_brand")
-      .withColumnRenamed("p_partkey", "l_partkey")
-    val plain = li.join(p, Seq("l_partkey")).count()
-    val salted = graft.operators.Skew.saltedJoinSmall(li, p, "l_partkey", saltBuckets = 8).count()
-    assert(salted === plain)
-  }
-
   test("x15 wired query plans as block-pair equi-joins — no cartesian node") {
     val df = graft.queries.Extensions.queries("x15_dedup_embedding")(spark, sf)
     val plan = planString(df)
@@ -117,8 +108,9 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("x24 hash sampling is a scan-stage filter — no shuffle, pruned columns") {
-    val sampled = graft.operators.Sampling.hashSample(
-      T.documents(spark, sf).select("doc_id", "lang"), col("doc_id"), 10)
+    val sampled = graft.operators.Sampling.stratifiedHashSample(
+      T.documents(spark, sf).select("doc_id", "lang"), col("doc_id"), col("lang"),
+      rates = Seq("en" -> 50), defaultPct = 10)
     val s = planString(sampled)
     assert(!s.contains("Exchange"), s"sampling introduced a shuffle:\n$s")
     val scan = sampled.queryExecution.executedPlan.collectLeaves().head.toString

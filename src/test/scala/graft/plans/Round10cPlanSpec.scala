@@ -53,22 +53,6 @@ class Round10cPlanSpec extends SparkTestBase {
         s"re-scan the corpus:\n$s")
   }
 
-  test("x108 hilbert layout: RangePartitioning on hval + partition-local " +
-       "sort (the zOrderLayout write-clustering shape), index computed " +
-       "scan-side") {
-    val ev = spark.read.parquet(s"$sf/events.parquet")
-    val plan = graft.operators.Layout.hilbertLayout(ev,
-        col("user_id"), col("event_id"), partitions = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning") ||
-           plan.contains("RangePartitioning"),
-      s"layout must range-partition on hval:\n$plan")
-    assert("Sort \\[hval[^\\]]*\\], false".r.findFirstIn(plan).isDefined,
-      s"the per-file sort must be partition-local (global=false):\n$plan")
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"the index is scan-side — no hash exchange:\n$plan")
-  }
-
   test("x106 mmr pool: the bounded pool broadcasts onto the vector scan " +
        "— the corpus-sized vector frame is never shuffled on cand_id") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")

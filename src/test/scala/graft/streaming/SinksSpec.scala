@@ -133,141 +133,11 @@ class SinksSpec extends SparkTestBase {
   private def viewKey(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
 
-  test("compaction: snapshot + atomic manifest swap; the compacted view " +
-       "equals the committed view; a re-run at the same cut is a no-op") {
-    implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("sinkc1").toString
-    val (out, cp, tgt) = (s"$dir/out", s"$dir/cp", s"$dir/compacted")
-    val input = MemoryStream[Doc]
-    val q = startQuery(input, out, cp)
-    try {
-      input.addData(docsA); q.processAllAvailable()
-      input.addData(docsB); q.processAllAvailable()
-    } finally q.stop()
-    val part = org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.lit(2L))
-    assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(1L))
-    assert(Sinks.latestCompaction(spark, tgt) === Some(1L))
-    val committed = Sinks.readCommitted(spark, out)
-    val view = Sinks.readCompactedView(spark, out, tgt)
-    assert(view.columns.toSeq === committed.columns.toSeq,
-      "compacted view schema must equal the sink's")
-    assert(viewKey(view) === viewKey(committed))
-    // no-op re-run: same cut, still exactly one manifest
-    assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(1L))
-    // count only marker names — LocalFS adds .N.crc checksum twins
-    assert(Files.list(Paths.get(s"$tgt/_manifests"))
-      .filter(p => p.getFileName.toString.matches("\\d+")).count() === 1L)
-  }
-
-  test("crash MID-COMPACTION (snapshot half-written, manifest absent): " +
-       "the committed view stays readable and unchanged; a re-run " +
-       "converges and the view is identical before and after") {
-    implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("sinkc2").toString
-    val (out, cp, tgt) = (s"$dir/out", s"$dir/cp", s"$dir/compacted")
-    val input = MemoryStream[Doc]
-    val q = startQuery(input, out, cp)
-    try {
-      input.addData(docsA); q.processAllAvailable()
-      input.addData(docsB); q.processAllAvailable()
-    } finally q.stop()
-    val before = viewKey(Sinks.readCommitted(spark, out))
-    // simulate the crash window: a partial snapshot landed (wrong,
-    // half-written data) but the manifest create never happened
-    Seq(docsA.head).toDF()
-      .withColumn(Sinks.CompactPartCol, org.apache.spark.sql.functions.lit(0L))
-      .write.partitionBy(Sinks.CompactPartCol)
-      .parquet(s"$tgt/snapshots/1")
-    assert(Sinks.latestCompaction(spark, tgt) === None,
-      "a manifest-less snapshot must be invisible")
-    assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) === before,
-      "the readable view must not degrade during a crashed compaction")
-    // re-run: deterministic overwrite of snapshots/1, then the commit
-    val part = org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.lit(2L))
-    assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(1L))
-    assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) === before,
-      "committed view before == after the converged compaction")
-  }
-
-  test("batches landing AFTER a compaction stay visible (snapshot + " +
-       "newer batch dirs); the next compaction advances the cut") {
-    implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("sinkc3").toString
-    val (out, cp, tgt) = (s"$dir/out", s"$dir/cp", s"$dir/compacted")
-    val part = org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.lit(2L))
-    val input = MemoryStream[Doc]
-    val q = startQuery(input, out, cp)
-    try {
-      input.addData(docsA); q.processAllAvailable()
-      input.addData(docsB); q.processAllAvailable()
-      assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(1L))
-      input.addData(docsC); q.processAllAvailable()
-    } finally q.stop()
-    // snapshot covers 0..1; batch 2 reads from its committed batch dir
-    assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) ===
-      viewKey(Sinks.readCommitted(spark, out)))
-    assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(2L))
-    assert(Sinks.latestCompaction(spark, tgt) === Some(2L))
-    assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) ===
-      viewKey(Sinks.readCommitted(spark, out)))
-  }
-
   private val docsD = Seq(
     Doc(7L, "a fourth wave of text landing after the garbage collection"))
 
   private def partOf(c: String) = org.apache.spark.sql.functions.pmod(
     org.apache.spark.sql.functions.col(c), org.apache.spark.sql.functions.lit(2L))
-
-  test("gcCompacted: sweeps orphans and pre-window snapshots (+ optional " +
-       "pre-cut batch dirs); a reader of the latest view opened BEFORE " +
-       "the GC still reads it, and compaction continues afterwards") {
-    implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("sinkgc1").toString
-    val (out, cp, tgt) = (s"$dir/out", s"$dir/cp", s"$dir/compacted")
-    val part = partOf("doc_id")
-    val input = MemoryStream[Doc]
-    val q = startQuery(input, out, cp)
-    try {
-      input.addData(docsA); q.processAllAvailable()
-      input.addData(docsB); q.processAllAvailable()
-      assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(1L))
-      input.addData(docsC); q.processAllAvailable()
-      assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(2L))
-      // a crashed compaction's debris: manifest-less snapshot dir
-      Seq(docsA.head).toDF()
-        .withColumn(Sinks.CompactPartCol, org.apache.spark.sql.functions.lit(0L))
-        .write.partitionBy(Sinks.CompactPartCol).parquet(s"$tgt/snapshots/99")
-      val before = viewKey(Sinks.readCommitted(spark, out))
-      val openedBeforeGc = Sinks.readCompactedView(spark, out, tgt) // lazy
-      // keep=1: snapshot 1 (+ its manifest) and orphan 99 go; 2 stays
-      assert(Sinks.gcCompacted(spark, out, tgt, keepSnapshots = 1) === (2, 0))
-      assert(Sinks.latestCompaction(spark, tgt) === Some(2L))
-      assert(!Files.exists(Paths.get(s"$tgt/snapshots/1")))
-      assert(!Files.exists(Paths.get(s"$tgt/snapshots/99")))
-      assert(viewKey(openedBeforeGc) === before,
-        "a latest-view reader must survive a concurrent GC")
-      // batch-dir GC: everything ≤ the retained cut goes; the compacted
-      // view stays complete (the RAW view is truncated by design)
-      assert(Sinks.gcCompacted(spark, out, tgt, keepSnapshots = 1,
-        gcBatchDirs = true) === (0, 3))
-      assert(Sinks.committedBatches(spark, out) === Set.empty[Long])
-      assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) === before)
-      // the stream continues and compaction still works from snapshot +
-      // tail — the pre-cut dirs were genuinely not needed again
-      input.addData(docsD); q.processAllAvailable()
-      assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(3L))
-      val after = viewKey(Sinks.readCompactedView(spark, out, tgt))
-      assert(after.size > before.size)
-      assert(before.forall(after.contains),
-        "post-GC compaction must retain every pre-GC row")
-    } finally q.stop()
-  }
 
   test("compactIncremental: only touched partitions are rewritten; the " +
        "incremental view equals the committed view across compactions; " +
@@ -397,7 +267,7 @@ class SinksSpec extends SparkTestBase {
        "stays readable, and the run converges once the lease is free") {
     implicit val ctx = spark.sqlContext
     val dir = Files.createTempDirectory("sinkrace1").toString
-    val (out, cp, tgt, tgtI) = (s"$dir/out", s"$dir/cp", s"$dir/comp", s"$dir/inc")
+    val (out, cp, tgtI) = (s"$dir/out", s"$dir/cp", s"$dir/inc")
     val part = partOf("doc_id")
     val input = MemoryStream[Doc]
     val q = startQuery(input, out, cp)
@@ -407,30 +277,19 @@ class SinksSpec extends SparkTestBase {
     } finally q.stop()
     val before = viewKey(Sinks.readCommitted(spark, out))
     // another compactor holds cut 1's lease (fresh file)
-    Files.createDirectories(Paths.get(s"$tgt/_leases"))
-    Files.createFile(Paths.get(s"$tgt/_leases/1"))
     Files.createDirectories(Paths.get(s"$tgtI/_pleases"))
     Files.createFile(Paths.get(s"$tgtI/_pleases/1"))
     intercept[Sinks.ConcurrentCompactionException] {
-      Sinks.compactCommitted(spark, out, tgt, part)
-    }
-    intercept[Sinks.ConcurrentCompactionException] {
       Sinks.compactIncremental(spark, out, tgtI, part)
     }
-    // aborting wrote nothing: no manifests, views unchanged
-    assert(Sinks.latestCompaction(spark, tgt) === None)
+    // aborting wrote nothing: no manifests, view unchanged
     assert(Sinks.incrementalCuts(spark, tgtI) === Seq.empty)
-    assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) === before)
     assert(viewKey(Sinks.readIncrementalView(spark, out, tgtI)) === before)
-    // holder released (deleted) the lease: both converge
-    Files.delete(Paths.get(s"$tgt/_leases/1"))
+    // holder released (deleted) the lease: the run converges
     Files.delete(Paths.get(s"$tgtI/_pleases/1"))
-    assert(Sinks.compactCommitted(spark, out, tgt, part) === Some(1L))
     assert(Sinks.compactIncremental(spark, out, tgtI, part) === Some(1L))
-    assert(viewKey(Sinks.readCompactedView(spark, out, tgt)) === before)
     assert(viewKey(Sinks.readIncrementalView(spark, out, tgtI)) === before)
     // success releases the lease (no stale residue for the next run)
-    assert(!Files.exists(Paths.get(s"$tgt/_leases/1")))
     assert(!Files.exists(Paths.get(s"$tgtI/_pleases/1")))
   }
 
