@@ -1,13 +1,15 @@
 package graft.etl
 
+import java.io.IOException
 import java.nio.file.Paths
+import java.util.UUID
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** CSV-directory reader with explicit schema + basename lineage column
   * (reference read_data, /root/reference/data_process.py:48-89).
@@ -32,18 +34,39 @@ object Reader {
   def basename(uri: Column): Column = substring_index(uri, "/", -1)
 }
 
-/** Static-overwrite partitioned parquet sink under base/<ENV>
-  * (reference write_data, /root/reference/data_process.py:315-330).
+/** Partitioned parquet sink under base/<ENV> with the reference's
+  * static-overwrite result (reference write_data, data_process.py:315-330).
+  * A run writes a fresh staging directory beside base/<ENV>, and
+  * [[publish]] then replaces base/<ENV> with it. The staging name starts
+  * with `_`, so readers of the base directory skip it.
   */
 object Writer {
   def outputPath(conf: OutputConf, environment: String): String =
     Paths.get(conf.basePath, environment).toString
 
-  def write(df: DataFrame, conf: OutputConf, environment: String): String = {
-    val path = outputPath(conf, environment)
-    df.write.mode("overwrite").partitionBy(conf.partitionBy: _*).parquet(path)
-    path
+  /** A directory beside `path` that no other run names. */
+  def stagingPath(path: String): String = {
+    val p = Paths.get(path)
+    p.resolveSibling(s"_${p.getFileName}-${UUID.randomUUID()}").toString
   }
+
+  def write(df: DataFrame, conf: OutputConf, path: String): Unit =
+    df.write.partitionBy(conf.partitionBy: _*).parquet(path)
+
+  /** Replaces `path` with `staging`: deletes `path`, then renames. */
+  def publish(spark: SparkSession, staging: String, path: String): Unit = {
+    val fs = fileSystem(spark, path)
+    fs.delete(new Path(path), true)
+    if (!fs.rename(new Path(staging), new Path(path)))
+      throw new IOException(s"could not rename $staging to $path")
+  }
+
+  /** Deletes `staging`, if it is still there. */
+  def discard(spark: SparkSession, staging: String): Unit =
+    fileSystem(spark, staging).delete(new Path(staging), true)
+
+  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 }
 
 /** Config-driven data-quality gates (reference :267-313). */
@@ -89,15 +112,14 @@ object DataQuality {
     *
     * Given the job's `renames`, a name `df` lacks is read as the renamed
     * column `df` carries: the same values the quirk reads, but resolved
-    * on `df`'s own output, so a cached `df` answers the count from its
-    * cache. Resolved below the rename projection, the filter's plan
-    * would no longer match the cached one and the count would re-run
-    * the whole transform. Names neither `df` nor `renames` resolve keep
-    * the quirk. Results and messages carry the configured name.
+    * on `df`'s own output, so the count can be observed on the action
+    * that writes `df` ([[NotNull.observe]]). Names neither `df` nor
+    * `renames` resolve keep the quirk. Results and messages carry the
+    * configured name.
     */
   final case class NotNull(column: String) {
     def run(df: DataFrame, renames: Map[String, String] = Map.empty): CheckResult =
-      NotNull.result(column, df.filter(NotNull.read(df, column, renames).isNull).count())
+      NotNull.result(column, df.filter(col(NotNull.name(df, column, renames)).isNull).count())
   }
 
   object NotNull {
@@ -107,11 +129,11 @@ object DataQuality {
       else CheckResult(s"not_null($column)", false,
         s"La columna '$column' contiene $n valores nulos.", Some(n))
 
-    /** The gated `column` as [[NotNull.run]] reads it from `df`. */
-    private def read(df: DataFrame, column: String, renames: Map[String, String]): Column =
-      col(renames.get(column)
+    /** The name under which [[NotNull.run]] reads the gated `column` from `df`. */
+    private def name(df: DataFrame, column: String, renames: Map[String, String]): String =
+      renames.get(column)
         .filter(r => !df.columns.contains(column) && df.columns.contains(r))
-        .getOrElse(column))
+        .getOrElse(column)
 
     /** Every column's check, in one job when none has a null: the rows
       * with a null in any column are counted once, and only a non-zero
@@ -124,13 +146,36 @@ object DataQuality {
                renames: Map[String, String] = Map.empty): Seq[CheckResult] =
       if (columns.isEmpty) Nil
       else {
-        val anyNull = df.filter(columns.map(read(df, _, renames).isNull).reduce(_ || _))
+        val anyNull = df.filter(columns.map(c => col(name(df, c, renames)).isNull).reduce(_ || _))
         val nullable = anyNull.queryExecution.analyzed
           .collectFirst { case f: Filter => f.condition.references.exists(_.nullable) }
           .getOrElse(true)
         if (!nullable || anyNull.count() == 0) columns.map(result(_, 0L))
         else columns.map(NotNull(_).run(df, renames))
       }
+
+    /** Every column's check, counted on whatever action runs the returned
+      * frame: one observed `count_if(isnull)` per column `df` carries that
+      * is nullable. A non-nullable column (one filled upstream) passes with
+      * no metric, so when no column is nullable the frame is `df` itself.
+      * A name `df` resolves only through the quirk is counted by [[runAll]]
+      * when the results are asked for. Ask for them once the action has
+      * completed; they come in `columns`' order. Resolves names like
+      * [[NotNull.run]].
+      */
+    def observe(df: DataFrame, columns: Seq[String],
+                renames: Map[String, String]): (DataFrame, () => Seq[CheckResult]) = {
+      val (carried, quirk) = columns.partition(c => df.columns.contains(name(df, c, renames)))
+      val metrics = carried.distinct.filter(c => df.schema(name(df, c, renames)).nullable)
+        .map(c => count_if(col(name(df, c, renames)).isNull).as(c))
+      val nulls = Observation()
+      val observed = if (metrics.isEmpty) df else df.observe(nulls, metrics.head, metrics.tail: _*)
+      (observed, () => {
+        val counted = if (metrics.isEmpty) Map.empty[String, Any] else nulls.get
+        val quirks = quirk.zip(runAll(df, quirk, renames)).toMap
+        columns.map(c => quirks.getOrElse(c, result(c, counted.getOrElse(c, 0L).asInstanceOf[Long])))
+      })
+    }
   }
 }
 
@@ -138,24 +183,27 @@ object DataQuality {
   * write (reference main, /root/reference/data_process.py:332-366).
   *
   * One deliberate deviation from the reference, flagged per SURVEY §7.1:
-  * the transformed frame is persisted before the DQ/write action fan-out.
-  * The reference recomputes the full upstream plan for every action (5×);
-  * a single persist changes nothing semantically and removes the
-  * recompute amplification that dominates its runtime.
+  * the write is staged, and the gates publish it. The reference runs the
+  * full upstream plan once for every gate and again for the write; here
+  * one action, the partitioned parquet write into a staging directory
+  * beside base/<ENV> ([[Writer.stagingPath]]), parses the input once and
+  * carries every count the gates need as observed metrics: the raw rows
+  * (the `MinRows` gate), the transformed rows (`rowsOut`) and each gated
+  * column's nulls ([[DataQuality.NotNull.observe]]). Only when every gate
+  * passes does [[Writer.publish]] replace base/<ENV> with the staging
+  * directory; a failing gate or an error deletes it and leaves base/<ENV>
+  * as it was.
   *
-  * The input is parsed once. One action (a `noop` write, which needs no
-  * aggregation stage) fills the cache, and two observed metrics on it
-  * count the raw rows (the `MinRows` gate) and the transformed rows
-  * (`rowsOut`), so no other action re-reads the CSV or counts the cache.
-  * The input gate therefore decides after that action, not before it.
-  * Nothing visible changes: required columns are still checked first,
-  * from the schema alone; the gate's lines are still logged before any
-  * transform line; a failing gate still returns before anything is
-  * written; and an error in the transform surfaces only after the gate,
-  * then evaluated by its own count, has passed. Observing the raw frame
-  * keeps every filter above the CSV scan, but the lineage column's
-  * nondeterministic `input_file_name()` already did: no filter reaches
-  * the reader either way.
+  * The gates therefore decide after that action, not before it. Nothing
+  * visible changes: required columns are still checked first, from the
+  * schema alone; the gates' lines are still logged in the reference's
+  * order; a failing gate still writes nothing to base/<ENV>; and an error
+  * in the transform surfaces only after the input gate, then evaluated by
+  * its own count, has passed. An error of the write itself, being the
+  * same action, surfaces the same way. Observing the raw frame keeps every
+  * filter above the CSV scan, but the lineage column's nondeterministic
+  * `input_file_name()` already did: no filter reaches the reader either
+  * way.
   */
 object EtlRunner {
   final case class EtlReport(
@@ -191,7 +239,7 @@ object EtlRunner {
       results
     }
     def blocked(inResults: Seq[CheckResult]) = EtlReport(inResults, Nil, None, 0L)
-    /** The outcome when building or filling the frame threw `e`: the
+    /** The outcome when building or writing the frame threw `e`: the
       * reference runs the gate before the transform, so the gate, by its
       * own count, decides first. If that count throws too, `e` carries it.
       */
@@ -209,12 +257,14 @@ object EtlRunner {
     val rowsIn = Observation()
     val rowsOut = Observation()
     val rows = count(lit(1)).as("rows")
-    val transformed =
-      try Transforms(raw.observe(rowsIn, rows), conf).observe(rowsOut, rows)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val (transformed, outputGate) =
+      try NotNull.observe(Transforms(raw.observe(rowsIn, rows), conf).observe(rowsOut, rows),
+        conf.quality.notNullColumns, conf.renames)
       catch { case NonFatal(e) => return gateBefore(e) }
+    val path = Writer.outputPath(conf.output, conf.run.environment)
+    val staging = Writer.stagingPath(path)
     try {
-      try transformed.write.format("noop").mode("overwrite").save()
+      try Writer.write(transformed, conf.output, staging)
       catch { case NonFatal(e) => return gateBefore(e) }
       val rawCount = observed(rowsIn)
       val inResults = inputGate(minRows.of(rawCount))
@@ -241,7 +291,7 @@ object EtlRunner {
       }
       PipeLog.info("rename_and_order_cols", "Renombrado y ordenamiento de columnas >>> OK")
 
-      val outResults = NotNull.runAll(transformed, conf.quality.notNullColumns, conf.renames)
+      val outResults = outputGate()
       val outOk = outResults.forall(_.passed)
       outResults.foreach { r =>
         if (r.passed) PipeLog.info("data_quality_output", s"[DQ OUTPUT APROBADA]: ${r.detail}")
@@ -249,10 +299,9 @@ object EtlRunner {
       }
       if (!outOk) EtlReport(inResults, outResults, None, rowsOutCount)
       else {
-        val path = Writer.outputPath(conf.output, conf.run.environment)
         PipeLog.info("write_data", s"Escribiendo datos en: $path")
         try {
-          Writer.write(transformed, conf.output, conf.run.environment)
+          Writer.publish(spark, staging, path)
           PipeLog.info("write_data", "Escritura exitosa.")
         } catch { case e: Throwable =>
           PipeLog.error("write_data", s"ERROR: No se pudo escribir el resultado: $e")
@@ -260,10 +309,7 @@ object EtlRunner {
         }
         EtlReport(inResults, outResults, Some(path), rowsOutCount)
       }
-    } finally {
-      transformed.unpersist()
-      ()
-    }
+    } finally Writer.discard(spark, staging)
   }
 
   /** The row count an observation took; its action has completed. */

@@ -45,11 +45,15 @@ object Transforms {
   /** A1 — all-column exact dedup (reference :242). With `keys` the one
     * shuffle hashes on those columns only: a hash partitioning on a subset
     * of the grouping columns satisfies the dedup aggregate, so no second
-    * exchange is planned, and rows equal on `keys` share a task.
+    * exchange is planned, and rows equal on `keys` share a task. The
+    * shuffle's partition count is the session's `spark.sql.shuffle.partitions`,
+    * given explicitly so AQE keeps it: coalesced, the ETL job's small
+    * shuffle would become one task that writes every output file in turn.
     */
   def dedup(df: DataFrame, keys: Seq[String] = Nil): DataFrame =
     if (keys.isEmpty) df.dropDuplicates()
-    else df.repartition(keys.map(col): _*).dropDuplicates()
+    else df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys.map(col): _*)
+      .dropDuplicates()
 
   /** The raw columns behind the output's partition columns: each
     * `partition_by` name mapped back through `renames`, kept if `df` has

@@ -292,13 +292,6 @@ object TextAnalysis {
       .withColumn("novelty", col("n_novel").cast("double") / col("n_grams"))
   }
 
-  /** Intra-document repetition metrics (Gopher-style quality signal):
-    * per document, the total n-gram count, the count of the most
-    * repeated n-gram, and their ratio — repetitive boilerplate scores
-    * high and gets filtered before training. Shares the zip_with
-    * shingle builder with Dedup (duplicates preserved here); one
-    * partial-aggregatable two-level groupBy keyed on doc_id.
-    */
   /** Per-source shingle content ids — the feed for the sketch-cost
     * overlap matrix ([[Sketches.kmvOverlapMatrix]], x103): each word
     * n-gram maps to a 60-bit id (first 15 hex chars of its sha256 —
@@ -322,6 +315,13 @@ object TextAnalysis {
           .cast("long").as("cid"))
   }
 
+  /** Intra-document repetition metrics (Gopher-style quality signal):
+    * per document, the total n-gram count, the count of the most
+    * repeated n-gram, and their ratio — repetitive boilerplate scores
+    * high and gets filtered before training. Shares the zip_with
+    * shingle builder with Dedup (duplicates preserved here); one
+    * partial-aggregatable two-level groupBy keyed on doc_id.
+    */
   def repetition(docs: DataFrame, textCol: String, idCol: String,
                  n: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession) // shingle_array

@@ -1,8 +1,9 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import graft.SparkTestBase
 
@@ -63,13 +64,13 @@ class EtlGateFailureSpec extends SparkTestBase {
   private def rows(n: Int): Seq[String] =
     (1 to n).map(i => s"GT,20250513,$i,100,ZPRE,M$i,10.0,1.0,ST")
 
-  private def inline(dir: java.nio.file.Path, out: String)(
+  private def inline(dir: Path, out: String)(
       quality: QualityConf => QualityConf): EtlConfig = {
     val base = ReferenceJob.config(dir.toString, out)
     base.copy(quality = quality(base.quality))
   }
 
-  private def gateLines(dir: java.nio.file.Path, gate: String*): Seq[String] = Seq(
+  private def gateLines(dir: Path, gate: String*): Seq[String] = Seq(
     "INFO | main | Pipeline de procesamiento de datos iniciado",
     "INFO | setup_environment | --- Sesion Spark iniciada en entorno: PROD ---",
     s"INFO | read_data | Datos cargados exitosamente desde: $dir",
@@ -138,6 +139,43 @@ class EtlGateFailureSpec extends SparkTestBase {
     assert(lines.last.startsWith("CRITICAL | main | ERROR FATAL en el pipeline: "), lines.last)
     assert(lines.last.contains("garbage"), lines.last)
     assert(!Files.exists(Paths.get(out, "PROD")))
+  }
+
+  /** The names in `dir`, sorted. */
+  private def entries(dir: Path): Seq[String] =
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+
+  /** Every file under `dir`, by relative path, with its bytes. */
+  private def snapshot(dir: Path): Map[String, Seq[Byte]] =
+    Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => dir.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+
+  test("inline: a failing input gate, a failing output gate and an unparseable date " +
+       "leave an existing output byte-identical and no staging directory") {
+    val out = Paths.get(freshOut())
+    val (passed, _) = run(inline(EtlProbes.csvDir(rows(12): _*), out.toString)(identity))
+    assert(passed.written.contains(s"$out/PROD"))
+    assert(entries(out) === Seq("PROD"))
+    val before = snapshot(out.resolve("PROD"))
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    val failing: Seq[(String, EtlConfig, Try[EtlRunner.EtlReport] => Boolean)] = Seq(
+      ("a failing input gate", inline(EtlProbes.csvDir(rows(3): _*), out.toString)(identity),
+        r => r.get.inputGate.exists(!_.passed)),
+      ("a failing output gate",
+        inline(EtlProbes.csvDir(rows(11) :+ "GT,20250513,,100,Z05,M99,1.0,1.0,ST": _*),
+          out.toString)(_.copy(notNullColumns = Seq("precio", "transporte"))),
+        r => r.get.outputGate.exists(!_.passed)),
+      ("an unparseable date",
+        inline(EtlProbes.csvDir(rows(11) :+ "GT,garbage,99,100,ZPRE,M99,10.0,1.0,ST": _*),
+          out.toString)(identity),
+        _.isFailure))
+    for ((cell, conf, outcome) <- failing) {
+      val (result, _) = EtlProbes.logged(EtlMain.runLogged(spark, conf))
+      assert(outcome(result), s"$cell: $result")
+      assert(result.toOption.forall(_.written.isEmpty), cell)
+      assert(entries(out) === Seq("PROD"), cell)
+      assert(snapshot(out.resolve("PROD")) === before, cell)
+    }
   }
 
   test("injected nulls in a gated column block the write post-transform") {

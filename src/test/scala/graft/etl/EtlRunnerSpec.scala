@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.GraftSqlTestShims
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -100,17 +102,17 @@ class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(hashKeys(shuffles.head) === Seq("fecha_proceso", "pais"), plan.toString)
   }
 
-  test("a run scans its CSV input in one SQL execution and starts at most 4 jobs") {
+  test("a run scans its CSV input in one SQL execution and starts at most 2 jobs") {
     val conf = ReferenceJob.config(input().toString, freshOut())
     val ((report, scans), jobs) =
       EtlProbes.jobs(spark)(EtlProbes.csvScans(spark)(EtlRunner.run(spark, conf)))
     assert(report.written.nonEmpty && report.rowsOut === 6L)
     assert(scans === 1, "SQL executions that scan the CSV input")
-    assert(jobs <= 4, "Spark jobs in one run")
+    assert(jobs <= 2, "Spark jobs in one run")
   }
 
-  test("a not-null gate on a renamed and a nullable column counts from the cache, " +
-       "not the CSV, and reports under the configured names") {
+  test("a not-null gate on a renamed and a nullable column counts in the write's one scan " +
+       "and reports under the configured names") {
     val base = ReferenceJob.config(input().toString, freshOut())
     // `precio` is renamed to `precio_origen`; `transporte` is nullable, so
     // the gate cannot be skipped and its count runs
@@ -148,7 +150,7 @@ class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "INFO | write_data | Escritura exitosa."))
   }
 
-  test("a failing not-null gate on a renamed column counts each column from the cache") {
+  test("a failing not-null gate on a renamed column counts each column in the write's one scan") {
     val dir = input()
     // a kept row with a null `transporte`: the per-column counts run too
     Files.write(dir.resolve("c.csv"), Seq(header, "GT,20250513,,100,Z05,M9,1.0,1.0,ST").asJava)
@@ -201,11 +203,47 @@ class EtlRunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("run writes one parquet file per output partition") {
     val report = EtlRunner.run(spark, ReferenceJob.config(wideInput().toString, freshOut()))
     assert(report.rowsOut === 180L)
-    val files = Files.walk(Path.of(report.written.get)).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-    val perDir = files.groupBy(_.getParent.getFileName.toString).map { case (d, fs) => d -> fs.size }
+    val perDir = filesPerDir(report.written.get)
     assert(perDir.keySet === Set("pais=GT", "pais=SV", "pais=HN"))
     assert(perDir.values.forall(_ == 1), perDir)
+  }
+
+  /** Parquet files per leaf directory under `path`, by directory name. */
+  private def filesPerDir(path: String): Map[String, Int] =
+    Files.walk(Path.of(path)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      .groupBy(_.getParent.getFileName.toString).map { case (d, fs) => d -> fs.size }
+
+  /** The number of tasks of each stage `f` ran that wrote output rows. */
+  private def writeStageTasks(f: => Unit): Seq[Int] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.add(e.stageInfo)
+    }
+    GraftSqlTestShims.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      GraftSqlTestShims.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    stages.asScala.toSeq.filter(_.taskMetrics.outputMetrics.recordsWritten > 0).map(_.numTasks)
+  }
+
+  test("the write stage runs spark.sql.shuffle.partitions tasks under AQE") {
+    // AQE would coalesce the small dedup shuffle to one task that writes
+    // every file; the explicit partition count keeps one task per shuffle partition
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val prev = keys.map(spark.conf.get)
+    try for (parts <- Seq(4, 7)) {
+      spark.conf.set(keys(0), "true")
+      spark.conf.set(keys(1), parts.toString)
+      val tasks = writeStageTasks {
+        val report = EtlRunner.run(spark, ReferenceJob.config(wideInput().toString, freshOut()))
+        assert(report.rowsOut === 180L)
+        assert(filesPerDir(report.written.get) === Map("pais=GT" -> 1, "pais=SV" -> 1, "pais=HN" -> 1))
+      }
+      assert(tasks === Seq(parts), s"$parts shuffle partitions")
+    } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("partition columns map back through renames; derived ones fall back to the plain dedup") {

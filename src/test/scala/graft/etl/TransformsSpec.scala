@@ -174,6 +174,23 @@ class TransformsSpec extends SparkTestBase {
     assert(bad.map(r => (r.passed, r.measured)) === Seq((false, Some(1L)), (true, Some(0L))))
   }
 
+  test("NotNull.observe counts on the action that runs its frame, the quirk's names after it") {
+    val df = Seq[(Option[Double], String, String)](
+      (None, "m", "a"), (None, null, "b"), (Some(1.0), null, "c"), (Some(2.0), null, "d"))
+      .toDF("precio", "material", "ruta")
+    val renames = Map("precio" -> "precio_origen")
+    // `precio` resolves through `renames`; `ruta`, dropped by the order,
+    // only through the quirk
+    val out = Transforms.renameAndOrder(df, renames, Seq("precio_origen", "material"))
+    val (observed, results) =
+      DataQuality.NotNull.observe(out, Seq("precio", "material", "ruta"), renames)
+    observed.write.format("noop").mode("overwrite").save()
+    assert(results() === DataQuality.NotNull.runAll(out, Seq("precio", "material", "ruta"), renames))
+    assert(results().map(_.measured) === Seq(Some(2L), Some(3L), Some(0L)))
+    val filled = Transforms.fillNulls(df, FillConf("NOT INFO", Seq("material"), 0.0, Seq("precio")))
+    assert(DataQuality.NotNull.observe(filled, Seq("precio", "material"), Map.empty)._1 eq filled)
+  }
+
   test("lineage basename equals the [^/]+$ regex on edge-case URIs") {
     val uris = Seq(
       "file:///data/raw/entregas%20mayo.csv",
