@@ -8,7 +8,6 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 
 /** CSV-directory reader with explicit schema + basename lineage column
@@ -78,9 +77,7 @@ object DataQuality {
     * message (data_process.py:278-281) so the logging site stays dumb.
     */
   final case class MinRows(min: Long) {
-    def run(df: DataFrame): CheckResult = of(df.count())
-
-    /** The check's result for a row count taken elsewhere. */
+    /** The check's result for the row count `n`. */
     def of(n: Long): CheckResult =
       if (n >= min) CheckResult(s"min_rows>=$min", true, s"Conteo de filas: $n", Some(n))
       else CheckResult(s"min_rows>=$min", false,
@@ -106,22 +103,14 @@ object DataQuality {
   /** V3 — per-column not-null. Load-bearing parity quirk: the reference
     * checks PRE-RENAME names against the POST-RENAME frame and succeeds
     * via Catalyst's ResolveMissingReferences (a Filter atop a Project may
-    * reference a dropped column) — see SURVEY.md §2.6. The literal
-    * translation inherits that behavior; do not "fix" to output-schema
-    * validation.
+    * reference a dropped column) — see SURVEY.md §2.6. The gate inherits
+    * that behavior; do not "fix" to output-schema validation.
     *
-    * Given the job's `renames`, a name `df` lacks is read as the renamed
-    * column `df` carries: the same values the quirk reads, but resolved
-    * on `df`'s own output, so the count can be observed on the action
-    * that writes `df` ([[NotNull.observe]]). Names neither `df` nor
-    * `renames` resolve keep the quirk. Results and messages carry the
-    * configured name.
+    * It reads the frame before the final rename-and-order projection,
+    * where a pre-rename or dropped name is a plain column holding exactly
+    * the values the quirk reads, and maps a post-rename name back through
+    * the job's `renames`. Results and messages carry the configured name.
     */
-  final case class NotNull(column: String) {
-    def run(df: DataFrame, renames: Map[String, String] = Map.empty): CheckResult =
-      NotNull.result(column, df.filter(col(NotNull.name(df, column, renames)).isNull).count())
-  }
-
   object NotNull {
     private def result(column: String, n: Long): CheckResult =
       if (n == 0) CheckResult(s"not_null($column)", true,
@@ -129,51 +118,25 @@ object DataQuality {
       else CheckResult(s"not_null($column)", false,
         s"La columna '$column' contiene $n valores nulos.", Some(n))
 
-    /** The name under which [[NotNull.run]] reads the gated `column` from `df`. */
-    private def name(df: DataFrame, column: String, renames: Map[String, String]): String =
-      renames.get(column)
-        .filter(r => !df.columns.contains(column) && df.columns.contains(r))
-        .getOrElse(column)
-
-    /** Every column's check, in one job when none has a null: the rows
-      * with a null in any column are counted once, and only a non-zero
-      * count runs the per-column counts that the failure messages need.
-      * No job at all when the analyzed filter reads only non-nullable
-      * columns (a column filled upstream): the optimizer would fold it to
-      * an empty relation. Resolves names like [[NotNull.run]].
-      */
-    def runAll(df: DataFrame, columns: Seq[String],
-               renames: Map[String, String] = Map.empty): Seq[CheckResult] =
-      if (columns.isEmpty) Nil
-      else {
-        val anyNull = df.filter(columns.map(c => col(name(df, c, renames)).isNull).reduce(_ || _))
-        val nullable = anyNull.queryExecution.analyzed
-          .collectFirst { case f: Filter => f.condition.references.exists(_.nullable) }
-          .getOrElse(true)
-        if (!nullable || anyNull.count() == 0) columns.map(result(_, 0L))
-        else columns.map(NotNull(_).run(df, renames))
-      }
-
     /** Every column's check, counted on whatever action runs the returned
-      * frame: one observed `count_if(isnull)` per column `df` carries that
-      * is nullable. A non-nullable column (one filled upstream) passes with
-      * no metric, so when no column is nullable the frame is `df` itself.
-      * A name `df` resolves only through the quirk is counted by [[runAll]]
-      * when the results are asked for. Ask for them once the action has
-      * completed; they come in `columns`' order. Resolves names like
-      * [[NotNull.run]].
+      * frame: one observed `count_if(isnull)` per gated column that is
+      * nullable in `df`, the frame before the rename-and-order projection.
+      * A non-nullable column (one filled upstream) passes with no metric,
+      * so when no column is nullable the frame is `df` itself. Ask for the
+      * results once the action has completed; they come in `columns`'
+      * order.
       */
     def observe(df: DataFrame, columns: Seq[String],
                 renames: Map[String, String]): (DataFrame, () => Seq[CheckResult]) = {
-      val (carried, quirk) = columns.partition(c => df.columns.contains(name(df, c, renames)))
-      val metrics = carried.distinct.filter(c => df.schema(name(df, c, renames)).nullable)
-        .map(c => count_if(col(name(df, c, renames)).isNull).as(c))
+      val source = renames.map(_.swap)
+      val gated = columns.distinct.map(c => c -> col(source.getOrElse(c, c)))
+      val nullable = df.select(gated.map(_._2): _*).schema.map(_.nullable)
+      val metrics = gated.zip(nullable).collect { case ((c, v), true) => count_if(v.isNull).as(c) }
       val nulls = Observation()
       val observed = if (metrics.isEmpty) df else df.observe(nulls, metrics.head, metrics.tail: _*)
       (observed, () => {
         val counted = if (metrics.isEmpty) Map.empty[String, Any] else nulls.get
-        val quirks = quirk.zip(runAll(df, quirk, renames)).toMap
-        columns.map(c => quirks.getOrElse(c, result(c, counted.getOrElse(c, 0L).asInstanceOf[Long])))
+        columns.map(c => result(c, counted.getOrElse(c, 0L).asInstanceOf[Long]))
       })
     }
   }
@@ -244,7 +207,7 @@ object EtlRunner {
       * own count, decides first. If that count throws too, `e` carries it.
       */
     def gateBefore(e: Throwable): EtlReport = {
-      val rows = try minRows.run(raw) catch { case NonFatal(again) =>
+      val rows = try minRows.of(raw.count()) catch { case NonFatal(again) =>
         e.addSuppressed(again)
         throw e
       }
@@ -252,15 +215,18 @@ object EtlRunner {
       if (inResults.forall(_.passed)) throw e
       blocked(inResults)
     }
-    if (!columns.passed) return blocked(inputGate(minRows.run(raw)))
+    if (!columns.passed) return blocked(inputGate(minRows.of(raw.count())))
 
     val rowsIn = Observation()
     val rowsOut = Observation()
     val rows = count(lit(1)).as("rows")
     val (transformed, outputGate) =
-      try NotNull.observe(Transforms(raw.observe(rowsIn, rows), conf).observe(rowsOut, rows),
-        conf.quality.notNullColumns, conf.renames)
-      catch { case NonFatal(e) => return gateBefore(e) }
+      try {
+        val (chained, nulls) = NotNull.observe(Transforms.chain(raw.observe(rowsIn, rows), conf),
+          conf.quality.notNullColumns, conf.renames)
+        (Transforms.renameAndOrder(chained, conf.renames, conf.columnOrder).observe(rowsOut, rows),
+          nulls)
+      } catch { case NonFatal(e) => return gateBefore(e) }
     val path = Writer.outputPath(conf.output, conf.run.environment)
     val staging = Writer.stagingPath(path)
     try {

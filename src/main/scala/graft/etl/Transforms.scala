@@ -147,8 +147,12 @@ object Transforms {
   }
 
   /** The full chain in reference order (:240-263). */
-  def apply(df: DataFrame, conf: EtlConfig): DataFrame = {
-    val chained = df
+  def apply(df: DataFrame, conf: EtlConfig): DataFrame =
+    renameAndOrder(chain(df, conf), conf.renames, conf.columnOrder)
+
+  /** The chain up to the rename-and-order projection (:240-262). */
+  def chain(df: DataFrame, conf: EtlConfig): DataFrame =
+    df
       .transform(dedup(_, writeKeys(df, conf)))
       .transform(parseDate(_, conf.run))
       .transform(dateFilter(_, conf.run))
@@ -158,6 +162,4 @@ object Transforms {
       .transform(fillNulls(_, conf.fill))
       .transform(standardizeUnits(_, conf.units))
       .transform(totalColumn(_, conf.units, conf.output.totalColumn))
-    renameAndOrder(chained, conf.renames, conf.columnOrder)
-  }
 }

@@ -1077,6 +1077,13 @@ object GraftFunctions {
   def hilbert2d(x: Column, y: Column, bits: Int): Column =
     call_function("hilbert2d", x, y,
       org.apache.spark.sql.functions.lit(bits))
+  /** Spark's murmur3 `hash(c)` read as the unsigned 32-bit value it
+    * encodes, in a bigint: the form [[graft.queries.Murmur3Sql]] replays
+    * in the DuckDB oracles, so every sample, sketch and shard key built
+    * on it orders the same on both engines. */
+  def unsignedHash(c: Column): Column =
+    org.apache.spark.sql.functions.hash(c).cast("bigint")
+      .bitwiseAND(org.apache.spark.sql.functions.lit(4294967295L))
   def murmur3Seeded(c: Column, seed: Int): Column =
     call_function("murmur3_seeded", c, org.apache.spark.sql.functions.lit(seed))
   def minhashSig(shingles: Column, seeds: Seq[Int]): Column =

@@ -214,51 +214,74 @@ object Dedup {
                    collapseExactDups: Boolean = true): DataFrame = {
     if (!collapseExactDups)
       return directJaccard(shingleFlat(docs, textCol, idCol, n), threshold)
+    // quadratic mining over distinct texts only
+    collapsedJaccard(docs, textCol, idCol, n, threshold)(reps =>
+      directJaccard(shingleFlat(reps, "__text", "doc_id", n), threshold))
+  }
 
-    // one representative (min id) per distinct content, content keyed by
-    // sha2 so the exchange never carries full texts
+  /** The exact-content collapse the near-dup miners share: one
+    * representative (min id) per distinct text, the text keyed by sha2 so
+    * no exchange carries it. `reps` (h, doc_id, __text, grp_n) is
+    * persisted; `members` is every (doc_id, h).
+    */
+  private final case class Collapsed(reps: DataFrame, members: DataFrame) {
+    /** The content groups with more than one member. */
+    def dupGroups: DataFrame = reps.filter(col("grp_n") >= 2)
+
+    /** Pairs of representatives `(d1, d2, …)` joined out to every pair of
+      * their members `(m1, m2)`: `(d1, d2)` is the member pair as (least,
+      * greatest), then `payload`, read on the joined row.
+      */
+    def expand(repPairs: DataFrame, payload: Column*): DataFrame = {
+      val repIdx = reps.select(col("doc_id").as("rep"), col("h"))
+      repPairs
+        .join(repIdx.select(col("rep").as("d1"), col("h").as("h1")), "d1")
+        .join(repIdx.select(col("rep").as("d2"), col("h").as("h2")), "d2")
+        .join(members.select(col("doc_id").as("m1"), col("h").as("h1")), "h1")
+        .join(members.select(col("doc_id").as("m2"), col("h").as("h2")), "h2")
+        .select(Seq(least(col("m1"), col("m2")).as("d1"),
+          greatest(col("m1"), col("m2")).as("d2")) ++ payload: _*)
+    }
+
+    /** The member pairs `(h, m1, m2)`, m1 < m2, inside each of `groups`. */
+    def intra(groups: DataFrame): DataFrame = {
+      val dupMembers = members.join(groups.select("h"), "h")
+      dupMembers.select(col("h"), col("doc_id").as("m1"))
+        .join(dupMembers.select(col("h"), col("doc_id").as("m2")), Seq("h"))
+        .filter(col("m1") < col("m2"))
+    }
+  }
+
+  private def collapse(docs: DataFrame, textCol: String, idCol: String): Collapsed = {
     val keyed = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       sha2(col(textCol), 256).as("h"))
-    val reps = keyed
+    val reps = graft.Caches.persistOnce(keyed
       .groupBy("h")
       .agg(min(struct(col("doc_id"), col("__text"))).as("st"),
         count(lit(1)).as("grp_n"))
       .select(col("h"), col("st.doc_id").as("doc_id"),
-        col("st.__text").as("__text"), col("grp_n"))
-    val repsCached = graft.Caches.persistOnce(reps)
-    val members = keyed.select(col("doc_id"), col("h"))
+        col("st.__text").as("__text"), col("grp_n")))
+    Collapsed(reps, keyed.select(col("doc_id"), col("h")))
+  }
 
-    // quadratic mining over distinct texts only
-    val repPairs = directJaccard(
-      shingleFlat(repsCached, "__text", "doc_id", n), threshold)
-
-    // expand rep pairs to all member pairs (jaccard identical per pair)
-    val repIdx = repsCached.select(col("doc_id").as("rep"), col("h"))
-    val cross = repPairs
-      .join(repIdx.select(col("rep").as("d1"), col("h").as("h1")), "d1")
-      .join(repIdx.select(col("rep").as("d2"), col("h").as("h2")), "d2")
-      .join(members.select(col("doc_id").as("m1"), col("h").as("h1")), "h1")
-      .join(members.select(col("doc_id").as("m2"), col("h").as("h2")), "h2")
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"), col("jaccard"))
-
-    // identical texts: jaccard exactly 1.0, but only for docs that
-    // produce shingles at all — same word-count predicate [[shingles]]
-    // applies, so shingle-less docs never pair here either
-    val dupGroups = repsCached.filter(col("grp_n") >= 2)
-      .filter(size(split(lower(col("__text")), "\\s+")) >= n)
-      .select("h")
-    val dupMembers = members.join(dupGroups, "h")
-    val intra = dupMembers.select(col("h"), col("doc_id").as("m1"))
-      .join(dupMembers.select(col("h"), col("doc_id").as("m2")), Seq("h"))
-      .filter(col("m1") < col("m2"))
-      .select(col("m1").as("d1"), col("m2").as("d2"),
-        lit(1.0).as("jaccard"))
+  /** Jaccard pairs `(d1, d2, jaccard)` over the collapse of `docs`: `mine`
+    * finds them among the representatives, every member pair inherits its
+    * representatives' jaccard, and identical texts pair at exactly 1.0,
+    * but only for docs that produce shingles at all (the word-count
+    * predicate [[shingles]] applies), so shingle-less docs never pair.
+    */
+  private def collapsedJaccard(docs: DataFrame, textCol: String, idCol: String,
+                               n: Int, threshold: Double)
+                              (mine: DataFrame => DataFrame): DataFrame = {
+    val c = collapse(docs, textCol, idCol)
+    val cross = c.expand(mine(c.reps), col("jaccard"))
+    val intra = c.intra(c.dupGroups.filter(size(split(lower(col("__text")), "\\s+")) >= n))
+      .select(col("m1").as("d1"), col("m2").as("d2"), lit(1.0).as("jaccard"))
     if (threshold <= 1.0) cross.unionByName(intra) else cross
   }
 
   /** The direct all-pairs join over an exploded (doc_id, sz, s) shingle
-    * table — see the scaladoc above for why `flat` must be persisted.
+    * table — see [[ngramJaccard]]'s scaladoc for why `flat` must be persisted.
     * sz rides along the self-join and the (functionally dependent)
     * group keys, so set sizes never need separate join-backs.
     */
@@ -697,41 +720,21 @@ object Dedup {
     // with zero groups the keying/expansion is pure fixed overhead
     // (~0.6 s at sf0.1, PERF.md round 7) and the direct plan shares
     // its fingerprint cache with sibling queries.
-    val keyed = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-      sha2(col(textCol), 256).as("h"))
-    val reps = graft.Caches.persistOnce(keyed
-      .groupBy("h")
-      .agg(min(struct(col("doc_id"), col("__text"))).as("st"),
-        count(lit(1)).as("grp_n"))
-      .select(col("h"), col("st.doc_id").as("doc_id"),
-        col("st.__text").as("__text"), col("grp_n")))
-    val members = keyed.select(col("doc_id"), col("h"))
-    val repPairs = simhashCandidatesDirect(reps, "__text", "doc_id")
-    val repIdx = reps.select(col("doc_id").as("rep"), col("h"))
+    val c = collapse(docs, textCol, idCol)
     // orientation: after least/greatest the fingerprints must follow
     // their documents (m1 carries d1's group hash h1, so sh1 is m1's)
-    val cross = repPairs
-      .join(repIdx.select(col("rep").as("d1"), col("h").as("h1")), "d1")
-      .join(repIdx.select(col("rep").as("d2"), col("h").as("h2")), "d2")
-      .join(members.select(col("doc_id").as("m1"), col("h").as("h1")), "h1")
-      .join(members.select(col("doc_id").as("m2"), col("h").as("h2")), "h2")
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"),
-        when(col("m1") <= col("m2"), col("sh1")).otherwise(col("sh2")).as("sh1"),
-        when(col("m1") <= col("m2"), col("sh2")).otherwise(col("sh1")).as("sh2"),
-        col("hamming"))
+    val cross = c.expand(simhashCandidatesDirect(c.reps, "__text", "doc_id"),
+      when(col("m1") <= col("m2"), col("sh1")).otherwise(col("sh2")).as("sh1"),
+      when(col("m1") <= col("m2"), col("sh2")).otherwise(col("sh1")).as("sh2"),
+      col("hamming"))
     // persistOnce is a no-op here when simhashCandidatesDirect(reps, …)
     // above already persisted the canonically-identical simhash(reps)
     // frame — the intra-group expansion then reads that cache instead
     // of re-running the interpreted SimHash64 pass (round-7 ADVICE)
-    val repSh = graft.Caches.persistOnce(simhash(reps, "__text", "doc_id"))
-      .join(reps.select(col("doc_id"), col("h")), "doc_id")
+    val repSh = graft.Caches.persistOnce(simhash(c.reps, "__text", "doc_id"))
+      .join(c.reps.select(col("doc_id"), col("h")), "doc_id")
       .select(col("h"), col("simhash"))
-    val dupMembers = members
-      .join(reps.filter(col("grp_n") >= 2).select("h"), "h")
-    val intra = dupMembers.select(col("h"), col("doc_id").as("m1"))
-      .join(dupMembers.select(col("h"), col("doc_id").as("m2")), Seq("h"))
-      .filter(col("m1") < col("m2"))
+    val intra = c.intra(c.dupGroups)
       .join(repSh, "h")
       .select(col("m1").as("d1"), col("m2").as("d2"),
         col("simhash").as("sh1"), col("simhash").as("sh2"),
@@ -1108,35 +1111,10 @@ object Dedup {
     // shingle-less identical docs never pair, not even at "1.0").
     // This is also the x14/x44/x59 cluster-chain build, so the chain's
     // cost now tracks distinct-text count too.
-    val keyed = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-      sha2(col(textCol), 256).as("h"))
-    val reps = graft.Caches.persistOnce(keyed
-      .groupBy("h")
-      .agg(min(struct(col("doc_id"), col("__text"))).as("st"),
-        count(lit(1)).as("grp_n"))
-      .select(col("h"), col("st.doc_id").as("doc_id"),
-        col("st.__text").as("__text"), col("grp_n")))
-    val members = keyed.select(col("doc_id"), col("h"))
-    val repCand = minhashBandPairs(reps, "__text", "doc_id",
-      n, numHashes, bands, seed)
-    val repPairs = verifyJaccard(reps, repCand, "__text", "doc_id", n, threshold)
-    val repIdx = reps.select(col("doc_id").as("rep"), col("h"))
-    val cross = repPairs
-      .join(repIdx.select(col("rep").as("d1"), col("h").as("h1")), "d1")
-      .join(repIdx.select(col("rep").as("d2"), col("h").as("h2")), "d2")
-      .join(members.select(col("doc_id").as("m1"), col("h").as("h1")), "h1")
-      .join(members.select(col("doc_id").as("m2"), col("h").as("h2")), "h2")
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"), col("jaccard"))
-    val dupGroups = reps.filter(col("grp_n") >= 2)
-      .filter(size(split(lower(col("__text")), "\\s+")) >= n)
-      .select("h")
-    val dupMembers = members.join(dupGroups, "h")
-    val intra = dupMembers.select(col("h"), col("doc_id").as("m1"))
-      .join(dupMembers.select(col("h"), col("doc_id").as("m2")), Seq("h"))
-      .filter(col("m1") < col("m2"))
-      .select(col("m1").as("d1"), col("m2").as("d2"), lit(1.0).as("jaccard"))
-    if (threshold <= 1.0) cross.unionByName(intra) else cross
+    collapsedJaccard(docs, textCol, idCol, n, threshold) { reps =>
+      val repCand = minhashBandPairs(reps, "__text", "doc_id", n, numHashes, bands, seed)
+      verifyJaccard(reps, repCand, "__text", "doc_id", n, threshold)
+    }
   }
 
   /** Embedding near-dup pairs: all pairs with cosine >= threshold.
@@ -1236,32 +1214,12 @@ object Dedup {
     // definition. Shallow-dup inputs route to the direct path above
     // (collapseWorthwhile): zero groups means the keying/expansion is pure
     // fixed overhead (~0.7 s at sf0.1, PERF.md round 7).
-    val keyed = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-      sha2(col(textCol), 256).as("h"))
-    val reps = graft.Caches.persistOnce(keyed
-      .groupBy("h")
-      .agg(min(struct(col("doc_id"), col("__text"))).as("st"),
-        count(lit(1)).as("grp_n"))
-      .select(col("h"), col("st.doc_id").as("doc_id"),
-        col("st.__text").as("__text"), col("grp_n")))
-    val members = keyed.select(col("doc_id"), col("h"))
-    val repPairs = fuzzyPairsDirect(reps, "__text", "doc_id",
-      prefixLen, lenBand, maxDist)
-    val repIdx = reps.select(col("doc_id").as("rep"), col("h"))
-    val cross = repPairs
-      .join(repIdx.select(col("rep").as("d1"), col("h").as("h1")), "d1")
-      .join(repIdx.select(col("rep").as("d2"), col("h").as("h2")), "d2")
-      .join(members.select(col("doc_id").as("m1"), col("h").as("h1")), "h1")
-      .join(members.select(col("doc_id").as("m2"), col("h").as("h2")), "h2")
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"), col("edit_dist"))
-    val dupMembers = members
-      .join(reps.filter(col("grp_n") >= 2).select("h"), "h")
-    val intra = dupMembers.select(col("h"), col("doc_id").as("m1"))
-      .join(dupMembers.select(col("h"), col("doc_id").as("m2")), Seq("h"))
-      .filter(col("m1") < col("m2"))
-      .select(col("m1").as("d1"), col("m2").as("d2"),
-        lit(0).as("edit_dist"))
+    val c = collapse(docs, textCol, idCol)
+    val cross = c.expand(
+      fuzzyPairsDirect(c.reps, "__text", "doc_id", prefixLen, lenBand, maxDist),
+      col("edit_dist"))
+    val intra = c.intra(c.dupGroups)
+      .select(col("m1").as("d1"), col("m2").as("d2"), lit(0).as("edit_dist"))
     cross.unionByName(intra)
   }
 

@@ -132,15 +132,25 @@ object Multimodal {
                    everyN: Int = 4): Dataset[FrameSample] = {
     import records.sparkSession.implicits._
     records.flatMap { r =>
-      val n = math.max(1, r.payload.length / frameBytes)
-      (0 until n by everyN).map { i =>
-        val from = i * frameBytes
-        val until = math.min(r.payload.length, from + frameBytes)
+      frameWindows(r.payload, frameBytes, everyN).map { case (i, from, until) =>
         var sum = 0L
         var j = from
         while (j < until) { sum += (r.payload(j) & 0xff); j += 1 }
         FrameSample(r.doc_id, i, from, sum)
       }
+    }
+  }
+
+  /** The sampled frames of `payload`, as (frame index, from, until): every
+    * `everyN`-th `frameBytes` window, the last one cut at the payload's
+    * end, and at least the first window of a short payload.
+    */
+  private def frameWindows(payload: Array[Byte], frameBytes: Int,
+                           everyN: Int): Seq[(Int, Int, Int)] = {
+    val n = math.max(1, payload.length / frameBytes)
+    (0 until n by everyN).map { i =>
+      val from = i * frameBytes
+      (i, from, math.min(payload.length, from + frameBytes))
     }
   }
 
@@ -283,12 +293,8 @@ object Multimodal {
                  everyN: Int = 4): DataFrame = {
     import records.sparkSession.implicits._
     records.flatMap { r =>
-      val n = math.max(1, r.payload.length / frameBytes)
-      (0 until n by everyN).map { i =>
-        val from = i * frameBytes
-        val until = math.min(r.payload.length, from + frameBytes)
-        (r.doc_id, i,
-          dhashOfBytes(java.util.Arrays.copyOfRange(r.payload, from, until)))
+      frameWindows(r.payload, frameBytes, everyN).map { case (i, from, until) =>
+        (r.doc_id, i, dhashOfBytes(java.util.Arrays.copyOfRange(r.payload, from, until)))
       }
     }.toDF("doc_id", "frame_idx", "dhash")
   }

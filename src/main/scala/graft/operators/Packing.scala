@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Token-stream packing (concatenate-and-chunk): the standard prep
   * step that turns variable-length documents into fixed-capacity
@@ -73,8 +74,7 @@ object Packing {
     val base = docs.select(col(idCol).as("doc_id"),
         size(split(lower(col(textCol)), "\\s+")).cast("long").as("len"))
       .withColumn("shard_id",
-        (hash(col("doc_id")).cast("bigint")
-          .bitwiseAND(lit(4294967295L)) % nShards).cast("int"))
+        (GraftFunctions.unsignedHash(col("doc_id")) % nShards).cast("int"))
     base.repartition(col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("len").desc, col("doc_id"))
       .select(col("doc_id"), col("len"), col("shard_id"))

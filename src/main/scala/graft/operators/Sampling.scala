@@ -21,7 +21,7 @@ import graft.functions.GraftFunctions
 object Sampling {
   /** Unsigned-32 murmur3 bucket of `id` in [0, buckets). */
   def hashBucket(id: Column, buckets: Int = 100): Column =
-    hash(id).cast("bigint").bitwiseAND(lit(4294967295L)) % buckets
+    GraftFunctions.unsignedHash(id) % buckets
 
   /** Keep rows whose hash bucket falls below their stratum's rate:
     * per-stratum rates (e.g. oversample a rare language), `defaultPct`
@@ -92,9 +92,7 @@ object Sampling {
       .crossJoin(n)
       .select(col("vec_id"), col("label"), col("n"),
         explode(array((0 until k).map(lit(_)): _*)).as("i"))
-      .withColumn("neg_id",
-        hash(col("vec_id") * k + col("i")).cast("bigint")
-          .bitwiseAND(lit(4294967295L)) % col("n"))
+      .withColumn("neg_id", GraftFunctions.unsignedHash(col("vec_id") * k + col("i")) % col("n"))
       .filter(col("neg_id") =!= col("vec_id"))
     cand
       .join(items.select(col(idCol).as("neg_id"), col(labelCol).as("neg_label")),
@@ -140,7 +138,7 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(stratumCol)).orderBy(col("take_key"), id)
     df.withColumn("take_key",
-        hash(id).cast("bigint").bitwiseAND(lit(4294967295L)))
+        GraftFunctions.unsignedHash(id))
       .withColumn("take_rank", row_number().over(w))
       .filter(col("take_rank") <= n)
       .drop("take_key")
@@ -151,7 +149,7 @@ object Sampling {
     val w = Window.partitionBy(col("shard_id"))
       .orderBy(col("shuffle_key"), id)
     df.withColumn("shuffle_key",
-        hash(id).cast("bigint").bitwiseAND(lit(4294967295L)))
+        GraftFunctions.unsignedHash(id))
       .withColumn("shard_id", (col("shuffle_key") % nShards).cast("int"))
       .withColumn("shard_pos", (row_number().over(w) - 1).cast("long"))
   }
@@ -434,8 +432,7 @@ object Sampling {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
       .orderBy(col("hu"), col("doc_id"))
     toks.join(broadcast(allocDf), "source")
-      .withColumn("hu",
-        hash(col("doc_id")).cast("bigint").bitwiseAND(lit(4294967295L)))
+      .withColumn("hu", GraftFunctions.unsignedHash(col("doc_id")))
       .withColumn("cum", sum("toks").over(w))
       .withColumn("kept", (col("cum") <= col("alloc")).cast("int"))
       .groupBy("source")
@@ -468,8 +465,7 @@ object Sampling {
       .select(col("anchor"), col("positive"), col("cosine"),
         explode(array((0 until negsPerAnchor).map(lit(_)): _*)).as("j"))
       .withColumn("neg_id",
-        hash(col("anchor") * negsPerAnchor + col("j")).cast("bigint")
-          .bitwiseAND(lit(4294967295L)) % lit(n))
+        GraftFunctions.unsignedHash(col("anchor") * negsPerAnchor + col("j")) % lit(n))
       .filter(col("neg_id") =!= col("anchor") && col("neg_id") =!= col("positive"))
       .select("anchor", "positive", "cosine", "j", "neg_id")
   }

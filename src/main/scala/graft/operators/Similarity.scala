@@ -478,6 +478,55 @@ object Similarity {
       .select("query_id", "rank", "cand_id", "cosine")
   }
 
+  /** Deterministic sampled-codebook cell assignment — the clustering
+    * primitive [[ivfTopKSampled]] and [[semDedup]] share, exposed for
+    * composites that need (cell, id) labels without the ANN probe
+    * (x107's cluster topic terms): hash-min sample of `cells` vectors
+    * as centers (one broadcast row via [[cbArray]]), rounded-cosine
+    * argmax assignment scan-side, ties to the smaller cell id.
+    * 100 TB: no shuffle at all — the codebook broadcasts, assignment
+    * is a narrow map over the vector scan.
+    */
+  def sampledCellAssignments(candidates: DataFrame, vecCol: String,
+                             idCol: String, cells: Int = 16): DataFrame = {
+    requireCodebookSized(cells, "cells")
+    GraftFunctions.register(candidates.sparkSession)
+    val c = candidates.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
+    nearestCell(c, sampledCodebook(c, cells), "cvec")
+      .select(col("cell"), col("cand_id").as(idCol))
+  }
+
+  /** The `n` rows of `df` with the smallest (unsigned murmur3 hash of
+    * `id`, `id`): the deterministic pseudo-random sample every codebook
+    * here starts from, and that the DuckDB oracle replays.
+    */
+  private def hashMinSample(df: DataFrame, id: String, n: Int): DataFrame =
+    df.withColumn("hu", GraftFunctions.unsignedHash(col(id)))
+      .orderBy(col("hu"), col(id))
+      .limit(n)
+
+  /** The sampled codebook `(cell, centroid)` of the vectors `c`
+    * (`cand_id`, `cvec`): its `cells` hash-min vectors, each the center
+    * of the cell its id names.
+    */
+  private def sampledCodebook(c: DataFrame, cells: Int): DataFrame =
+    hashMinSample(c, "cand_id", cells)
+      .select(col("cand_id").as("cell"), col("cvec").as("centroid"))
+
+  /** `df` with `cell`: the codebook cell nearest to its vector `vec`,
+    * elected scan-side against the one broadcast codebook row.
+    */
+  private def nearestCell(df: DataFrame, codebook: DataFrame, vec: String): DataFrame =
+    df.crossJoin(cbArray(codebook))
+      .withColumn("cell", array_min(cellRanking(col(vec))).getField("cell"))
+
+  /** The queries `q` (`qv` their vector) with one `pc` row per probed
+    * cell: the `nProbe` codebook cells nearest to the query.
+    */
+  private def probeCells(q: DataFrame, codebook: DataFrame, nProbe: Int): DataFrame =
+    q.crossJoin(cbArray(codebook))
+      .withColumn("pc", explode(slice(array_sort(cellRanking(col("qv"))), 1, nProbe)))
+
   /** IVF with a deterministic sampled codebook: the `cells` candidate
     * vectors with the smallest (murmur3 hash of id, id) ARE the cell
     * centers — a uniform pseudo-random sample, no Lloyd iterations.
@@ -497,54 +546,28 @@ object Similarity {
     * rk=1-window form shuffled cells× exploded corpus rows); the probe
     * join touches nProbe/cells of the index.
     */
-  /** Deterministic sampled-codebook cell assignment — the clustering
-    * primitive [[ivfTopKSampled]] and [[semDedup]] share, exposed for
-    * composites that need (cell, id) labels without the ANN probe
-    * (x107's cluster topic terms): hash-min sample of `cells` vectors
-    * as centers (one broadcast row via [[cbArray]]), rounded-cosine
-    * argmax assignment scan-side, ties to the smaller cell id.
-    * 100 TB: no shuffle at all — the codebook broadcasts, assignment
-    * is a narrow map over the vector scan.
-    */
-  def sampledCellAssignments(candidates: DataFrame, vecCol: String,
-                             idCol: String, cells: Int = 16): DataFrame = {
-    requireCodebookSized(cells, "cells")
-    GraftFunctions.register(candidates.sparkSession)
-    val c = candidates.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
-    val codebook = c
-      .withColumn("hu",
-        hash(col("cand_id")).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col("cand_id"))
-      .limit(cells)
-      .select(col("cand_id").as("cell"), col("cvec").as("centroid"))
-    c.crossJoin(cbArray(codebook))
-      .withColumn("cell", array_min(cellRanking(col("cvec"))).getField("cell"))
-      .select(col("cell"), col("cand_id").as(idCol))
-  }
-
   def ivfTopKSampled(candidates: DataFrame, queries: DataFrame,
                      vecCol: String, idCol: String, k: Int,
                      cells: Int = 16, nProbe: Int = 4): DataFrame = {
     requireCodebookSized(cells, "cells")
     GraftFunctions.register(candidates.sparkSession)
     val c = candidates.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
-    val codebook = c
-      .withColumn("hu",
-        hash(col("cand_id")).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col("cand_id"))
-      .limit(cells)
-      .select(col("cand_id").as("cell"), col("cvec").as("centroid"))
-    val assigned = c.crossJoin(cbArray(codebook))
-      .withColumn("cell", array_min(cellRanking(col("cvec"))).getField("cell"))
-      .select("cell", "cand_id", "cvec")
+    val codebook = sampledCodebook(c, cells)
+    val assigned = nearestCell(c, codebook, "cvec").select("cell", "cand_id", "cvec")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = q.crossJoin(cbArray(codebook))
-      .withColumn("pc",
-        explode(slice(array_sort(cellRanking(col("qv"))), 1, nProbe)))
+    val probes = probeCells(q, codebook, nProbe)
       .select(col("query_id"), col("qv"), col("pc.cell").as("cell"))
+    probedTopK(probes.join(assigned, Seq("cell")), k)
+  }
+
+  /** Per query, the `k` probed candidates of `pairs` (`query_id`, `qv`,
+    * `cand_id`, `cvec`) nearest by rounded cosine, ties to the smaller
+    * candidate id: `(query_id, rank, cand_id, cosine)`.
+    */
+  private def probedTopK(pairs: DataFrame, k: Int): DataFrame = {
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("cand_id"))
-    probes.join(assigned, Seq("cell"))
+    pairs
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Exact.round6(GraftFunctions.cosineSim(col("qv"), col("cvec"))))
@@ -586,14 +609,7 @@ object Similarity {
     requireCodebookSized(cells, "cells")
     GraftFunctions.register(emb.sparkSession)
     val c = emb.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
-    val codebook = c
-      .withColumn("hu",
-        hash(col("cand_id")).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col("cand_id"))
-      .limit(cells)
-      .select(col("cand_id").as("cell"), col("cvec").as("centroid"))
-    val assigned = c.crossJoin(cbArray(codebook))
-      .withColumn("cell", array_min(cellRanking(col("cvec"))).getField("cell"))
+    val assigned = nearestCell(c, sampledCodebook(c, cells), "cvec")
       .select(col("cell"), col("cand_id"), col("cvec"))
     // shuffle_hash: both pair-join sides are the corpus-sized assignment
     // (a scan-side projection whose size the planner tracks, but the
@@ -757,11 +773,7 @@ object Similarity {
         transform(col(vecCol), x => x.cast("double")).as("v")))
     // round-0 codebook: hash-min sample, collected (k rows) into the
     // driver-state representation the loop carries between rounds
-    var cb: Seq[(Long, Seq[Double])] = c
-      .withColumn("hu",
-        hash(col("vec_id")).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col("vec_id"))
-      .limit(k)
+    var cb: Seq[(Long, Seq[Double])] = hashMinSample(c, "vec_id", k)
       .select(col("vec_id").as("cell"), col("v").as("centroid"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -821,27 +833,16 @@ object Similarity {
     val c = graft.Caches.persistOnce(
       candidates.select(col(idCol).as("vec_id"),
         transform(col(vecCol), x => x.cast("double")).as("v")))
-    val assigned = c.crossJoin(cbArray(cbDf))
-      .withColumn("cell", array_min(cellRanking(col("v"))).getField("cell"))
+    val assigned = nearestCell(c, cbDf, "v")
       .select(col("cell"), col("vec_id").as("cand_id"), col("v").as("cvec"))
     val q = queries.select(col(idCol).as("query_id"),
       transform(col(vecCol), x => x.cast("double")).as("qv"))
-    val probes = q.crossJoin(cbArray(cbDf))
-      .withColumn("pc",
-        explode(slice(array_sort(cellRanking(col("qv"))), 1, nProbe)))
+    val probes = probeCells(q, cbDf, nProbe)
       .select(col("query_id"), col("qv"), col("pc.cell").as("cell"))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
     // the probe list (|queries|·nProbe rows) is the build side: planned
     // over an unmaterialized cache of the corpus, `assigned` can look
     // smaller than it is and be broadcast instead
-    broadcast(probes).join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("cosine",
-        Exact.round6(GraftFunctions.cosineSim(col("qv"), col("cvec"))))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "cand_id", "cosine")
+    probedTopK(broadcast(probes).join(assigned, Seq("cell")), k)
   }
 
   /** Product quantization: split each vector into `m` contiguous
@@ -866,22 +867,11 @@ object Similarity {
   def productQuantize(emb: DataFrame, vecCol: String, idCol: String,
                       m: Int = 4, ks: Int = 8): DataFrame = {
     requireCodebookSized(m * ks, "m*ks")
-    val subIdx = explode(array((0 until m).map(lit(_)): _*))
-    val sub = emb
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .select(col("vec_id"), subIdx.as("sub"), col("v"))
-      .withColumn("w", (size(col("v")) / m).cast("int"))
-      .withColumn("sv", slice(col("v"), col("sub") * col("w") + 1, col("w")))
+    val sub = subvectors(
+      emb.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v")),
+      "vec_id", "v", m, "sv")
       .select("vec_id", "sub", "sv")
-    val cw = emb
-      .withColumn("hu", hash(col(idCol)).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col(idCol))
-      .limit(ks)
-      .select(col(idCol).as("code"), col(vecCol).cast("array<double>").as("cv"))
-      .select(col("code"), subIdx.as("sub"), col("cv"))
-      .withColumn("w", (size(col("cv")) / m).cast("int"))
-      .withColumn("csv", slice(col("cv"), col("sub") * col("w") + 1, col("w")))
-      .select("sub", "code", "csv")
+    val cw = pqCodewords(emb, vecCol, idCol, m, ks)
     // per-subspace codewords collapsed to ONE array row per sub (m
     // rows total): the nearest-codeword election is then a scan-side
     // per-row argmin — zero shuffle, where the former rk=1 window
@@ -895,6 +885,28 @@ object Similarity {
       .select(col("vec_id"), col("sub"),
         col("sel.code").as("code"), col("sel.d2r").as("qerr"))
   }
+
+  /** One row per (row of `df`, subspace): `key`, `sub`, and as `out` the
+    * `sub`-th of `m` contiguous slices of the double array `v`.
+    */
+  private def subvectors(df: DataFrame, key: String, v: String, m: Int,
+                         out: String): DataFrame =
+    df.select(col(key), explode(array((0 until m).map(lit(_)): _*)).as("sub"), col(v))
+      .withColumn("w", (size(col(v)) / m).cast("int"))
+      .withColumn(out, slice(col(v), col("sub") * col("w") + 1, col("w")))
+
+  /** The per-subspace PQ codewords `(sub, code, csv)`: the `ks` hash-min
+    * vectors of `emb`, each cut into `m` subvectors and named by its id.
+    * [[productQuantize]] encodes against them and [[ivfPqTopK]]'s lookup
+    * table scores against them.
+    */
+  private def pqCodewords(emb: DataFrame, vecCol: String, idCol: String,
+                          m: Int, ks: Int): DataFrame =
+    subvectors(
+      hashMinSample(emb, idCol, ks)
+        .select(col(idCol).as("code"), col(vecCol).cast("array<double>").as("cv")),
+      "code", "cv", m, "csv")
+      .select("sub", "code", "csv")
 
   /** Squared L2 distance of two equal-length double arrays, summed left
     * to right from 0.0 (the subvector-to-codeword distance of
@@ -937,48 +949,24 @@ object Similarity {
     requireCodebookSized(m * ks, "m*ks")
     GraftFunctions.register(candidates.sparkSession)
     val c = candidates.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
-    val codebook = c
-      .withColumn("hu",
-        hash(col("cand_id")).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col("cand_id"))
-      .limit(cells)
-      .select(col("cand_id").as("cell"), col("cvec").as("centroid"))
-    val assigned = c.crossJoin(cbArray(codebook))
-      .withColumn("cell", array_min(cellRanking(col("cvec"))).getField("cell"))
-      .select("cell", "cand_id")
+    val codebook = sampledCodebook(c, cells)
+    val assigned = nearestCell(c, codebook, "cvec").select("cell", "cand_id")
     val codes = productQuantize(candidates, vecCol, idCol, m, ks)
       .select(col("vec_id").as("cand_id"), col("sub"), col("code"))
 
-    // per-subspace codewords — the same hash-min sample productQuantize
-    // draws, rebuilt here for the query-side LUT
-    val subIdx = explode(array((0 until m).map(lit(_)): _*))
-    val cw = candidates
-      .withColumn("hu",
-        hash(col(idCol)).cast("bigint").bitwiseAND(lit(4294967295L)))
-      .orderBy(col("hu"), col(idCol))
-      .limit(ks)
-      .select(col(idCol).as("code"), col(vecCol).cast("array<double>").as("cv"))
-      .select(col("code"), subIdx.as("sub"), col("cv"))
-      .withColumn("w", (size(col("cv")) / m).cast("int"))
-      .withColumn("csv", slice(col("cv"), col("sub") * col("w") + 1, col("w")))
-      .select("sub", "code", "csv")
-
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = q.crossJoin(cbArray(codebook))
-      .withColumn("pc",
-        explode(slice(array_sort(cellRanking(col("qv"))), 1, nProbe)))
+    val probes = probeCells(q, codebook, nProbe)
       .select(col("query_id"), col("pc.cell").as("cell"))
 
-    // ADC lookup table: exact subvector-to-codeword L2² on the 2^-20 grid
+    // ADC lookup table: exact subvector-to-codeword L2² on the 2^-20 grid,
+    // against the codewords productQuantize encodes with
     val grid = 1048576 // 2^20
-    val qsub = q
-      .select(col("query_id"), col("qv").cast("array<double>").as("dv"))
-      .select(col("query_id"), subIdx.as("sub"), col("dv"))
-      .withColumn("w", (size(col("dv")) / m).cast("int"))
-      .withColumn("qsv", slice(col("dv"), col("sub") * col("w") + 1, col("w")))
+    val qsub = subvectors(
+      q.select(col("query_id"), col("qv").cast("array<double>").as("dv")),
+      "query_id", "dv", m, "qsv")
       .select("query_id", "sub", "qsv")
     val d2 = l2Sq(col("qsv"), col("csv"))
-    val lut = qsub.join(broadcast(cw), Seq("sub"))
+    val lut = qsub.join(broadcast(pqCodewords(candidates, vecCol, idCol, m, ks)), Seq("sub"))
       .withColumn("lutv", floor(d2 * grid + lit(0.5)) / grid)
       .select("query_id", "sub", "code", "lutv")
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Deterministic sketch operators.
   *
@@ -52,8 +53,7 @@ object Sketches {
     val agg = org.apache.spark.sql.functions.udaf(
       new graft.functions.TypedAggregators.KmvDistinctAgg(k),
       org.apache.spark.sql.Encoders.scalaLong)
-    agg(when(value.isNotNull,
-      hash(value).cast("bigint").bitwiseAND(lit(4294967295L)))
+    agg(when(value.isNotNull, GraftFunctions.unsignedHash(value))
       .otherwise(lit(-1L)))
   }
 
@@ -84,8 +84,7 @@ object Sketches {
                 k: Int = KmvK): DataFrame = {
     require(k >= 2, s"k=$k too small")
     val kc = keyCols.map(col)
-    val h = when(value.isNotNull,
-      hash(value).cast("bigint").bitwiseAND(lit(4294967295L)))
+    val h = when(value.isNotNull, GraftFunctions.unsignedHash(value))
       .otherwise(lit(-1L))
     val agg = udaf(new graft.functions.TypedAggregators.KmvSketchAgg(k),
       org.apache.spark.sql.Encoders.scalaLong)
@@ -208,7 +207,7 @@ object Sketches {
                      id: Column, k: Int = QsK): DataFrame = {
     require(k >= 2, s"k=$k too small")
     val kc = keyCols.map(col)
-    val hu = hash(id).cast("bigint").bitwiseAND(lit(4294967295L))
+    val hu = GraftFunctions.unsignedHash(id)
     val base = df
       .select(kc ++ Seq(hu.as("h"), id.cast("bigint").as("sid"),
         value.cast("bigint").as("v")): _*)
@@ -426,19 +425,37 @@ object Sketches {
   def hllDistinct(df: DataFrame, groupCols: Seq[String], value: Column,
                   outCol: String, p: Int = HllP): DataFrame = {
     require(p >= 4 && p <= 16, s"p=$p out of range")
-    val m = 1L << p
-    val rmax = 33 - p
-    val u = hash(value).cast("bigint").bitwiseAND(lit(4294967295L))
-    val w = u.bitwiseAND(lit((1L << (32 - p)) - 1))
-    val rank = when(w === 0, lit(rmax)).otherwise(lit(rmax) - length(bin(w)))
+    val (bucket, rank) = hllRegister(value, p)
     val gcols = groupCols.map(col)
-    df.select(gcols :+ shiftright(u, 32 - p).as("hll_bucket") :+ rank.as("hll_rank"): _*)
+    df.select(gcols :+ bucket.as("hll_bucket") :+ rank.as("hll_rank"): _*)
       .groupBy(gcols :+ col("hll_bucket"): _*)
       .agg(max(col("hll_rank")).as("mj"))
       .groupBy(gcols: _*)
-      .agg((sum(expr(s"shiftleft(CAST(1 AS BIGINT), $rmax - mj)"))
-        + (lit(m) - count(lit(1))) * lit(1L << rmax)).as("hll_s"))
+      .agg(hllSum(p).as("hll_s"))
       .withColumn(outCol, floor(lit(hllNumerator(p)) / col("hll_s")).cast("long"))
       .drop("hll_s")
+  }
+
+  /** The HLL register `value` updates, as (register index, rank): the
+    * top p bits of the unsigned 32-bit murmur3 hash, and the leading-zero
+    * count of the remaining 32-p bits + 1.
+    */
+  private[graft] def hllRegister(value: Column, p: Int): (Column, Column) = {
+    val rmax = 33 - p
+    val u = GraftFunctions.unsignedHash(value)
+    val w = u.bitwiseAND(lit((1L << (32 - p)) - 1))
+    (shiftright(u, 32 - p), when(w === 0, lit(rmax)).otherwise(lit(rmax) - length(bin(w))))
+  }
+
+  /** The number of empty registers of a group of `mj` register maxima. */
+  private[graft] def hllEmpty(p: Int): Column = lit(1L << p) - count(lit(1))
+
+  /** The HLL estimate's denominator over a group of `mj` register maxima,
+    * scaled by 2^(33-p) to stay integer: Σ 2^-mj over the registers, an
+    * empty register counting 2^0.
+    */
+  private[graft] def hllSum(p: Int): Column = {
+    val rmax = 33 - p
+    sum(expr(s"shiftleft(CAST(1 AS BIGINT), $rmax - mj)")) + hllEmpty(p) * lit(1L << rmax)
   }
 }

@@ -97,9 +97,16 @@ object TextAnalysis {
     * vocabulary is never globally sorted.
     */
   def bpePairCandidates(docs: DataFrame, textCol: String,
-                        k: Int = 50): DataFrame = {
-    val ws = tokens(col(textCol))
-    docs.select(ws.as("ws"))
+                        k: Int = 50): DataFrame =
+    adjacentPairCounts(docs.select(tokens(col(textCol)).as("ws")))
+      .orderBy(col("n_pairs").desc, col("w1"), col("w2"))
+      .limit(k)
+
+  /** Adjacent-pair counts `(w1, w2, n_pairs)` over the token arrays `ws`
+    * of `tokenized`: the count every BPE round runs.
+    */
+  private def adjacentPairCounts(tokenized: DataFrame): DataFrame =
+    tokenized
       .filter(size(col("ws")) >= 2)
       .select(explode(zip_with(
         slice(col("ws"), lit(1), size(col("ws")) - 1),
@@ -107,9 +114,6 @@ object TextAnalysis {
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select(col("p.w1"), col("p.w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("n_pairs"))
-      .orderBy(col("n_pairs").desc, col("w1"), col("w2"))
-      .limit(k)
-  }
 
   /** Iterated BPE merge induction over the whitespace token stream
     * (Sennrich et al. 2016, arXiv:1508.07909 — the loop whose single
@@ -166,14 +170,7 @@ object TextAnalysis {
       val arr = split(col("stream"), bb)
       // split boundaries leave a leading and trailing empty element;
       // the inner slice is the token list
-      stream.select(slice(arr, lit(2), size(arr) - 2).as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(explode(zip_with(
-          slice(col("ws"), lit(1), size(col("ws")) - 1),
-          slice(col("ws"), lit(2), size(col("ws")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-        .select(col("p.w1"), col("p.w2"))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("n_pairs"))
+      adjacentPairCounts(stream.select(slice(arr, lit(2), size(arr) - 2).as("ws")))
     }
     var cur = docs
       .select(concat(lit(bb), array_join(tokens(col(textCol)), bb), lit(bb))
@@ -1037,8 +1034,7 @@ object TextAnalysis {
       .select(col(idCol).as("doc_id"),
         explode(split(lower(col(textCol)), "\\s+")).as("t"))
       .filter(col("t") =!= "")
-      .withColumn("uh",
-        hash(col("t")).cast("bigint").bitwiseAND(lit(4294967295L)))
+      .withColumn("uh", GraftFunctions.unsignedHash(col("t")))
       .withColumn("bucket", (col("uh") % dim).cast("int"))
       .withColumn("sgn",
         when(shiftright(col("uh"), signBit).bitwiseAND(lit(1L)) === 0, lit(1L))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.GraftFunctions
 import graft.tables.{Tables => T, Exact}
 
 /** Core analytics surface: aggregation, joins (broadcast / semi / anti /
@@ -2313,9 +2314,7 @@ object Analytics {
       .agg(max(when(col("event_type") === "purchase" &&
           col("ts") <= col("first_ts") + expr("INTERVAL 1 DAY"), 1L)
         .otherwise(0L)).as("conv"))
-      .withColumn("arm",
-        hash(col("user_id")).cast("bigint")
-          .bitwiseAND(lit(4294967295L)).bitwiseAND(lit(1L)))
+      .withColumn("arm", GraftFunctions.unsignedHash(col("user_id")).bitwiseAND(lit(1L)))
     val g = users.groupBy("arm")
       .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
     val one = g.agg(

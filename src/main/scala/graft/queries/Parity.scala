@@ -101,20 +101,10 @@ object Parity {
     // E5/E6/E7/E8 — conditional unit standardization + rounded division +
     // constant column + product-of-rounded total
     // (/root/reference/data_process.py:197-210,259-262).
-    "p09_unit_standardize" -> ((s, dir) => {
-      val qtyStd = when(upper(col("l_linestatus")) === "F", col("l_quantity") * 20)
-        .otherwise(col("l_quantity"))
-      T.lineitem(s, dir)
-        .withColumn("qty_std", qtyStd)
-        .withColumn("price_std",
-          when(upper(col("l_linestatus")) === "F",
-            Exact.round2(col("l_extendedprice") / col("qty_std")))
-          .otherwise(col("l_extendedprice")))
-        .withColumn("unit_std", lit("ST"))
-        .withColumn("total_std", col("qty_std") * col("price_std"))
+    "p09_unit_standardize" -> ((s, dir) =>
+      unitStandardize(T.lineitem(s, dir))
         .select("l_orderkey", "l_linenumber", "qty_std", "price_std", "unit_std", "total_std")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
+        .orderBy("l_orderkey", "l_linenumber")),
 
     // E10/E11 — null handling: inject nulls with nullif, fill with coalesce
     // (na.fill analog, /root/reference/data_process.py:163-180)
@@ -172,6 +162,20 @@ object Parity {
     "p15_pipeline_composite" -> ((s, dir) => pipelineComposite(s, dir))
   )
 
+  /** The unit standardization of lineitem rows (E5–E8): the quantity of an
+    * `F` line scaled by 20 and its price re-derived per unit with 2-decimal
+    * rounding, a constant unit, and the total from the rounded price.
+    */
+  private def unitStandardize(df: DataFrame): DataFrame = {
+    val isF = upper(col("l_linestatus")) === "F"
+    df.withColumn("qty_std", when(isF, col("l_quantity") * 20).otherwise(col("l_quantity")))
+      .withColumn("price_std",
+        when(isF, Exact.round2(col("l_extendedprice") / col("qty_std")))
+          .otherwise(col("l_extendedprice")))
+      .withColumn("unit_std", lit("ST"))
+      .withColumn("total_std", col("qty_std") * col("price_std"))
+  }
+
   /** The flagship composite; mirrors transform_data's shape end-to-end. */
   def pipelineComposite(s: SparkSession, dir: String): DataFrame = {
     val deduped = T.lineitem(s, dir).dropDuplicates()
@@ -185,14 +189,7 @@ object Parity {
       .unionByName(dated.filter(upper(col("l_returnflag")).isin(cond2: _*)))
     unioned
       .withColumn("is_returned", when(upper(col("l_returnflag")).isin(cond1: _*), lit(1)).otherwise(lit(0)))
-      .withColumn("qty_std",
-        when(upper(col("l_linestatus")) === "F", col("l_quantity") * 20).otherwise(col("l_quantity")))
-      .withColumn("price_std",
-        when(upper(col("l_linestatus")) === "F",
-          Exact.round2(col("l_extendedprice") / col("qty_std")))
-        .otherwise(col("l_extendedprice")))
-      .withColumn("unit_std", lit("ST"))
-      .withColumn("total_std", col("qty_std") * col("price_std"))
+      .transform(unitStandardize)
       .select(
         col("ship_date"),
         col("l_orderkey").as("okey"),

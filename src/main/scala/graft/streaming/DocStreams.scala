@@ -236,8 +236,7 @@ object DocStreams {
     import org.apache.spark.sql.streaming.TimeMode
     EventStreams.twsReady(spark)
     docs.select(col(sourceCol).cast("string").as("source"),
-        hash(col(idCol)).cast("bigint")
-          .bitwiseAND(lit(4294967295L)).as("h"),
+        GraftFunctions.unsignedHash(col(idCol)).as("h"),
         col(idCol).cast("long").as("sid"),
         size(split(lower(col(textCol)), "\\s+")).cast("long").as("len"))
       // null text ⇒ null len, which the primitive-Long tuple encoder

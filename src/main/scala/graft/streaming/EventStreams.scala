@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.GraftFunctions
 
 /** Event-stream transformations, written against DataFrame so the same
   * logic runs in batch (driver test table `events`) and in Structured
@@ -121,9 +122,9 @@ object EventStreams {
 
   /** Interval join: for each left event, the right-side events of the
     * same user that occur AFTER it but within `within`. Batch: a plain
-    * range-condition join. Streaming ([[intervalJoinStream]]): the
-    * canonical stream-stream join — both sides watermarked, and the
-    * time-bound join condition is what lets Spark evict buffered state
+    * range-condition join. Streaming, on two watermarked inputs: the
+    * canonical stream-stream join — the watermarks and the time-bound
+    * join condition are what let Spark evict buffered state
     * (without it, stream-stream inner join state grows forever).
     *
     * Inputs need (user_id, event_id, ts). The join shuffles both sides
@@ -131,22 +132,13 @@ object EventStreams {
     * group, so no range-join blowup across users.
     */
   def intervalJoin(left: DataFrame, right: DataFrame,
-                   within: String = "30 minutes"): DataFrame = {
-    val a = left.select(col("user_id"), col("event_id").as("src_id"), col("ts").as("src_ts"))
-    val b = right.select(col("user_id").as("r_user_id"),
-      col("event_id").as("dst_id"), col("ts").as("dst_ts"))
-    a.join(b,
-        col("user_id") === col("r_user_id") &&
-          col("dst_ts") > col("src_ts") &&
-          col("dst_ts") <= col("src_ts") + expr(s"INTERVAL $within"))
-      .select(col("user_id"), col("src_id"), col("dst_id"),
-        (col("dst_ts").cast("long") - col("src_ts").cast("long")).as("lag_seconds"))
-  }
+                   within: String = "30 minutes"): DataFrame =
+    intervalJoinOf(left, right, within, "inner")
 
   /** LEFT OUTER interval join: [[intervalJoin]] plus the unmatched left
     * rows (dst columns null) — "which clicks converted, and which
     * didn't" in one result. Batch: a plain left join with the range
-    * condition. Streaming ([[intervalJoinOuterStream]]): the watermarked
+    * condition. Streaming, on two watermarked inputs: the watermarked
     * outer stream-stream join — Spark buffers each left row until the
     * watermark proves no matching right row can still arrive, THEN emits
     * the null-padded row; the time-bound condition is what makes that
@@ -158,7 +150,12 @@ object EventStreams {
     * only, the time bound evaluates within the key group.
     */
   def intervalJoinOuter(left: DataFrame, right: DataFrame,
-                        within: String = "30 minutes"): DataFrame = {
+                        within: String = "30 minutes"): DataFrame =
+    intervalJoinOf(left, right, within, "left_outer")
+
+  /** The interval join of [[intervalJoin]] and [[intervalJoinOuter]]. */
+  private def intervalJoinOf(left: DataFrame, right: DataFrame, within: String,
+                             joinType: String): DataFrame = {
     val a = left.select(col("user_id"), col("event_id").as("src_id"), col("ts").as("src_ts"))
     val b = right.select(col("user_id").as("r_user_id"),
       col("event_id").as("dst_id"), col("ts").as("dst_ts"))
@@ -166,42 +163,10 @@ object EventStreams {
         col("user_id") === col("r_user_id") &&
           col("dst_ts") > col("src_ts") &&
           col("dst_ts") <= col("src_ts") + expr(s"INTERVAL $within"),
-        "left_outer")
+        joinType)
       .select(col("user_id"), col("src_id"), col("dst_id"),
         (col("dst_ts").cast("long") - col("src_ts").cast("long")).as("lag_seconds"))
   }
-
-  /** [[intervalJoinOuter]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def intervalJoinOuterStream(left: DataFrame, right: DataFrame,
-                              within: String = "30 minutes",
-                              watermark: String = "1 hour"): DataFrame =
-    intervalJoinOuter(left.withWatermark("ts", watermark),
-      right.withWatermark("ts", watermark), within)
-
-  /** [[tumblingCounts]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def tumblingCountsStream(events: DataFrame, width: String = "1 hour",
-                           watermark: String = "2 hours"): DataFrame =
-    tumblingCounts(events.withWatermark("ts", watermark), width)
-
-  /** [[sessionize]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def sessionizeStream(events: DataFrame, gap: String = "10 minutes",
-                       watermark: String = "30 minutes"): DataFrame =
-    sessionize(events.withWatermark("ts", watermark), gap)
-
-  /** [[intervalJoin]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def intervalJoinStream(left: DataFrame, right: DataFrame,
-                         within: String = "30 minutes",
-                         watermark: String = "1 hour"): DataFrame =
-    intervalJoin(left.withWatermark("ts", watermark),
-      right.withWatermark("ts", watermark), within)
 
   /** Stream-static enrichment: each event joined to its customer row
     * (dimension table) and aggregated per (window, market segment,
@@ -223,14 +188,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("c_mktsegment"),
         col("event_type"), col("n"))
-
-  /** [[enrichedSegmentCounts]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def enrichedSegmentCountsStream(events: DataFrame, customer: DataFrame,
-                                  width: String = "1 hour",
-                                  watermark: String = "2 hours"): DataFrame =
-    enrichedSegmentCounts(events.withWatermark("ts", watermark), customer, width)
 
   /** Streaming first-occurrence dedup per (user, event type): watermarked
     * dropDuplicates keeps the FIRST ARRIVAL and expires key state past
@@ -266,14 +223,6 @@ object EventStreams {
       .select(col("w.start").as("w_start"), col("event_type"),
         col("bucket"), col("c"))
 
-  /** [[windowValueSketch]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def windowValueSketchStream(events: DataFrame, width: String = "1 hour",
-                              grid: Double = 5.0,
-                              watermark: String = "2 hours"): DataFrame =
-    windowValueSketch(events.withWatermark("ts", watermark), width, grid)
-
   /** HLL register sketch per (window, event_type) — the stream half of
     * streaming distinct-count (the a23 HLL made streaming, split the
     * st07 way): registers are (bucket → max rank), and max is
@@ -285,12 +234,9 @@ object EventStreams {
     */
   def windowDistinctSketch(events: DataFrame, width: String = "1 hour",
                            p: Int = graft.operators.Sketches.HllP): DataFrame = {
-    val rmax = 33 - p
-    val u = hash(col("user_id")).cast("bigint").bitwiseAND(lit(4294967295L))
-    val w = u.bitwiseAND(lit((1L << (32 - p)) - 1))
-    val rank = when(w === 0, lit(rmax)).otherwise(lit(rmax) - length(bin(w)))
+    val (bucket, rank) = graft.operators.Sketches.hllRegister(col("user_id"), p)
     events
-      .withColumn("hll_bucket", shiftright(u, 32 - p))
+      .withColumn("hll_bucket", bucket)
       .withColumn("hll_rank", rank)
       .groupBy(window(col("ts"), width).as("win"), col("event_type"),
         col("hll_bucket"))
@@ -298,14 +244,6 @@ object EventStreams {
       .select(col("win.start").as("w_start"), col("event_type"),
         col("hll_bucket"), col("mj"))
   }
-
-  /** [[windowDistinctSketch]] over a watermarked stream. Streaming floor: no query
-    * calls it; EventStreamsSpec runs it on a MemoryStream and holds the
-    * result equal to the batch form. */
-  def windowDistinctSketchStream(events: DataFrame, width: String = "1 hour",
-                                 p: Int = graft.operators.Sketches.HllP,
-                                 watermark: String = "2 hours"): DataFrame =
-    windowDistinctSketch(events.withWatermark("ts", watermark), width, p)
 
   /** Integer linear-counting table for the HLL small-range correction:
     * entry V (1-based index V) is floor(m · ln(m / V)), precomputed
@@ -332,12 +270,10 @@ object EventStreams {
   def distinctFromSketch(sketch: DataFrame,
                          p: Int = graft.operators.Sketches.HllP): DataFrame = {
     val m = 1L << p
-    val rmax = 33 - p
     val lcArr = array(hllLinearCountTable(p).map(lit): _*)
     sketch.groupBy("w_start", "event_type")
-      .agg((sum(expr(s"shiftleft(CAST(1 AS BIGINT), $rmax - mj)"))
-        + (lit(m) - count(lit(1))) * lit(1L << rmax)).as("hll_s"),
-        (lit(m) - count(lit(1))).as("hll_v"))
+      .agg(graft.operators.Sketches.hllSum(p).as("hll_s"),
+        graft.operators.Sketches.hllEmpty(p).as("hll_v"))
       .withColumn("hll_raw",
         floor(lit(graft.operators.Sketches.hllNumerator(p)) / col("hll_s"))
           .cast("long"))
@@ -701,8 +637,7 @@ object EventStreams {
     require(k >= 2, s"k=$k too small")
     import events.sparkSession.implicits._
     events.select(col("event_type"),
-        hash(col("user_id")).cast("bigint")
-          .bitwiseAND(lit(4294967295L)).as("hu"))
+        GraftFunctions.unsignedHash(col("user_id")).as("hu"))
       .as[(String, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[KmvState, KmvEstimate](

@@ -17,10 +17,7 @@ class SurfaceBudgetSpec extends AnyFunSuite {
     // test oracles
     "shingleArrayZipWith", "bandedJaccard", "embeddingCosinePairs", "l2Normalize",
     // the streaming-equals-batch floor
-    "intervalJoinOuterStream", "tumblingCountsStream", "sessionizeStream",
-    "intervalJoinStream", "enrichedSegmentCountsStream", "firstEventsStream",
-    "windowValueSketchStream", "windowDistinctSketchStream",
-    "exactlyOnceParquet", "readIncrementalView", "gcIncremental",
+    "firstEventsStream", "exactlyOnceParquet", "readIncrementalView", "gcIncremental",
     // the release API
     "clearAll", "invalidate")
 

@@ -2,6 +2,7 @@ package graft.etl
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import graft.SparkTestBase
@@ -103,14 +104,25 @@ class TransformsSpec extends SparkTestBase {
     assert(out.columns.toSeq === Seq("b", "a2"))
   }
 
+  /** The not-null gate's results for `columns` on `df`, the frame before
+    * the rename-and-order projection, counted on the write of that
+    * projection.
+    */
+  private def gate(df: DataFrame, columns: Seq[String], renames: Map[String, String],
+                   order: Seq[String]) = {
+    val (observed, results) = DataQuality.NotNull.observe(df, columns, renames)
+    Transforms.renameAndOrder(observed, renames, order)
+      .write.format("noop").mode("overwrite").save()
+    results()
+  }
+
   test("V3 quirk: not-null check on a pre-rename column resolves post-rename") {
     val df = Seq((1.0, "m")).toDF("precio", "material")
-    val renamed = Transforms.renameAndOrder(df,
-      Map("precio" -> "precio_origen"), Seq("precio_origen", "material"))
-    // 'precio' is not in renamed's schema, yet the check must pass via
-    // ResolveMissingReferences — parity with the reference DQ behavior.
-    val res = DataQuality.NotNull("precio").run(renamed)
-    assert(res.passed)
+    // 'precio' is not in the output's schema, yet the check must pass, as
+    // the reference's does via ResolveMissingReferences
+    val res = gate(df, Seq("precio"), Map("precio" -> "precio_origen"),
+      Seq("precio_origen", "material"))
+    assert(res.map(r => (r.check, r.passed)) === Seq(("not_null(precio)", true)))
   }
 
   /** `rows` as a parquet-backed frame: its columns are nullable and its
@@ -122,38 +134,30 @@ class TransformsSpec extends SparkTestBase {
     spark.read.parquet(dir)
   }
 
-  test("NotNull.runAll passes every column from one count when there are no nulls") {
-    val df = parquet((1.0, "m"), (2.0, "n"))
-    val (res, jobs) = EtlProbes.jobs(spark)(DataQuality.NotNull.runAll(df, Seq("precio", "material")))
-    assert(jobs > 0)
-    assert(jobs === EtlProbes.jobs(spark)(DataQuality.NotNull("precio").run(df))._2)
-    assert(res === Seq("precio", "material").map(DataQuality.NotNull(_).run(df)))
-    assert(res.map(_.detail) === Seq(
-      "La columna 'precio' no contiene valores nulos.",
-      "La columna 'material' no contiene valores nulos."))
-    assert(res.forall(r => r.passed && r.measured.contains(0L)))
-    assert(DataQuality.NotNull.runAll(df, Nil).isEmpty)
-  }
-
-  test("NotNull.runAll runs no job when every gated column is non-nullable") {
+  test("NotNull.observe adds no metric and runs no job when every gated column is non-nullable") {
     // filled columns are non-nullable, so `isnull` is false on every row,
     // as on the ETL's gated columns
     val df = Transforms.fillNulls(parquet((1.0, "m"), (2.0, null)),
       FillConf("NOT INFO", Seq("material"), 0.0, Seq("precio")))
-    val (res, jobs) = EtlProbes.jobs(spark)(DataQuality.NotNull.runAll(df, Seq("precio", "material")))
+    val ((observed, res), jobs) = EtlProbes.jobs(spark) {
+      val (o, results) = DataQuality.NotNull.observe(df, Seq("precio", "material"), Map.empty)
+      (o, results())
+    }
     assert(jobs === 0)
-    assert(res === Seq("precio", "material").map(DataQuality.NotNull(_).run(df)))
+    assert(observed eq df)
     assert(res.map(_.detail) === Seq(
       "La columna 'precio' no contiene valores nulos.",
       "La columna 'material' no contiene valores nulos."))
     assert(res.forall(r => r.passed && r.measured.contains(0L)))
+    assert(DataQuality.NotNull.observe(df, Nil, Map.empty)._2().isEmpty)
   }
 
-  test("NotNull.runAll keeps the exact per-column counts when a column has nulls") {
-    val df = Seq[(Option[Double], String, String)](
-      (None, "m", "a"), (None, null, "b"), (Some(1.0), null, "c"), (Some(2.0), null, "d"))
-      .toDF("precio", "material", "ruta")
-    val res = DataQuality.NotNull.runAll(df, Seq("precio", "material", "ruta"))
+  private val withNulls = Seq[(Option[Double], String, String)](
+    (None, "m", "a"), (None, null, "b"), (Some(1.0), null, "c"), (Some(2.0), null, "d"))
+
+  test("NotNull.observe keeps the exact per-column counts when a column has nulls") {
+    val df = withNulls.toDF("precio", "material", "ruta")
+    val res = gate(df, Seq("precio", "material", "ruta"), Map.empty, df.columns.toSeq)
     assert(res === Seq(
       DataQuality.CheckResult("not_null(precio)", false,
         "La columna 'precio' contiene 2 valores nulos.", Some(2L)),
@@ -163,32 +167,32 @@ class TransformsSpec extends SparkTestBase {
         "La columna 'ruta' no contiene valores nulos.", Some(0L))))
   }
 
-  test("NotNull.runAll resolves a pre-rename column post-rename (V3 quirk)") {
-    def renamed(rows: (Option[Double], String)*) = Transforms.renameAndOrder(
-      rows.toDF("precio", "material"),
-      Map("precio" -> "precio_origen"), Seq("precio_origen", "material"))
-    val ok = DataQuality.NotNull.runAll(renamed((Some(1.0), "m")), Seq("precio", "material"))
-    assert(ok.forall(_.passed))
-    val bad = DataQuality.NotNull.runAll(
-      renamed((None, "m"), (Some(1.0), "n")), Seq("precio", "material"))
-    assert(bad.map(r => (r.passed, r.measured)) === Seq((false, Some(1L)), (true, Some(0L))))
+  test("NotNull.observe counts a pre-rename column before the rename (V3 quirk)") {
+    def res(rows: (Option[Double], String)*) = gate(rows.toDF("precio", "material"),
+      Seq("precio", "material"), Map("precio" -> "precio_origen"), Seq("precio_origen", "material"))
+    assert(res((Some(1.0), "m")).forall(_.passed))
+    assert(res((None, "m"), (Some(1.0), "n")).map(r => (r.passed, r.measured)) ===
+      Seq((false, Some(1L)), (true, Some(0L))))
   }
 
-  test("NotNull.observe counts on the action that runs its frame, the quirk's names after it") {
-    val df = Seq[(Option[Double], String, String)](
-      (None, "m", "a"), (None, null, "b"), (Some(1.0), null, "c"), (Some(2.0), null, "d"))
-      .toDF("precio", "material", "ruta")
+  test("NotNull.observe counts on the action that runs its frame, a renamed, a carried " +
+       "and a dropped name alike") {
+    val df = withNulls.toDF("precio", "material", "ruta")
     val renames = Map("precio" -> "precio_origen")
-    // `precio` resolves through `renames`; `ruta`, dropped by the order,
-    // only through the quirk
-    val out = Transforms.renameAndOrder(df, renames, Seq("precio_origen", "material"))
+    // `precio_origen` is the output's name for `precio`, `material` is
+    // carried, and `ruta`, dropped by the order, resolves only as the
+    // reference's quirk resolves it
     val (observed, results) =
-      DataQuality.NotNull.observe(out, Seq("precio", "material", "ruta"), renames)
-    observed.write.format("noop").mode("overwrite").save()
-    assert(results() === DataQuality.NotNull.runAll(out, Seq("precio", "material", "ruta"), renames))
-    assert(results().map(_.measured) === Seq(Some(2L), Some(3L), Some(0L)))
-    val filled = Transforms.fillNulls(df, FillConf("NOT INFO", Seq("material"), 0.0, Seq("precio")))
-    assert(DataQuality.NotNull.observe(filled, Seq("precio", "material"), Map.empty)._1 eq filled)
+      DataQuality.NotNull.observe(df, Seq("precio_origen", "material", "ruta"), renames)
+    val out = Transforms.renameAndOrder(observed, renames, Seq("precio_origen", "material"))
+    out.write.format("noop").mode("overwrite").save()
+    val (res, jobs) = EtlProbes.jobs(spark)(results())
+    assert(jobs === 0)
+    assert(res.map(r => (r.check, r.measured)) === Seq(
+      ("not_null(precio_origen)", Some(2L)), ("not_null(material)", Some(3L)),
+      ("not_null(ruta)", Some(0L))))
+    assert(res.map(_.measured.get) === Seq("precio", "material", "ruta")
+      .map(c => df.filter(col(c).isNull).count()))
   }
 
   test("lineage basename equals the [^/]+$ regex on edge-case URIs") {

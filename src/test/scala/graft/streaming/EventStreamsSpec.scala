@@ -50,7 +50,7 @@ class EventStreamsSpec extends SparkTestBase {
       .schema(events.toDF().schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.toString)
-    val q = EventStreams.tumblingCountsStream(stream, "1 hour", "2 hours")
+    val q = EventStreams.tumblingCounts(stream.withWatermark("ts", "2 hours"), "1 hour")
       .writeStream.format("memory").queryName("file_stream_out")
       .outputMode(OutputMode.Complete())
       .start()
@@ -86,7 +86,7 @@ class EventStreamsSpec extends SparkTestBase {
   }
 
   test("streaming tumbling counts equal the batch transform") {
-    val streamed = runStream(EventStreams.tumblingCountsStream(_, "1 hour", "2 hours"),
+    val streamed = runStream(df => EventStreams.tumblingCounts(df.withWatermark("ts", "2 hours"), "1 hour"),
       "tumbling_out")
     val batch = EventStreams.tumblingCounts(events.toDF(), "1 hour")
     assert(streamed.orderBy("w_start", "event_type").collect().toSeq ===
@@ -97,7 +97,7 @@ class EventStreamsSpec extends SparkTestBase {
     // the stream maintains the bounded grid; quantiles come from a batch
     // pass over the streamed sketch — the intended split of work
     val streamedSketch = runStream(
-      EventStreams.windowValueSketchStream(_, "1 hour", grid = 2.0, watermark = "2 hours"),
+      df => EventStreams.windowValueSketch(df.withWatermark("ts", "2 hours"), "1 hour", grid = 2.0),
       "sketch_out")
     val fromStream = EventStreams.quantilesFromSketch(streamedSketch)
       .orderBy("w_start", "event_type").collect().toSeq
@@ -113,7 +113,7 @@ class EventStreamsSpec extends SparkTestBase {
   test("watermark drops late data beyond the bound") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Ev]
-    val q = EventStreams.tumblingCountsStream(input.toDF(), "1 hour", "30 minutes")
+    val q = EventStreams.tumblingCounts(input.toDF().withWatermark("ts", "30 minutes"), "1 hour")
       .writeStream.format("memory").queryName("late_out")
       .outputMode(OutputMode.Update())
       .start()
@@ -213,7 +213,7 @@ class EventStreamsSpec extends SparkTestBase {
   }
 
   test("streaming session windows equal the batch transform") {
-    val streamed = runStream(EventStreams.sessionizeStream(_, "10 minutes", "1 hour"),
+    val streamed = runStream(df => EventStreams.sessionize(df.withWatermark("ts", "1 hour"), "10 minutes"),
       "session_out")
     val batch = EventStreams.sessionize(events.toDF(), "10 minutes")
     assert(streamed.orderBy("user_id", "s_start").collect().toSeq ===
@@ -261,8 +261,8 @@ class EventStreamsSpec extends SparkTestBase {
     buys.addData(buyEvents)
     // stream-stream inner joins emit in Append mode only; the watermarks
     // plus the time-bound condition are what let Spark evict join state
-    val q = EventStreams.intervalJoinStream(clicks.toDF(), buys.toDF(),
-        within = "30 minutes", watermark = "1 hour")
+    val q = EventStreams.intervalJoin(clicks.toDF().withWatermark("ts", "1 hour"),
+        buys.toDF().withWatermark("ts", "1 hour"), within = "30 minutes")
       .writeStream.format("memory").queryName("ssjoin_out")
       .outputMode(OutputMode.Append())
       .start()
@@ -288,8 +288,8 @@ class EventStreamsSpec extends SparkTestBase {
       EvJ(12L, t("2024-01-01 02:00:00"), 2L, "purchase"))  // outside 30m
     clicks.addData(clickEvents)
     buys.addData(buyEvents)
-    val q = EventStreams.intervalJoinOuterStream(clicks.toDF(), buys.toDF(),
-        within = "30 minutes", watermark = "1 hour")
+    val q = EventStreams.intervalJoinOuter(clicks.toDF().withWatermark("ts", "1 hour"),
+        buys.toDF().withWatermark("ts", "1 hour"), within = "30 minutes")
       .writeStream.format("memory").queryName("ssoj_out")
       .outputMode(OutputMode.Append())
       .start()
@@ -386,7 +386,7 @@ class EventStreamsSpec extends SparkTestBase {
   test("streaming HLL sketch + batch estimation equal the batch " +
        "distinct-count; register state is bounded by 2^p") {
     val streamedSketch = runStream(
-      EventStreams.windowDistinctSketchStream(_, "1 hour", watermark = "2 hours"),
+      df => EventStreams.windowDistinctSketch(df.withWatermark("ts", "2 hours"), "1 hour"),
       "hll_sketch_out")
     val fromStream = EventStreams.distinctFromSketch(streamedSketch)
       .orderBy("w_start", "event_type").collect().toSeq
@@ -498,7 +498,7 @@ class EventStreamsSpec extends SparkTestBase {
     val customer = Seq((1L, "BUILDING"), (2L, "MACHINERY"), (3L, "AUTOMOBILE"))
       .toDF("c_custkey", "c_mktsegment")
     val streamed = runStream(
-      df => EventStreams.enrichedSegmentCountsStream(df, customer, "1 hour"),
+      df => EventStreams.enrichedSegmentCounts(df.withWatermark("ts", "2 hours"), customer, "1 hour"),
       "st11_out")
     val batch = EventStreams.enrichedSegmentCounts(events.toDF(), customer, "1 hour")
     assert(streamed.orderBy("w_start", "c_mktsegment", "event_type").collect().toSeq ===
